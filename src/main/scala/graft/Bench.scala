@@ -4,114 +4,55 @@ import graft.pipeline.SnapshotTable
 import graft.synth.CorpusGen
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main. Two phases:
+/** Benchmark main: the one measurement entry point outside `perfbench/`.
   *
-  *  1. Scaling (the north_rule criterion): the extraction pipeline on one
-  *     fixed synthetic corpus at local[[[ScaleN]]] and local[[[Scale4N]]]
-  *     = (4, 16) — N vs 4N cores with every executor thread on a
-  *     DEDICATED PHYSICAL CORE at both levels, the faithful sandbox
-  *     proxy for N vs 4N executor clusters (the old (8, 32) pair
-  *     crossed the host's SMT boundary — see [[ScaleN]]) — reporting
-  *     docs/sec, spans/sec and efficiency = T_N / (4 * T_4N). Each
-  *     level runs in its own CPU-pinned JVM (taskset +
-  *     ActiveProcessorCount). Alongside: the pure-kernel scaling
-  *     (engine-only), a memory-bandwidth probe at both levels, and a
-  *     record-only FULL-BOX block measured first (the local[32]
-  *     headline throughput plus the 16→32 SMT-crossing ratios, so the
-  *     confound the (4,16) levels remove from the gated measurement
-  *     stays visible in every artifact).
+  * Modes:
+  *  - no arguments: scaling (phase 1), then the query phase (phase 2);
+  *  - `queries [repeats] [name ...]`: the query phase only, each query
+  *    `repeats` times (default 1), reporting the per-query minimum;
+  *  - `plans <outDir> <suffix> [name ...]`: writes each query's formatted
+  *    physical plan to `<outDir>/<name>_<suffix>.txt`.
+  * Query names are `SparkEntry.queries` keys; none given means all.
+  * Env: `SPARK_GRAFT_SF_DIR` (query tables), `SPARK_GRAFT_CPUS` (query
+  * session cores and the scaling levels; default: the host's cores),
+  * `SPARK_GRAFT_BENCH_DOCS`, `SPARK_GRAFT_BENCH_DEADLINE_SEC`,
+  * `SPARK_GRAFT_BENCH_SKIP_QUERIES=1`.
   *
-  *     PAIRED-WINDOW PROTOCOL (round 4). This sandbox host shows sporadic
-  *     3-5x cross-tenant CPU/bandwidth spikes, and an efficiency RATIO
-  *     whose numerator and denominator were measured in different noise
-  *     windows measures the noise, not the machine: three rounds of data
-  *     show the raw 8→32 pipeline ratio oscillating 0.58-0.94 across
-  *     invocations of identical code. So:
+  *  1. Scaling (the N→4N criterion): the extraction pipeline on one fixed
+  *     synthetic corpus at local[N] and local[4N], with (N, 4N) derived
+  *     from the core count ([[levels]]: (1, 4) on 4 cores, (4, 16) on 16).
+  *     Each level runs in its own CPU-pinned child JVM ([[BenchLevel]]).
+  *     Measurements come in PAIRS, one N-core and one 4N-core run
+  *     back-to-back, the order alternating pair to pair. The SAMPLING
+  *     PLAN IS FIXED and never consults the verdict: pairs are measured
+  *     until [[MaxPairs]] or until the next pair no longer fits the time
+  *     budget ([[nextPairFits]]), so the sample count cannot depend on
+  *     the outcome (no optional stopping). The gate is evaluated once,
+  *     after sampling ([[evalGate]]): pooled min-wall efficiency
+  *     T_N / (4 * T_4N) >= [[GateTarget]], and no more than
+  *     [[PlausibleEffCap]].
   *
-  *      - measurements come in PAIRS: one N-core and one 4N-core attempt
-  *        back-to-back (order alternating pair to pair, so neither level
-  *        systematically gets the earlier/quieter slot). A pair is the
-  *        closest this box gets to "the same noise window", and a
-  *        per-pair efficiency is the fair within-window estimate of the
-  *        machine's intrinsic scaling.
-  *      - the SAMPLING PLAN IS FIXED UP FRONT and never consults the
-  *        verdict: pairs are measured until [[MaxPairs]] or until the next
-  *        pair no longer fits the retry budget (predicted from the worst
-  *        observed pair wall). No early stop on a passing gate, no extra
-  *        retries on a failing one — the sample count is independent of
-  *        the outcome, so the estimator carries no optional-stopping bias
-  *        (round-3 ADVICE).
-  *      - the GATE IS EVALUATED ONCE, after all sampling: it passes iff
-  *        the POOLED estimators pass (min wall per level across all
-  *        attempts, max bandwidth — the cross-window sustainable-rate
-  *        view) OR any single CLEAN PAIR passes within its own window
-  *        (non-turbulent brackets, pipeline ratio within the
-  *        plausibility cap — a turbulent "pass" is the one-sided noise
-  *        artifact the protocol exists to exclude). Gate
-  *        rule per view (BASELINE.md): pipeline efficiency >= 0.8, OR
-  *        kernel efficiency >= 0.8 AND pipeline/membw >= 1.0 (the
-  *        pipeline loses nothing beyond the single-socket bandwidth
-  *        ceiling a real N→4N cluster does not carry), OR the
-  *        clock-normalized arm (see [[ClkArmMin]]): both compute
-  *        ratios >= 0.8 after dividing out the in-window
-  *        occupancy-clock ceiling, with the clock reading required
-  *        inside its plausible turbo band.
-  *      - every attempt stays BRACKETED by MemBw probes (pre+post);
-  *        probes disagreeing by > [[TurbulenceFrac]] mark the attempt
-  *        turbulent — recorded per pair so the artifact shows which
-  *        windows were shifting while timed.
-  *      - every pair starts only after a CONFIRMED-QUIET window:
-  *        [[QuietProbesToEndDefer]] consecutive cheap 8-core membw
-  *        probes at or above [[QuietExitBw8Gbps]] (the bottom of the
-  *        quiet baseline band). Confident-quiet probes re-probe
-  *        immediately — a genuinely quiet host pays ~two probe walls,
-  *        no sleeps — while degraded or shoulder readings sleep
-  *        [[DeferSleepSec]] between probes, bounded by
-  *        [[MaxTotalDeferSec]] and the budget fit ([[deferFits]]).
-  *        Single-probe gating failed twice live: invocation 11 exited a
-  *        deferral on two shoulder readings a hair above the entry
-  *        threshold, and invocation 12 skipped deferral entirely on one
-  *        flapping spike inside a deep epoch. Deferral consults only
-  *        environment probes — never measured efficiencies — so it adds
-  *        no optional-stopping bias; it exists because every recorded
-  *        gate failure was a degradation epoch the probes see directly.
+  *  2. The SparkEntry queries at local[cpus] on `SPARK_GRAFT_SF_DIR`,
+  *     each forced through a full materialization (noop sink — count()
+  *     would let Catalyst prune the work) under a job group with a hard
+  *     cancel timer. A query that throws is reported `failed:true`, with
+  *     no time.
   *
-  *     The artifact carries both views (`gate_passed_pooled`,
-  *     `gate_passed_pair`, per-pair efficiency arrays) so the verdict is
-  *     re-checkable from the JSON alone.
-  *
-  *  2. Headline operator queries from SparkEntry at local[cpus] on
-  *     SPARK_GRAFT_SF_DIR, forced through a full materialization (noop
-  *     sink — count() would let Catalyst prune the work).
-  *
-  * Survivability contract (BENCH_r01 post-mortem: the round-1 run was
-  * OOM-killed at 45 min with nothing parseable on stdout):
-  *  - the full scaling JSON line is printed BEFORE the query phase starts,
-  *    so a mid-phase-2 kill still leaves a parseable artifact;
-  *  - the same JSON is mirrored to SIDECAR FILES (/tmp/graft_bench.json +
-  *    ./BENCH_SIDECAR.json) so the artifact survives any stdout mangling
-  *    (sbt's `[info] ` prefix made the round-2 driver record
-  *    `parsed: null`; build.sbt's StdoutOutput strategy fixes the stream,
-  *    the sidecar is the belt-and-braces copy);
-  *  - child JVMs get an explicit modest heap (they must NOT inherit an
-  *    oversized driver -Xmx: Xms=Xmx+AlwaysPreTouch commits it all);
-  *  - every query runs under a job-group with a hard cancel timer;
-  *  - a watchdog halts the JVM with EXIT CODE 3 before any external kill
-  *    budget — nonzero so a truncated run is distinguishable from a
-  *    complete rc=0 one, while the last printed/sidecar JSON line stands;
-  *  - stale /dev/shm shuffle dirs from killed runs are deleted up front
-  *    (tmpfs pages count against host RAM).
-  *
-  * Stdout carries up to TWO JSON lines (the phase-1 scaling line, then
-  * the final line repeating it plus per-query timings) — the LAST
-  * parseable line is authoritative; the first exists so a killed query
-  * phase still leaves the scaling artifact.
+  * Survivability contract (a killed run must still leave an artifact):
+  *  - the scaling JSON line is printed BEFORE the query phase starts, and
+  *    the final line repeats it plus per-query timings — the LAST
+  *    parseable line is authoritative;
+  *  - every JSON line is mirrored to sidecar files
+  *    (/tmp/graft_bench.json and ./BENCH_SIDECAR_LAST.json; promoting a
+  *    run to the committed BENCH_SIDECAR.json is a manual copy);
+  *  - a watchdog halts the JVM with EXIT CODE 3 at the deadline, after
+  *    re-emitting the last line with `truncated:true`; a query skipped
+  *    because the deadline is near also marks the run truncated.
   */
 object Bench {
 
   /** The currently running pinned child, so the deadline watchdog can
-    * kill it before halting — an orphaned child holds a fully committed
-    * pretouched heap and pinned cores past the parent's death. */
+    * kill it before halting. */
   @volatile private var liveChild: Process = null
 
   private def session(cores: Int): SparkSession = {
@@ -127,42 +68,25 @@ object Bench {
     s
   }
 
-  /** Best-of-N: the sustainable rate. The sandbox host shows sporadic
-    * multi-second noise spikes (observed on pure-CPU probes too), so min
-    * wall is the robust estimator here. */
-  private def best(xs: Seq[Double]): Double = xs.min
-
-  /** Spawn a CPU-pinned child JVM. Inherited flags are reused minus any
-    * heap sizing — the child gets `heap` explicitly (round-1 post-mortem:
-    * children inheriting an ~89g Xms=Xmx+AlwaysPreTouch committed 2x host
-    * RAM and the runner was OOM-killed). */
-  private def pinnedJvm(cores: Int, heap: String, mainClass: String,
-                        args: Seq[String], marker: String): Seq[Double] = {
+  /** Run [[BenchLevel]] in a child JVM pinned to `cores` cores, with this
+    * JVM's flags, and return its timed wall. The child inherits the heap,
+    * whose default (build.sbt: half of MemTotal, clamped to 2..8g) leaves
+    * room for parent and child together. */
+  private def pinnedLevel(cores: Int, corpusPath: String): Double = {
     import scala.jdk.CollectionConverters._
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val inherited = java.lang.management.ManagementFactory
       .getRuntimeMXBean.getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Xms"))
     val pin =
       if (new java.io.File("/usr/bin/taskset").exists())
         Seq("taskset", "-c", s"0-${cores - 1}")
       else Seq.empty
     val cmd = pin ++ Seq(javaBin) ++ inherited ++ Seq(
-      s"-Xms$heap", s"-Xmx$heap",
       s"-XX:ActiveProcessorCount=$cores",
       "-cp", System.getProperty("java.class.path"),
-      mainClass) ++ args
+      "graft.BenchLevel", cores.toString, corpusPath)
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
-    // the executor-JVM proxy mode (BenchLevel scaladoc) runs levels as
-    // local-cluster workers, whose executor-launch command builder
-    // resolves the Spark jars via SPARK_HOME
-    pb.environment().put("SPARK_HOME",
-      sys.env.getOrElse("SPARK_HOME", "/opt/spark"))
-    // the distribution's executor-command builder cannot infer the Scala
-    // version from jar layout alone
-    pb.environment().put("SPARK_SCALA_VERSION",
-      sys.env.getOrElse("SPARK_SCALA_VERSION", "2.13"))
     val p = pb.start()
     liveChild = p
     val out =
@@ -171,381 +95,81 @@ object Bench {
         p.waitFor()
         o
       } finally liveChild = null
+    val marker = s"LEVEL $cores "
     out.find(_.startsWith(marker)) match {
-      case Some(line) =>
-        line.stripPrefix(marker).trim.split(" ").toSeq
-          .filterNot(_.contains("=")).map(_.toDouble)
+      case Some(line) => line.stripPrefix(marker).trim.toDouble
       case None => throw new RuntimeException(
-        s"pinned child '$marker' failed:\n" + out.takeRight(30).mkString("\n"))
+        s"level $cores child failed:\n" + out.takeRight(30).mkString("\n"))
     }
-  }
-
-  private def deleteRecursive(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursive))
-    f.delete()
   }
 
   private def f4(d: Double): String = "%.4f".format(d)
 
-  /** Pre/post membw probes of one attempt disagreeing by more than this
-    * fraction mark the attempt TURBULENT — the environment shifted while
-    * the level was being timed. */
-  val TurbulenceFrac = 0.15
-  /** Max measurement pairs (one 8-core + one 32-core attempt each). The
-    * plan runs this many unless the budget cuts it short — never fewer
-    * because the gate already passes, never more because it fails. */
+  /** Max measurement pairs. The plan runs this many unless the budget
+    * cuts it short — never fewer because the gate already passes, never
+    * more because it fails. */
   val MaxPairs = 5
-  /** Per-view efficiency gate target (BASELINE.md). */
+  /** Efficiency gate target (BASELINE.md). */
   val GateTarget = 0.8
+  /** Interference can only slow a level, so a hit on the N-core half
+    * fakes HIGH efficiency. Nothing here scales super-linearly: a pooled
+    * ratio above this cap means even the best N-core run was
+    * contaminated, and the run is recorded as a fail. */
+  val PlausibleEffCap = 1.15
 
-  /** FIXED JOB LAYOUT across scaling levels (invocations 36+). A real
-    * N→4N cluster comparison runs the SAME binary, SAME job config, on
-    * the SAME input splits — task granularity is set by the data layout
-    * (file/block size), not by the cluster size; only the number of
-    * task WAVES differs. The old per-level config (scan splits =
-    * defaultParallelism = cores, exploded-path buckets = 4x cores,
-    * shuffle partitions = cores) made task size a function of "cluster
-    * size", which no real scale-up exhibits — and it ran each level's
-    * fused stage as ONE wave of giant tasks, so per-task kernel-work
-    * variance converted directly into idle cores, hitting the 32-core
-    * level hardest (2 waves of the 64-bucket scan vs 8 at 8 cores;
-    * measured busyFrac 0.75-0.81 at 32 cores vs 0.88-0.89 at 8). With
-    * a 256-bucket corpus and these fixed values, BOTH levels got
-    * faster in back-to-back windows (8-core 16.7→15.1 s, 32-core
-    * 6.0→5.0 s min-wall) and busyFrac rose to 0.94/0.89 — a genuine
-    * throughput win that also removes a one-sided DOWNWARD bias on the
-    * ratio (wave quantization can only depress the fewer-waves level).
-    * Gate rule, sampling plan, turbulence veto, plausibility cap and
-    * deferral are untouched by this change. */
-  /** SCALING LEVELS (N, 4N) = (4, 16) — invocations 38+. Measured
-    * 2026-08-19 (BASELINE.md round-4 "SMT boundary" section): this
-    * guest's 32 vCPUs are backed by ~16 physical host cores with SMT.
-    * Per-thread kernel throughput is flat from 1..16 busy vCPUs and
-    * drops ~25% beyond — same-window effs: kernel 4→8 = 0.99-1.00,
-    * 4→16 = 0.96-0.99, 16→32 = 0.76-0.80; PIPELINE 4→16 = 0.938 vs
-    * 8→32 = 0.748 inside one quiet bracketed window — while the
-    * dependency-chain clock probe reads ~0.99 (a 1-op/cycle latency
-    * chain is SMT-blind by construction), steal time during full
-    * 32-vCPU saturation is ~0.03% (no host time-slicing, so every
-    * vCPU genuinely runs — just slower past 16 busy), aggregate
-    * bandwidth still RISES past 16 busy threads (more outstanding
-    * misses), and every 16-vCPU pinning subset (0-15, evens,
-    * 0-7+16-23) performs identically, so vCPUs float and the host
-    * packs ≤16 runnable vCPUs onto distinct physical cores. A
-    * local[8]→local[32] ratio therefore multiplies the host's SMT
-    * yield (~1.55x aggregate for the second hardware thread per core)
-    * into the job's true scaling — a confound no real N→4N cluster
-    * carries, because 4x more machines have identical per-machine
-    * hardware at both cluster sizes. At (4, 16) every measured thread
-    * owns a physical core at BOTH levels, exactly like executor cores
-    * on a real cluster, so the ratio isolates what the north_rule
-    * actually grades: the JOB's partitioning / shuffle / skew / stage
-    * behavior at 4x parallelism.
-    *
-    * Bias audit, same discipline as every protocol change this round:
-    * the gate rule, fixed sampling plan, turbulence veto, plausibility
-    * cap, clock arm and deferral policy are all UNTOUCHED; the job
-    * layout stays FIXED across levels ([[ScanMinSplits]] /
-    * [[ShufflePartitions]]); and the artifact still carries the SMT
-    * crossing as a record-only full-box block (local[32] headline plus
-    * 16→32 kernel/pipe ratios) so the removed confound is visible in
-    * every artifact, not hidden. */
-  val ScaleN = 4
-  val Scale4N = 16
+  /** Scaling levels (N, 4N) for a host with `cores` cores: N = cores / 4
+    * (at least 1), so the 4N level uses the whole host. */
+  def levels(cores: Int): (Int, Int) = {
+    val n = math.max(1, cores / 4)
+    (n, 4 * n)
+  }
 
+  /** Job layout shared by both levels, so that only the number of task
+    * waves differs between them, as on a real N→4N cluster running the
+    * same job on the same input splits. */
   val CorpusBuckets = 256
-  /** Scan splits (spark.sql.files.minPartitionNum), both levels: 8
-    * waves of ~19-doc tasks at 32 cores, 32 waves at 8 cores. */
+  /** Scan splits (spark.sql.files.minPartitionNum). */
   val ScanMinSplits = 256
-  /** Shuffle partitions (reassembly of the exploded skew path), both
-    * levels. */
+  /** Shuffle partitions (reassembly of the exploded skew path). */
   val ShufflePartitions = 128
-  /** Exploded-span-path repartition width, both levels. */
+  /** Exploded-span-path repartition width. */
   val ExplodedBuckets = 128
-  /** Timed pipeline runs per attempt: 1. The robustness budget is spent
-    * on more measurement WINDOWS, not more runs per window — the pooled
-    * estimator is min over up to [[MaxPairs]] single runs (= the old
-    * min-of-N), and cheap pairs are what lets 2-3 windows fit the budget
-    * even when the host degrades 3x (observed live: an 821 s pair left
-    * room for nothing else). */
-  val RunsPerAttempt = 1
-  /** Timed kernel runs per attempt: 1. The kernel probe at 8 cores costs
-    * nearly as much as the pipeline probe; min-of-1 per window pooled
-    * across up to [[MaxPairs]] windows is effectively min-of-5, and the
-    * per-pair kernel disjunct only needs the QUIET window to read true. */
-  val KernelRunsPerAttempt = 1
+  /** Untimed runs before the timed one, the same at both levels: unequal
+    * warm-up would bias the ratio. */
+  val WarmRuns = 2
 
-  /** One bracketed measurement of a scaling level: bandwidth probe,
-    * pipeline (min of its timed runs), pure kernel, bandwidth probe.
-    * `clk` is the per-thread scalar-compute rate (M ops/s) with this
-    * level's core count busy — RECORD-ONLY environment data (see
-    * [[graft.tools.CpuSpeed]]); it never enters the gate. Defaulted so
-    * policy tests construct Attempts without it. */
-  final case class Attempt(bwPre: Double, bwPost: Double,
-                           pipeSec: Double, kernelSec: Double,
-                           clk: Double = 0.0) {
-    def bw: Double = math.max(bwPre, bwPost)
-    def turbulent: Boolean =
-      math.min(bwPre, bwPost) < (1.0 - TurbulenceFrac) * bw
+  /** One N-core and one 4N-core pipeline wall, measured back-to-back. */
+  final case class PairAttempt(nSec: Double, n4Sec: Double) {
+    def eff: Double = nSec / (4.0 * n4Sec)
   }
 
-  /** Interference bias is ONE-SIDED: noise can only slow a level, so a
-    * hit on the 8-core half of a pair can only fake HIGH efficiency —
-    * and `exists(_.passed)` over 5 windows would latch a single such
-    * fake. A pair whose pipeline ratio exceeds this cap is physically
-    * suspect (nothing here scales super-linearly; small measurement
-    * jitter around 1.0 is real, 1.2+ means the 8-core half absorbed a
-    * spike) and must not carry the gate on its own. */
-  val PlausiblePairEffCap = 1.15
-
-  /** CLOCK-NORMALIZATION ARM (post-invocation-26). The occupancy-clock
-    * ceiling is the second single-box environment constant after the
-    * bandwidth ceiling: a pinned no-memory-traffic ALU probe reads only
-    * ~0.84-0.88 as much per-thread throughput with 32 cores busy as
-    * with 8 busy (host turbo/hypervisor headroom at low occupancy — no
-    * SMT on this guest), so a PERFECTLY scaling compute job tops out at
-    * ~0.85 measured 8→32 efficiency here. A real N→4N cluster does not
-    * carry this ceiling: 4 separate N-core nodes all run at the N-busy
-    * clock. The probe was recorded per attempt (record-only) from
-    * invocation 25; it became a gate arm when direct measurement showed
-    * the EXISTING normalization arm (pipe/membw >= 1.0) is structurally
-    * dead under the current host regime — per-core fill bandwidth is
-    * the binding limit at 8 cores (6.6 GB/s/core at 8, 8.0 at 16, 8.5
-    * at 32), so aggregate bandwidth scales SUPER-linearly with cores,
-    * bwEff reads 1.1-1.3 permanently, and pipe/membw >= 1.0 would
-    * require pipeEff >= 1.2 — impossible. The clock arm replaces that
-    * arm's function (crediting the job for a box ceiling a real
-    * cluster scale-up does not have) with the ceiling that actually
-    * binds now.
-    *
-    * One-sided-bias audit, same discipline as the membw arm: the arm
-    * fires only on a CLEAN pair (non-turbulent brackets, raw ratios
-    * inside [[PlausiblePairEffCap]]) whose in-window clkEff reads
-    * inside the physically plausible turbo band [[ClkArmMin]]..
-    * [[ClkArmMax]] — quiet-window readings span 0.84-1.04, and genuine
-    * turbo headroom cannot push 32-busy per-thread clocks below ~0.75,
-    * so a smaller reading is interference on the 32-busy probe (the
-    * boost-faking direction) and DISQUALIFIES the arm rather than
-    * feeding it (invocation 26 pair 4 read clkEff 0.477 under a direct
-    * hit). Noise on the 8-busy probe RAISES clkEff and only shrinks
-    * the credit. Within the band both normalized ratios must clear the
-    * target: pipe/clkEff >= 0.8 AND kernel/clkEff >= 0.8 — a window
-    * where the two independent compute measurements disagree about
-    * scaling cannot pass on normalization. Max possible credit at the
-    * band floor is 1/0.75 = 1.33x, reached only with a clean in-band
-    * probe reading. */
-  val ClkArmMin = 0.75
-  val ClkArmMax = 1.0
-
-  /** An N-core and a 4N-core attempt measured back-to-back — the
-    * within-one-noise-window view of N→4N scaling. */
-  final case class PairAttempt(aN: Attempt, a4N: Attempt) {
-    def pipeEff: Double = aN.pipeSec / (4.0 * a4N.pipeSec)
-    def kernEff: Double = aN.kernelSec / (4.0 * a4N.kernelSec)
-    def bwEff: Double = a4N.bw / (4.0 * aN.bw)
-    /** Effective-clock ratio 4N-busy/N-busy within this window — the
-      * ceiling a perfectly scaling compute job reads on this box
-      * (~0.85-1.0 quiet). Feeds the gate only through [[clockArm]],
-      * and only when [[clkUsable]] says the reading is in-band. */
-    def clkEff: Double = if (aN.clk > 0) a4N.clk / aN.clk else 0.0
-    def pOverB: Double = pipeEff / bwEff
-    def turbulent: Boolean = aN.turbulent || a4N.turbulent
-    /** This window's verdict under the per-view gate rule. Only a CLEAN
-      * window may carry the gate alone: non-turbulent brackets (the
-      * environment held still while both levels were timed) and a
-      * physically plausible ratio (see [[PlausiblePairEffCap]]) — a
-      * turbulent pass would be exactly the one-sided noise artifact the
-      * paired protocol exists to exclude. */
-    def plausible: Boolean =
-      pipeEff <= PlausiblePairEffCap && kernEff <= PlausiblePairEffCap
-    /** In-window clock reading usable for normalization: both probes
-      * present and the ratio inside the plausible turbo band (see
-      * [[ClkArmMin]] scaladoc — an out-of-band reading is probe
-      * contamination and disqualifies the arm, never feeds it). */
-    def clkUsable: Boolean =
-      aN.clk > 0 && a4N.clk > 0 && clkEff >= ClkArmMin && clkEff <= ClkArmMax
-    /** Clock-normalized disjunct: BOTH compute measurements must clear
-      * the target after dividing out the in-window occupancy-clock
-      * ceiling. */
-    def clockArm: Boolean =
-      clkUsable && pipeEff / clkEff >= GateTarget &&
-      kernEff / clkEff >= GateTarget
-    /** The clock-arm disjunct AS THE GATE CONSUMES IT: the arm can only
-      * carry a pair that is also clean (non-turbulent, inside the
-      * plausibility cap — see [[passed]]). The artifact emits THIS, not
-      * the raw disjunct: invocation 43's pair 1 read raw-clockArm true
-      * on a kernel ratio of 1.638 that the cap had already rejected,
-      * and the per-pair field was misread as a pass flag (round-4
-      * ADVICE). */
-    def clockArmGated: Boolean = clockArm && !turbulent && plausible
-    def passed: Boolean =
-      !turbulent && plausible &&
-      (pipeEff >= GateTarget || (kernEff >= GateTarget && pOverB >= 1.0) ||
-       clockArm)
+  /** Pooled gate over the complete sample: MIN wall per level across
+    * every pair (the sustainable rate), T_N / (4 * T_4N). */
+  final case class GateResult(eff: Double) {
+    def passed: Boolean = eff >= GateTarget && eff <= PlausibleEffCap
   }
-
-  /** Pooled + per-pair gate evaluation — called exactly once, after the
-    * fixed sampling plan completes (pure; pinned by BenchPolicySpec).
-    * Pooled estimators: MIN wall per level across every attempt (the
-    * sustainable rate), MAX bandwidth (the box's capacity — a depressed
-    * probe reading is interference, not capacity). */
-  final case class GateResult(pipeEff: Double, kernEff: Double,
-                              bwEff: Double, pOverB: Double,
-                              clkEff: Double,
-                              pooledPassed: Boolean, pairPassed: Boolean) {
-    def passed: Boolean = pooledPassed || pairPassed
-  }
-  def evalGate(pairs: Seq[PairAttempt]): GateResult = {
-    val allN = pairs.map(_.aN)
-    val all4N = pairs.map(_.a4N)
-    val eff = allN.map(_.pipeSec).min / (4.0 * all4N.map(_.pipeSec).min)
-    val kEff = allN.map(_.kernelSec).min / (4.0 * all4N.map(_.kernelSec).min)
-    val bwEff = all4N.map(_.bw).max / (4.0 * allN.map(_.bw).max)
-    val pOverB = eff / bwEff
-    // pooled clock mirrors pooled bandwidth: MAX per level is the
-    // least-contended capacity reading (interference only lowers it),
-    // and the same plausible-band rule disqualifies the arm on an
-    // out-of-band ratio instead of feeding it
-    val clkN = allN.map(_.clk).max
-    val clk4N = all4N.map(_.clk).max
-    val clkEff = if (clkN > 0) clk4N / clkN else 0.0
-    val clockArm =
-      clkN > 0 && clk4N > 0 && clkEff >= ClkArmMin && clkEff <= ClkArmMax &&
-      eff / clkEff >= GateTarget && kEff / clkEff >= GateTarget
-    // the plausibility cap applies to the pooled view too: a pooled
-    // ratio past it means even the BEST 8-core window was contaminated
-    // (noise only ever fakes HIGH efficiency) — that run is
-    // unmeasurable, which is a fail, not a pass
-    val pooled =
-      eff <= PlausiblePairEffCap && kEff <= PlausiblePairEffCap &&
-      (eff >= GateTarget || (kEff >= GateTarget && pOverB >= 1.0) ||
-       clockArm)
-    GateResult(eff, kEff, bwEff, pOverB, clkEff, pooled, pairs.exists(_.passed))
-  }
-
-  /** The artifact's exemplar pair: a passing one if any, then a CLEAN
-    * one (non-turbulent, plausible), preferring the most BALANCED
-    * window — max over min(pipe, kernel) efficiency. A raw pipeline
-    * ratio far above 1.0 is physically suspect (nothing scales
-    * super-linearly; it means the 8-core half absorbed interference),
-    * so the summary fields showcase the window whose two probes agree,
-    * not the noisiest reading — invocation 27 live: with every pair
-    * failing, the old ordering put a turbulent 2.18 fake in the
-    * `best_pair_*` fields instead of the one clean window. Full
-    * per-pair arrays are emitted regardless. */
-  def exemplarPair(pairs: Seq[PairAttempt]): PairAttempt =
-    pairs.maxBy(p => (p.passed, !p.turbulent && p.plausible,
-                      math.min(p.pipeEff, p.kernEff)))
+  def evalGate(pairs: Seq[PairAttempt]): GateResult =
+    GateResult(pairs.map(_.nSec).min / (4.0 * pairs.map(_.n4Sec).min))
 
   /** The fixed plan's only data-dependence: wall clock. One more pair is
-    * measured iff the predicted cost fits the retry budget. The predictor
-    * is the MIDPOINT of the cheapest and costliest observed pair (x1.1):
-    * a worst-pair predictor proved too pessimistic live — one pair
-    * measured under a 4x interference spike would have blocked a second,
-    * much cheaper pair with ~800 s of budget left. An overrun only delays
-    * the query phase, which has its own per-query caps and deadline
-    * skips. Depends on wall times only — never on measured efficiencies
-    * (no optional stopping). */
+    * measured iff the predicted cost — the midpoint of the cheapest and
+    * costliest observed pair, x1.1 — fits the budget. Never depends on a
+    * measured efficiency. */
   def nextPairFits(done: Int, elapsedSec: Double, pairWallsSec: Seq[Double],
                    budgetSec: Double): Boolean = {
-    val predicted = predictedPairSec(pairWallsSec)
+    val predicted = (pairWallsSec.min + pairWallsSec.max) / 2.0 * 1.1
     done < MaxPairs && elapsedSec + predicted < budgetSec
   }
-
-  private def predictedPairSec(pairWallsSec: Seq[Double]): Double =
-    if (pairWallsSec.isEmpty) FirstPairWallGuessSec
-    else (pairWallsSec.min + pairWallsSec.max) / 2.0 * 1.1
-
-  /** An 8-core membw probe below this reads as WHOLE-HOST DEGRADATION —
-    * the 40-51 GB/s epochs of the round-4 tally, vs the 55-60 quiet
-    * baseline (BASELINE.md). Probe readings sit clearly in one regime or
-    * the other; 52 splits them. */
-  val DegradedBw8Gbps = 52.0
-  /** One deferral step: sleep this long, then re-probe. */
-  val DeferSleepSec = 60
-  /** Global cap on time spent deferring — sampling must still happen
-    * even if the whole run sits inside a degraded epoch. (Invocation 7
-    * exhausted the original 300 s cap with the epoch still running; the
-    * budget-fit floor below is what makes a bigger cap safe.) */
-  val MaxTotalDeferSec = 600
-  /** Conservative pair-wall predictor before any pair has been timed
-    * (quiet pairs run ~200-300 s; a degraded one hit 821 s live). */
-  val FirstPairWallGuessSec = 400.0
-  /** Worst observed DEGRADED pair wall (821 s live, rounded up). Deferral
-    * stops while the host is still degraded only via cap or budget — and
-    * the pair it then measures will itself be degraded, so its budget fit
-    * must assume THIS cost, not the quiet predictor. Flooring the fit at
-    * this keeps a long defer from ever pushing the mandatory pair past
-    * the retry budget into a truncated artifact. */
-  val DegradedPairWallGuessSec = 850.0
-
-  /** The cap-and-budget half of the deferral policy: one more sleep is
-    * affordable iff it stays inside [[MaxTotalDeferSec]] AND leaves room
-    * for the mandatory pair at the DEGRADED pair-wall floor. */
-  def deferFits(deferSecUsed: Int, elapsedSec: Double,
-                pairWallsSec: Seq[Double], budgetSec: Double): Boolean =
-    deferSecUsed + DeferSleepSec <= MaxTotalDeferSec &&
-    elapsedSec + DeferSleepSec +
-      math.max(predictedPairSec(pairWallsSec), DegradedPairWallGuessSec) <
-      budgetSec
-
-  /** Consecutive CONFIDENT-QUIET probe readings required before any pair
-    * may start. Two single-probe failures live: invocation 9's flapping
-    * epoch edge (one rebound probe between two degraded readings), and
-    * invocation 12's flapping spike (one probe read quiet inside a deep
-    * epoch whose very next bracket read 25.9 GB/s). Confirmation costs a
-    * genuinely quiet host only one extra probe wall (~15 s, no sleep:
-    * [[probeNeedsSleep]]) and is still bounded by the same cap/budget. */
-  val QuietProbesToEndDefer = 2
-
-  /** HYSTERESIS quiet threshold: only probes at or above the bottom of
-    * the QUIET baseline band (55-60 GB/s across three rounds of data)
-    * advance the confirmation streak — not merely probes above the 52
-    * degradation threshold. Invocation 11 live: a flapping shoulder
-    * (probes 46.8-53.1) produced two readings a hair above 52, the
-    * deferral debounced out, and the pair's own brackets read 49.5 —
-    * the epoch had not ended. Readings in the 52-55 shoulder neither
-    * reset nor advance the quiet streak ([[updatedQuietStreak]]). */
-  val QuietExitBw8Gbps = 55.0
-
-  /** Quiet-streak transition under hysteresis: degraded resets, a
-    * confidently-quiet reading advances, a shoulder reading (between
-    * the two thresholds) holds — the epoch edge is still flapping, so
-    * it neither confirms quiet nor re-enters degradation. Pure; pinned
-    * in BenchPolicySpec. */
-  def updatedQuietStreak(probeGbps: Double, streak: Int): Int =
-    if (probeGbps < DegradedBw8Gbps) 0
-    else if (probeGbps >= QuietExitBw8Gbps) streak + 1
-    else streak
-
-  /** The pacing half of the confirmation loop: a sub-confident reading
-    * (degraded OR shoulder) warrants a [[DeferSleepSec]] sleep before
-    * the next probe — the regime needs time to change — while a
-    * confident-quiet reading re-probes immediately, so confirmation on
-    * a genuinely quiet host costs probe walls only, never sleeps. Like
-    * the whole deferral policy this depends only on environment probes,
-    * never measured efficiencies: the fixed sampling plan stays free of
-    * optional stopping (the VERDICT cannot influence how many pairs are
-    * measured, only the verdict-blind environment can influence when). */
-  def probeNeedsSleep(probeGbps: Double): Boolean =
-    probeGbps < QuietExitBw8Gbps
-
-  /** Pair admission: measure once [[QuietProbesToEndDefer]] consecutive
-    * confident-quiet probes confirm the window (pure; pinned). */
-  def quietConfirmed(quietStreak: Int): Boolean =
-    quietStreak >= QuietProbesToEndDefer
 
   /** Last emitted artifact line — the watchdog re-emits it with
     * `truncated` flipped true before halting. */
   @volatile private var lastJson: String = null
 
-  /** Mirror the JSON artifact to sidecar files — survives any stdout
-    * mangling between this JVM and the recorded artifact. */
   private def emitJson(json: String): Unit = {
     lastJson = json
     println(json)
     System.out.flush()
-    for (p <- Seq("/tmp/graft_bench.json", "BENCH_SIDECAR.json")) {
+    for (p <- Seq("/tmp/graft_bench.json", "BENCH_SIDECAR_LAST.json")) {
       try java.nio.file.Files.write(java.nio.file.Paths.get(p),
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case _: Throwable => () } // sidecars are best-effort
@@ -557,22 +181,142 @@ object Bench {
   private[graft] def markTruncated(json: String): String =
     json.replace("\"truncated\":false", "\"truncated\":true")
 
+  private type Query = (SparkSession, String) => org.apache.spark.sql.DataFrame
+  /** Hard per-query cap: the query's job group is cancelled after this. */
+  private val QueryCapSec = 75
+
+  /** The named queries (all when none are named) in name order; an
+    * unknown name fails before any Spark session starts. */
+  private def selected(names: Seq[String]): Seq[(String, Query)] = {
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries ${unknown.mkString(", ")}; known: " +
+      all.keys.toSeq.sorted.mkString(", "))
+    all.toSeq.sortBy(_._1).filter { case (n, _) => names.isEmpty || names.contains(n) }
+  }
+
+  /** The query loop of phase 2 and the `queries` mode: an untimed warm-up,
+    * then each query `repeats` times through the noop sink. A
+    * query is left out while `skip()` holds; one that throws on any
+    * repeat (or is cancelled at the cap) reports `None`. */
+  private def runQueries(spark: SparkSession, sfDir: String,
+                         queries: Seq[(String, Query)], repeats: Int,
+                         skip: () => Boolean): Seq[(String, Option[Double])] = {
+    val sc = spark.sparkContext
+    // untimed session warm-up: parquet scan + codegen'd agg, so the first
+    // timed query stops absorbing the session's JIT/classload cost
+    try SparkEntry.queries("d3_token_stats")(spark, sfDir)
+      .write.mode("overwrite").format("noop").save()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+    }
+    val timer = new java.util.Timer("bench-query-cap", true)
+    def once(name: String, fn: Query): Option[Double] = {
+      sc.setJobGroup(name, name, interruptOnCancel = true)
+      val cancel = new java.util.TimerTask {
+        def run(): Unit = {
+          System.err.println(s"[bench] $name cancelled at ${QueryCapSec}s")
+          sc.cancelJobGroup(name)
+        }
+      }
+      timer.schedule(cancel, QueryCapSec * 1000L)
+      val q0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        Some((System.nanoTime() - q0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      } finally {
+        cancel.cancel()
+        sc.clearJobGroup()
+      }
+    }
+    val results = queries.flatMap { case (name, fn) =>
+      if (skip()) {
+        System.err.println(s"[bench] $name skipped: deadline near")
+        None
+      } else {
+        val times = (1 to repeats).map(_ => once(name, fn))
+        val best = if (times.forall(_.isDefined)) Some(times.flatten.min) else None
+        System.err.println(f"[bench] $name%-22s " + best.fold("FAILED")(t =>
+          f"min $t%7.3f s  " + times.flatten.map(t => f"$t%.3f").mkString("[", ", ", "]")))
+        Some(name -> best)
+      }
+    }
+    timer.cancel()
+    results
+  }
+
+  private def queriesJson(sfDir: String,
+                          results: Seq[(String, Option[Double])]): String = {
+    val qs = results.map {
+      case (k, Some(v)) => s""""$k":${f4(v)}"""
+      case (k, None) => s""""$k":{"failed":true}"""
+    }.mkString("{", ",", "}")
+    s""""queries":$qs,"sf":"$sfDir","total_query_sec":${f4(results.flatMap(_._2).sum)}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    args.toList match {
+      case "queries" :: rest =>
+        val (repeats, names) = rest match {
+          case r :: ns if r.forall(_.isDigit) => (r.toInt, ns)
+          case ns => (1, ns)
+        }
+        require(repeats >= 1, "repeats must be at least 1")
+        val queries = selected(names)
+        val spark = session(cpus)
+        try {
+          val results = runQueries(spark, sfDir, queries, repeats, () => false)
+          println(s"""{"metric":"query phase (min of $repeats)",${queriesJson(sfDir, results)}}""")
+        } finally spark.stop()
+      case "plans" :: outDir :: suffix :: names =>
+        val queries = selected(names)
+        val spark = session(cpus)
+        try plans(spark, sfDir, outDir, suffix, queries)
+        finally spark.stop()
+      case Nil => scalingAndQueries(sfDir, cpus, elapsed)
+      case _ =>
+        System.err.println("usage: Bench | Bench queries [repeats] [name ...] | " +
+          "Bench plans <outDir> <suffix> [name ...]")
+        sys.exit(2)
+    }
+  }
+
+  private def plans(spark: SparkSession, sfDir: String, outDir: String,
+                    suffix: String, queries: Seq[(String, Query)]): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    for ((name, fn) <- queries) {
+      try {
+        val plan = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        val out = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
+        java.nio.file.Files.write(out,
+          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        System.err.println(s"[bench] wrote $out")
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name plan failed: ${e.getMessage}")
+      }
+    }
+  }
+
+  /** Phase 1 then phase 2; `elapsed` is seconds since the JVM's main
+    * started, which the deadline counts from. */
+  private def scalingAndQueries(sfDir: String, cpus: Int,
+                                elapsed: => Double): Unit = {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "4800").toInt
     val deadlineSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "1800").toInt
-    // cache key carries generator version AND physical layout — a stale
-    // 64-bucket corpus must not be silently reused under the fixed-layout
-    // protocol (invocations 36+)
+    val (scaleN, scale4N) = levels(cpus)
+    // cache key carries generator version AND physical layout
     val corpusPath =
       s"/tmp/graft_bench_corpus_${nDocs}_v${CorpusGen.GenVersion}_b$CorpusBuckets"
-
-    // stale shuffle dirs from killed runs sit on tmpfs = host RAM
-    deleteRecursive(new java.io.File("/dev/shm/spark-graft"))
 
     @volatile var finished = false
     val watchdog = new Thread(() => {
@@ -585,8 +329,6 @@ object Bench {
           "rc 3 (artifact re-emitted with truncated:true)")
         val child = liveChild
         if (child != null) child.destroyForcibly() // no orphaned pinned JVM
-        // the artifact itself must say it is incomplete: re-emit the last
-        // JSON with truncated flipped (stdout last-line + sidecars)
         val lj = lastJson
         if (lj != null) emitJson(markTruncated(lj))
         // NONZERO: a truncated bench must not read as a clean rc=0 run
@@ -596,8 +338,7 @@ object Bench {
     watchdog.setDaemon(true)
     watchdog.start()
 
-    // ---- phase 1: scaling, local[ScaleN] vs local[Scale4N] = (4, 16)
-    // on identical input (plus the record-only local[32] full-box block)
+    // ---- phase 1: scaling, local[N] vs local[4N] on identical input
     val prep = session(cpus)
     if (!java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$corpusPath/_snapshots"))) {
@@ -613,223 +354,58 @@ object Bench {
     }
     prep.stop()
 
-    def membw(cores: Int): Double =
-      pinnedJvm(cores, "2g", "graft.tools.MemBw",
-        Seq(cores.toString), s"MEMBW $cores ").head
-    // per-thread effective-clock probe (~3 s) alongside the bandwidth
-    // brackets: feeds the gate ONLY through the clock-normalization arm
-    // ([[ClkArmMin]] scaladoc — in-band clean-pair readings divide out
-    // the occupancy-clock ceiling); never consulted by the deferral
-    def cpuspd(cores: Int): Double =
-      pinnedJvm(cores, "1g", "graft.tools.CpuSpeed",
-        Seq(cores.toString), s"CPUSPD $cores ").head
-    def attemptLevel(cores: Int): Attempt = {
-      val pre = membw(cores)
-      val clk = cpuspd(cores)
-      // SYMMETRIC warm-up: both levels discard the same number of
-      // executions. An earlier build warmed 8 cores once and 32 cores
-      // twice (the long 8-core runs warm in one), but any residual
-      // first-run overhang on the lightly-warmed SLOW level inflates
-      // T8 and therefore the efficiency ratio — a structural bias in
-      // the direction that fakes a PASS, which an integrity-hardened
-      // gate must not carry. Equal counts are bias-neutral by
-      // construction; the min-over-runs estimator absorbs whatever
-      // warm-up residue survives either way.
-      val warms = 2
-      val pipe = best(pinnedJvm(cores, "8g", "graft.BenchLevel",
-        Seq(cores.toString, corpusPath, RunsPerAttempt.toString,
-            warms.toString),
-        s"LEVEL $cores "))
-      val kern = best(pinnedJvm(cores, "4g", "graft.tools.PureLevel",
-        Seq(cores.toString, nDocs.toString, KernelRunsPerAttempt.toString),
-        s"PURE $cores "))
-      val post = membw(cores)
-      val a = Attempt(pre, post, pipe, kern, clk)
-      System.err.println(
-        f"[bench] level $cores attempt ${a.pipeSec}%.2fs pipe / " +
-        f"${a.kernelSec}%.2fs kernel / membw $pre%.1f->$post%.1f GB/s / " +
-        f"clk $clk%.1f Mops/thr" +
-        (if (a.turbulent) " TURBULENT" else "") + f" | t=$elapsed%.0fs")
-      a
+    def level(cores: Int): Double = {
+      val t = pinnedLevel(cores, corpusPath)
+      System.err.println(f"[bench] level $cores $t%.2fs | t=$elapsed%.0fs")
+      t
     }
-    // observed pair walls feed the budget predictor — the plan must not
-    // START a pair it cannot plausibly FINISH inside the retry budget
     var pairWalls = Vector.empty[Double]
     def measurePair(idx: Int): PairAttempt = {
       val p0 = elapsed
-      // alternate level order across pairs: neither level systematically
-      // gets the earlier slot of its window
+      // alternate level order: neither level systematically gets the
+      // earlier slot of its window
       val pair =
-        if (idx % 2 == 0) {
-          val aN = attemptLevel(ScaleN); PairAttempt(aN, attemptLevel(Scale4N))
-        } else {
-          val a4N = attemptLevel(Scale4N); PairAttempt(attemptLevel(ScaleN), a4N)
-        }
+        if (idx % 2 == 0) { val n = level(scaleN); PairAttempt(n, level(scale4N)) }
+        else { val n4 = level(scale4N); PairAttempt(level(scaleN), n4) }
       pairWalls :+= elapsed - p0
-      System.err.println(
-        f"[bench] pair ${idx + 1} pipe ${pair.pipeEff}%.3f kernel " +
-        f"${pair.kernEff}%.3f membw ${pair.bwEff}%.3f pipe/membw " +
-        f"${pair.pOverB}%.3f${if (pair.turbulent) " TURBULENT" else ""} " +
-        f"-> ${if (pair.passed) "pass" else "fail"} | " +
+      System.err.println(f"[bench] pair ${idx + 1} eff ${pair.eff}%.3f | " +
         f"wall ${pairWalls.last}%.0fs | t=$elapsed%.0fs")
       pair
     }
 
-    // FIXED sampling plan: pairs until MaxPairs or the budget cuts it
-    // short; the gate is never consulted here (no optional stopping).
-    // Phase 2 (queries) needs ~60-240 s; a fixed 300 s reserve leaves the
-    // rest of the deadline for measurement.
-    val retryDeadlineSec = (deadlineSec - 300.0).max(deadlineSec * 0.4)
-    var deferSecUsed = 0
-    // every pair needs a confirmed-quiet window: QuietProbesToEndDefer
-    // consecutive probes >= QuietExitBw8Gbps. Confident-quiet readings
-    // re-probe immediately (quiet host: ~two probe walls, no sleeps);
-    // degraded/shoulder readings sleep, bounded by cap + budget floor —
-    // when the budget runs out the mandatory pair measures regardless.
-    def awaitQuietWindow(): Unit = {
-      var quietStreak = 0
-      var waiting = true
-      while (waiting) {
-        val probe = membw(8)
-        quietStreak = updatedQuietStreak(probe, quietStreak)
-        if (quietConfirmed(quietStreak)) waiting = false
-        else if (probeNeedsSleep(probe) &&
-                 deferFits(deferSecUsed, elapsed, pairWalls, retryDeadlineSec)) {
-          System.err.println(
-            f"[bench] host not confidently quiet (8-core membw $probe%.1f " +
-            f"GB/s, degraded<$DegradedBw8Gbps%.0f quiet>=$QuietExitBw8Gbps%.0f, " +
-            f"streak $quietStreak/$QuietProbesToEndDefer): " +
-            f"deferring ${DeferSleepSec}s " +
-            f"(${deferSecUsed}s/${MaxTotalDeferSec}s used) | t=$elapsed%.0fs")
-          Thread.sleep(DeferSleepSec * 1000L)
-          deferSecUsed += DeferSleepSec
-        } else if (probeNeedsSleep(probe)) {
-          // defer budget exhausted with the host still sub-quiet: the
-          // fixed plan's mandatory pair measures now, honestly degraded
-          waiting = false
-        }
-        // else: confident-quiet but unconfirmed — re-probe immediately
-      }
-    }
-    // record-only FULL-BOX block, measured FIRST so the headline
-    // local[32] throughput always exists in the artifact: one bracketed
-    // 32-core pipeline + kernel attempt in a confirmed-quiet window.
-    // This is also where the SMT crossing the (4,16) scaling levels
-    // removed from the gated measurement stays visible: the artifact
-    // reports kernel/pipe 16→32 ratios computed against the pairs'
-    // best 16-core walls ([[ScaleN]] scaladoc).
-    awaitQuietWindow()
-    val fullBox = attemptLevel(32)
-
-    awaitQuietWindow()
+    // FIXED sampling plan; the query phase keeps a 300 s reserve
+    val budgetSec = (deadlineSec - 300.0).max(deadlineSec * 0.4)
     var pairs = Vector(measurePair(0))
-    while (nextPairFits(pairs.size, elapsed, pairWalls, retryDeadlineSec)) {
-      awaitQuietWindow()
+    while (nextPairFits(pairs.size, elapsed, pairWalls, budgetSec))
       pairs :+= measurePair(pairs.size)
-    }
 
-    // ---- gate: evaluated once over the complete sample
     val gate = evalGate(pairs)
-    val bestPair = exemplarPair(pairs)
-    val pipeTN = pairs.map(_.aN.pipeSec).min
-    val pipeT4N = pairs.map(_.a4N.pipeSec).min
-    val kernTN = pairs.map(_.aN.kernelSec).min
-    val kernT4N = pairs.map(_.a4N.kernelSec).min
-
-    val (docsN, spansN) = (nDocs / pipeTN, totalSpans / pipeTN)
-    val (docs4N, spans4N) = (nDocs / pipeT4N, totalSpans / pipeT4N)
-    val (kN, k4N) = (nDocs / kernTN, nDocs / kernT4N)
-    val bwN = pairs.map(_.aN.bw).max
-    val bw4N = pairs.map(_.a4N.bw).max
-    // pooled clock view mirrors the bandwidth one: MAX per level is the
-    // least-contended capacity reading (interference only lowers it)
-    val clkN = pairs.map(_.aN.clk).max
-    val clk4N = pairs.map(_.a4N.clk).max
-    // record-only SMT-crossing ratios: best 16-core pair walls vs the
-    // full-box attempt (2x thread count, same physical cores)
-    val docsFullBox = nDocs / fullBox.pipeSec
-    val spansFullBox = totalSpans / fullBox.pipeSec
-    val kFullBox = nDocs / fullBox.kernelSec
-    val smtPipe = pipeT4N / (2.0 * fullBox.pipeSec)
-    val smtKern = kernT4N / (2.0 * fullBox.kernelSec)
+    val tN = pairs.map(_.nSec).min
+    val t4N = pairs.map(_.n4Sec).min
     System.err.println(
-      f"[bench] POOLED pipe ${gate.pipeEff}%.3f kernel ${gate.kernEff}%.3f " +
-      f"membw $bwN%.1f->$bw4N%.1f GB/s (eff ${gate.bwEff}%.3f) " +
-      f"pipe/membw ${gate.pOverB}%.3f clk ${gate.clkEff}%.3f " +
-      f"(${gate.pooledPassed}) | " +
-      f"BEST PAIR pipe ${bestPair.pipeEff}%.3f kernel ${bestPair.kernEff}%.3f " +
-      f"pipe/membw ${bestPair.pOverB}%.3f (${gate.pairPassed}) | " +
-      f"gate ${if (gate.passed) "PASSED" else "FAILED"} | " +
-      f"pairs ${pairs.size} | fullbox $docsFullBox%.0f docs/s " +
-      f"smt16to32 pipe $smtPipe%.3f kern $smtKern%.3f | t=$elapsed%.0fs")
+      f"[bench] POOLED eff ${gate.eff}%.3f over ${pairs.size} pairs | " +
+      f"gate ${if (gate.passed) "PASSED" else "FAILED"} | t=$elapsed%.0fs")
 
-    def effArr(f: PairAttempt => Double): String =
-      pairs.map(p => f4(f(p))).mkString("[", ",", "]")
-    def renderJson(queryTimes: Seq[(String, Double)]): String = {
-      val qs = queryTimes.map { case (k, v) => s""""$k":${f4(v)}""" }
-        .mkString("{", ",", "}")
-      val totalQuerySec = queryTimes.map(_._2).sum
-      s"""{"metric":"end-to-end extraction throughput (docs/sec at local[32]; scaling efficiency local[4]->local[16] = N->4N dedicated physical cores attached; 16->32 SMT-crossing block record-only)","value":${f4(docsFullBox)},"unit":"docs/sec","queries":$qs,"sf":"$sfDir","total_query_sec":${f4(totalQuerySec)},"truncated":false,"scaling":{"corpus_docs":$nDocs,"corpus_spans":$totalSpans,"exec_jvm":${sys.env.get("SPARK_GRAFT_EXEC_JVM").contains("1")},"scale_n_cores":$ScaleN,"scale_4n_cores":$Scale4N,"local4_docs_per_sec":${f4(docsN)},"local4_spans_per_sec":${f4(spansN)},"local16_docs_per_sec":${f4(docs4N)},"local16_spans_per_sec":${f4(spans4N)},"efficiency_n_to_4n":${f4(gate.pipeEff)},"kernel_local4_docs_per_sec":${f4(kN)},"kernel_local16_docs_per_sec":${f4(k4N)},"kernel_efficiency_n_to_4n":${f4(gate.kernEff)},"membw_local4_gbps":${f4(bwN)},"membw_local16_gbps":${f4(bw4N)},"membw_efficiency_n_to_4n":${f4(gate.bwEff)},"clock_mops_per_thread_4busy":${f4(clkN)},"clock_mops_per_thread_16busy":${f4(clk4N)},"clock_efficiency_16busy_over_4busy":${f4(if (clkN > 0) clk4N / clkN else 0.0)},"pair_clock_effs":${effArr(_.clkEff)},"clock_note":"per-thread effective clock with N cores busy (tools.CpuSpeed); a perfectly scaling compute job reads at most this ratio on one box, a real Nto4N cluster reads 1.0 - the gate's clock-normalized arm divides it out, gated to clean pairs with the reading inside the plausible turbo band [0.75,1.0]","levels_note":"scaling levels are (4,16): every measured thread owns a dedicated physical host core at BOTH levels, as executor cores on a real Nto4N cluster do - this guest's 32 vCPUs are ~16 physical cores x2 SMT, so an (8,32) ratio multiplies the host SMT yield (~1.55x) into the job's scaling; the crossing stays visible in the fullbox block (BASELINE.md round-4 SMT-boundary section)","pipeline_over_membw":${f4(gate.pOverB)},"pairs":${pairs.size},"degraded_defer_sec":$deferSecUsed,"pair_pipe_effs":${effArr(_.pipeEff)},"pair_kernel_effs":${effArr(_.kernEff)},"pair_pipe_over_membw":${effArr(_.pOverB)},"pair_turbulent":${pairs.map(_.turbulent).mkString("[", ",", "]")},"pair_clock_arm":${pairs.map(_.clockArmGated).mkString("[", ",", "]")},"best_pair_pipeline_eff":${f4(bestPair.pipeEff)},"best_pair_kernel_eff":${f4(bestPair.kernEff)},"best_pair_pipe_over_membw":${f4(bestPair.pOverB)},"gate_passed_pooled":${gate.pooledPassed},"gate_passed_pair":${gate.pairPassed},"gate_passed":${gate.passed},"gate_rule":"pooled-min-wall OR any clean same-window pair (non-turbulent, eff<=1.15): pipeline>=0.8 OR (kernel>=0.8 AND pipeline_over_membw>=1.0) OR (clkEff in [0.75,1.0] AND pipeline/clkEff>=0.8 AND kernel/clkEff>=0.8); fixed sampling (no optional stopping)","attempts_n":${pairs.size},"attempts_4n":${pairs.size},"fullbox":{"local32_docs_per_sec":${f4(docsFullBox)},"local32_spans_per_sec":${f4(spansFullBox)},"kernel_local32_docs_per_sec":${f4(kFullBox)},"membw_local32_gbps":${f4(fullBox.bw)},"clock_mops_per_thread_32busy":${f4(fullBox.clk)},"pipe_eff_16_to_32":${f4(smtPipe)},"kernel_eff_16_to_32":${f4(smtKern)},"turbulent":${fullBox.turbulent},"note":"record-only: 16->32 on this box adds a second hardware thread per physical core (host SMT), not more cores - a real Nto4N cluster never crosses this boundary; same-window quiet probes read ~0.76-0.80, recorded fullbox crossings spread ~0.69-0.84 across round-4 invocations"}}}"""
-    }
+    def renderJson(queries: Seq[(String, Option[Double])]): String =
+      s"""{"metric":"end-to-end extraction throughput (docs/sec at local[$scale4N]; scaling efficiency local[$scaleN]->local[$scale4N] = T_N/(4*T_4N))","value":${f4(nDocs / t4N)},"unit":"docs/sec",${queriesJson(sfDir, queries)},"truncated":false,"scaling":{"host_cores":$cpus,"corpus_docs":$nDocs,"corpus_spans":$totalSpans,"scale_n_cores":$scaleN,"scale_4n_cores":$scale4N,"n_docs_per_sec":${f4(nDocs / tN)},"n_spans_per_sec":${f4(totalSpans / tN)},"n4_docs_per_sec":${f4(nDocs / t4N)},"n4_spans_per_sec":${f4(totalSpans / t4N)},"efficiency_n_to_4n":${f4(gate.eff)},"pairs":${pairs.size},"pair_effs":${pairs.map(p => f4(p.eff)).mkString("[", ",", "]")},"gate_passed":${gate.passed},"gate_rule":"pooled min-wall T_N/(4*T_4N) >= $GateTarget and <= $PlausibleEffCap; fixed sampling (no optional stopping)"}}"""
 
-    // scaling artifact is safe on stdout + sidecars from here on, whatever
-    // happens to the query phase (the driver's parser takes a JSON line;
-    // the final line below repeats this one plus per-query timings)
+    // the scaling artifact is safe on stdout + sidecars from here on
     emitJson(renderJson(Seq.empty))
 
-    // ---- phase 2: headline operator queries at local[cpus]
+    // ---- phase 2: the queries at local[cpus]
     val skipQueries = sys.env.get("SPARK_GRAFT_BENCH_SKIP_QUERIES").contains("1")
-    val perQueryCapSec = 75
-    // deadline-near skips make the run INCOMPLETE: the final artifact must
-    // carry truncated:true (an explicit SKIP_QUERIES run is not truncated —
-    // the caller asked for scaling only)
-    var deadlineSkipped = false
-    val queryTimes =
+    val queries =
       if (skipQueries) Seq.empty
       else {
         val spark = session(cpus)
-        val sc = spark.sparkContext
-        // untimed session warmup: parquet scan + codegen'd agg through the
-        // noop sink, so the alphabetically-first timed query (d10, also
-        // the heaviest) stops absorbing the session's JIT/classload cost
-        try SparkEntry.queries("d3_token_stats")(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup failed: ${e.getMessage}")
-        }
-        val timer = new java.util.Timer("bench-query-cap", true)
-        val times = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-          case (name, fn) =>
-            if (elapsed > deadlineSec - perQueryCapSec - 30) {
-              System.err.println(s"[bench] $name skipped: deadline near")
-              deadlineSkipped = true
-              None
-            } else {
-              sc.setJobGroup(name, name, interruptOnCancel = true)
-              val cancel = new java.util.TimerTask {
-                def run(): Unit = {
-                  System.err.println(s"[bench] $name cancelled at ${perQueryCapSec}s")
-                  sc.cancelJobGroup(name)
-                }
-              }
-              timer.schedule(cancel, perQueryCapSec * 1000L)
-              val q0 = System.nanoTime()
-              try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              } finally {
-                cancel.cancel()
-                sc.clearJobGroup()
-              }
-              Some(name -> (System.nanoTime() - q0) / 1e9)
-            }
-        }
-        timer.cancel()
-        spark.stop()
-        times
+        try runQueries(spark, sfDir, selected(Nil), 1,
+          () => elapsed > deadlineSec - QueryCapSec - 30)
+        finally spark.stop()
       }
-
-    val finalJson = renderJson(queryTimes)
+    // deadline-near skips make the run INCOMPLETE (an explicit
+    // SKIP_QUERIES run is not: the caller asked for scaling only)
+    val deadlineSkipped = !skipQueries && queries.size < SparkEntry.queries.size
+    val finalJson = renderJson(queries)
     emitJson(if (deadlineSkipped) markTruncated(finalJson) else finalJson)
     finished = true
     watchdog.interrupt()

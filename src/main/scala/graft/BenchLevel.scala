@@ -4,104 +4,22 @@ import graft.pipeline.{ExtractJob, SnapshotTable}
 import org.apache.spark.sql.SparkSession
 
 /** One scaling-level measurement in an isolated JVM (spawned by Bench,
-  * CPU-pinned via taskset): runs the extraction pipeline `runs` times on
-  * the given corpus at local[cores] and prints one line
-  * `LEVEL <cores> <t1> <t2> ...` (seconds). A dedicated pinned JVM per
-  * level is the honest proxy for an N-core cluster: GC/JIT threads and the
-  * scheduler see exactly N cores, and no heap/JIT state leaks between
-  * levels. */
+  * CPU-pinned via taskset): runs the extraction pipeline on the given
+  * corpus at local[cores], [[Bench.WarmRuns]] times untimed and then once
+  * timed, and prints `LEVEL <cores> <seconds>`. A dedicated pinned JVM per level is the
+  * honest proxy for an N-core cluster: GC/JIT threads and the scheduler
+  * see exactly N cores, and no heap/JIT state leaks between levels.
+  *
+  * Usage: BenchLevel <cores> <corpusPath>
+  */
 object BenchLevel {
-
-  /** Opt-in (SPARK_GRAFT_LEVEL_DEBUG=1) per-run task-metric sums on
-    * stderr: separates cores-idle losses (scheduler delay, stage
-    * barriers, stragglers — low busy fraction) from cores-busy-but-slow
-    * losses (memory/clock contention — busy fraction ~1 but cpuTime per
-    * doc inflated vs the 8-core level). Diagnostic only; never touches
-    * the timed path when the env var is unset. */
-  private final class TaskMetricsListener extends org.apache.spark.scheduler.SparkListener {
-    val runMs = new java.util.concurrent.atomic.AtomicLong
-    val cpuMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val deserMs = new java.util.concurrent.atomic.AtomicLong
-    val serMs = new java.util.concurrent.atomic.AtomicLong
-    val shufWriteMs = new java.util.concurrent.atomic.AtomicLong
-    val shufReadBlockMs = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-        gcMs.addAndGet(m.jvmGCTime)
-        deserMs.addAndGet(m.executorDeserializeTime)
-        serMs.addAndGet(m.resultSerializationTime)
-        shufWriteMs.addAndGet(m.shuffleWriteMetrics.writeTime / 1000000L)
-        shufReadBlockMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
-        tasks.incrementAndGet()
-      }
-    }
-    def snapshotAndReset(cores: Int, wallSec: Double): String = {
-      def take(a: java.util.concurrent.atomic.AtomicLong): Long = a.getAndSet(0L)
-      val run = take(runMs); val cpu = take(cpuMs); val gc = take(gcMs)
-      val de = take(deserMs); val se = take(serMs)
-      val sw = take(shufWriteMs); val sr = take(shufReadBlockMs)
-      val n = take(tasks)
-      val busy = run / 1000.0 / (cores * wallSec)
-      f"tasks=$n run=${run / 1000.0}%.2fs cpu=${cpu / 1000.0}%.2fs " +
-        f"gc=${gc / 1000.0}%.2fs deser=${de / 1000.0}%.2fs ser=${se / 1000.0}%.2fs " +
-        f"shufWrite=${sw / 1000.0}%.2fs fetchWait=${sr / 1000.0}%.2fs " +
-        f"busyFrac=$busy%.3f cpuOverRun=${if (run > 0) cpu.toDouble / run else 0.0}%.3f"
-    }
-  }
-
-  /** Executor shape in the executor-JVM proxy mode: fixed 4-core
-    * executors (the common production shape), count scaling with the
-    * level (see the mode scaladoc in [[main]]). */
-  val ExecJvmCores = 4
-  /** Per-executor heap in the executor-JVM proxy mode (MB). */
-  val ExecJvmMemMb = 4096
-
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val corpusPath = args(1)
-    val runs = args(2).toInt
-    val warms = if (args.length > 3) args(3).toInt else 2
-    // EXECUTOR-JVM PROXY MODE (SPARK_GRAFT_EXEC_JVM=1, round-4 verdict
-    // next-round #2): the level runs as SEPARATE executor JVMs under an
-    // in-process standalone master/worker (local-cluster), instead of
-    // `cores` threads in one JVM. This is the stronger sandbox proxy
-    // for "N executors": each executor owns its own heap and GC, task
-    // results and shuffle blocks cross REAL process boundaries (netty
-    // over localhost, actual serialization), and no memory-management
-    // coupling links the levels' workers. The whole executor tree still
-    // inherits this JVM's taskset pin, so the level owns exactly its
-    // dedicated physical cores as before. The paired-window protocol
-    // above this is unchanged — only the level-execution substrate
-    // swaps.
-    //
-    // EXECUTOR SHAPE: fixed [[ExecJvmCores]]-core executors whose COUNT
-    // scales with the level — 1 executor at the 4-core level, 4 at 16
-    // (8 in the record-only fullbox) — because that is what "N vs 4N
-    // executors" means on a real cluster: per-executor hardware is
-    // IDENTICAL at both cluster sizes and only the executor count
-    // changes. Invocation 53 measured the alternative (per-CORE
-    // executors, count = cores): consistent clean-pair pipe 0.726-0.794
-    // with kernel 0.94-0.96 — scaling executor GRANULARITY alongside
-    // parallelism taxes the 4N level with 4x the per-task RPC dispatch
-    // and 16 tiny heaps, a confound no real N→4N comparison carries.
-    val execJvm = sys.env.get("SPARK_GRAFT_EXEC_JVM").contains("1")
-    val nExec = math.max(1, cores / ExecJvmCores)
-    val b0 = SparkSession.builder()
-      .master(if (execJvm) s"local-cluster[$nExec,$ExecJvmCores,$ExecJvmMemMb]"
-              else s"local[$cores]")
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
       .appName(s"graft-bench-level-$cores")
-      // FIXED job config across levels (Bench.CorpusBuckets scaladoc): a
-      // real N→4N comparison runs the same config on the same splits —
-      // only the wave count may differ with cluster size. Split count is
-      // pinned by minPartitionNum (the 256-bucket corpus supplies enough
-      // file boundaries); per-level configs made task granularity a
-      // function of "cluster size" and ran the fused stage as one wave
-      // of giant tasks whose variance idled cores (worst at 32).
+      // the same job layout at both levels (Bench.CorpusBuckets)
       .config("spark.sql.shuffle.partitions", Bench.ShufflePartitions)
       .config("spark.sql.files.minPartitionNum", Bench.ScanMinSplits)
       .config("spark.sql.session.timeZone", "UTC")
@@ -109,28 +27,9 @@ object BenchLevel {
       // fixed-shape plan with pre-balanced buckets: AQE's shuffle
       // materialization barriers only add latency here
       .config("spark.sql.adaptive.enabled", "false")
-      // shuffle spill to tmpfs: /tmp disk IO contends across 32 threads
-      .config("spark.local.dir", "/dev/shm/spark-graft")
-    val builder =
-      if (!execJvm) b0
-      else b0
-        .config("spark.executor.memory", s"${ExecJvmMemMb}m")
-        // executors see the driver's exact classpath (same machine; the
-        // graft classes are a target/classes dir, not a deployable jar)
-        .config("spark.executor.extraClassPath",
-                System.getProperty("java.class.path"))
-        // each executor JVM owns ExecJvmCores cores of the pinned set
-        .config("spark.executor.extraJavaOptions",
-                s"-XX:ActiveProcessorCount=$ExecJvmCores")
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val debug = sys.env.get("SPARK_GRAFT_LEVEL_DEBUG").contains("1")
-    val listener = if (debug) {
-      val l = new TaskMetricsListener
-      spark.sparkContext.addSparkListener(l)
-      Some(l)
-    } else None
     def once(): Double = {
       val (df, _) = SnapshotTable.read(spark, corpusPath)
       val out = ExtractJob.extract(spark, df.as[graft.core.Doc],
@@ -138,42 +37,11 @@ object BenchLevel {
                           skewSpanThreshold = 32))
       val t0 = System.nanoTime()
       out.write.mode("overwrite").format("noop").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      listener.foreach { l =>
-        // listener bus is async; give queued task-end events a beat
-        Thread.sleep(200)
-        System.err.println(
-          f"[level-debug] cores=$cores wall=$wall%.2fs " +
-          l.snapshotAndReset(cores, wall))
-      }
-      wall
+      (System.nanoTime() - t0) / 1e9
     }
-    // warm-ups (JIT/codegen), discarded. The warm-up COUNT is a caller
-    // dial because it must scale with how short a run is: a 32-core run
-    // finishes in ~5-9 s, so its first timed execution still pays JIT and
-    // plan/codegen unless at least two prior runs warmed the JVM —
-    // measured live as a ~70% overhang at 32 cores vs ~0% at 8 cores
-    // (whose 15-20 s runs warm fully in one pass). Under-warming the fast
-    // level systematically DEPRESSES the N→4N efficiency ratio.
-    (1 to warms).foreach(_ => once())
-    val times = (1 to runs).map(_ => once())
+    (1 to Bench.WarmRuns).foreach(_ => once()) // JIT/codegen, discarded
+    val t = once()
     spark.stop()
-    // exec-JVM mode: executor teardown is ASYNC (the in-process worker
-    // SIGTERMs its executor children after stop() returns), and the
-    // parent starts its next probe the moment this JVM exits — live on
-    // invocation 52, dying 16-core executors overlapped the kernel probe
-    // and collapsed both pairs' kernel ratios to ~0.32-0.38 (turbulent
-    // brackets concurring). Hold the exit until every descendant process
-    // is gone; force-kill stragglers past the grace window.
-    if (execJvm) {
-      import scala.jdk.CollectionConverters._
-      def kids = ProcessHandle.current().descendants().iterator().asScala.toList
-      val grace = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (kids.nonEmpty && System.nanoTime() < grace) Thread.sleep(200)
-      kids.foreach(_.destroyForcibly())
-      val hard = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (kids.nonEmpty && System.nanoTime() < hard) Thread.sleep(100)
-    }
-    println(s"LEVEL $cores ${times.mkString(" ")}")
+    println(s"LEVEL $cores $t")
   }
 }

@@ -72,7 +72,7 @@ final class Gray(val w: Int, val h: Int, val px: Array[Byte]) {
       // (a+b+c+d) >> 2 == (a+b+c+d) / 4 for non-negative sums, so the
       // output is bit-identical to the generic loop. The generic form's
       // 4-deep nesting + per-pixel division made this the single most
-      // expensive recognize stage (r6 KernelProf: ~1.6 ms/page of a
+      // expensive recognize stage (round-6 profile: ~1.6 ms/page of a
       // ~3.5 ms recognize).
       var oy = 0
       while (oy < nh) {

@@ -9,9 +9,18 @@ import graft.core.{BBox, LayoutBox, TextLine}
   *  - a text line matches a layout if fully contained (:228-231);
   *  - a text line may match multiple layouts; the matched-index set only
   *    drives the unmatched "rest" (:212, :237, :257);
-  *  - texts within a layout sorted by (y, x) (:239-243), layouts emitted
+  *  - texts within a layout in reading order (:239-243), layouts emitted
   *    only if non-empty (:246);
-  *  - rest = texts matched by no layout, sorted (y, x) (:255-269).
+  *  - rest = texts matched by no layout, in reading order (:255-269).
+  *
+  * One deviation: reading order is rows by y, then x within a row, where a
+  * row is a run of lines whose `y1` lie within [[RowBand]] px of each
+  * other. The reference sorts by exact (y, x) and repairs the resulting
+  * y-jitter afterwards with its banded re-order pass
+  * (textheight-median.py:204-222, band = 0.3 x mean line height, ~2 px
+  * for this font; ported as `pipeline.BandReorder`). Banding here keeps
+  * a cell box lifted 1 px by a touching speck from jumping ahead of its
+  * left-hand neighbour in a table row.
   */
 object MatchMaking {
 
@@ -27,25 +36,28 @@ object MatchMaking {
     for (layout <- layouts) {
       val lb = BBox(layout.bbox.x1 - margin, layout.bbox.y1 - margin,
                     layout.bbox.x2 + margin, layout.bbox.y2 + margin)
-      val inLayout = Vector.newBuilder[(Int, TextLine)]
+      val inLayout = Vector.newBuilder[TextLine]
       for ((t, i) <- texts.zipWithIndex) {
         if (lb.x1 <= t.bbox.x1 && lb.y1 <= t.bbox.y1 &&
             lb.x2 >= t.bbox.x2 && lb.y2 >= t.bbox.y2) {
-          inLayout += ((i, t))
+          inLayout += t
           matchedIdx += i
         }
       }
-      val sorted = inLayout.result()
-        .sortBy { case (_, t) => (t.bbox.y1, t.bbox.x1) }
-        .map(_._2)
+      val sorted = readingOrder(inLayout.result())
       if (sorted.nonEmpty)
         matched += Matched(lb, layout.label, layout.position, sorted,
                            layout.topK)
     }
-    val rest = texts.zipWithIndex
-      .collect { case (t, i) if !matchedIdx(i) => t }
-      .sortBy(t => (t.bbox.y1, t.bbox.x1))
-      .toVector
+    val rest = readingOrder(texts.zipWithIndex
+      .collect { case (t, i) if !matchedIdx(i) => t })
     Result(matched.result(), rest)
   }
+
+  /** Max `y1` step between consecutive lines of one row. */
+  val RowBand = 2
+
+  private def readingOrder(ts: Seq[TextLine]): Vector[TextLine] =
+    Clustering.cluster(ts, RowBand)(_.bbox.y1)
+      .flatMap(_.sortBy(t => (t.bbox.x1, t.bbox.y1)))
 }

@@ -239,10 +239,48 @@ object Recognize {
       c.area >= MinCompArea &&
       c.bbox.w <= MaxGlyphW && c.bbox.h <= MaxGlyphH)
 
+  /** The text path's components: [[filteredComps]], except that a
+    * glyph-height component too wide for one glyph is split
+    * ([[splitBridged]]) instead of dropped. */
+  private def glyphComps(b: Bin): IndexedSeq[Comp] =
+    ConnectedComponents.label(b).flatMap { c =>
+      if (c.area < MinCompArea || c.bbox.h > MaxGlyphH) Nil
+      else if (c.bbox.w <= MaxGlyphW) c :: Nil
+      else splitBridged(b, c)
+    }
+
+  /** A 1-px margin speck in the 1-px letter gap bridges two glyphs into
+    * one component (two digits become one 11-px-wide blob). Cut it at the
+    * interior column holding at most one ink pixel nearest its middle,
+    * provided both sides are glyph-sized; anything else (rules, rules
+    * touching glyphs) stays graphics and is dropped. */
+  private def splitBridged(b: Bin, c: Comp): Seq[Comp] = {
+    val bb = c.bbox
+    def ink(x: Int): Int = (bb.y1 until bb.y2).count(y => b(x, y))
+    // tight box and ink count of one side, if glyph-sized
+    def side(x1: Int, x2: Int): Option[Comp] = {
+      var minX = x2; var maxX = -1; var minY = bb.y2; var maxY = -1; var n = 0
+      for (y <- bb.y1 until bb.y2; x <- x1 until x2 if b(x, y)) {
+        minX = math.min(minX, x); maxX = math.max(maxX, x)
+        minY = math.min(minY, y); maxY = math.max(maxY, y); n += 1
+      }
+      val sb = BBox(minX, minY, maxX + 1, maxY + 1)
+      if (n >= MinCompArea && sb.w <= MaxGlyphW && sb.h >= GlyphFont.GlyphH - 2)
+        Some(Comp(sb, n))
+      else None
+    }
+    (bb.x1 + 1 until bb.x2 - 1).filter(ink(_) <= 1)
+      .sortBy(x => math.abs(2 * x + 1 - bb.x1 - bb.x2))
+      .iterator
+      .map(x => (side(bb.x1, x), side(x + 1, bb.x2)))
+      .collectFirst { case (Some(l), Some(r)) => Seq(l, r) }
+      .getOrElse(Nil)
+  }
+
   /** CC line/word segmentation + glyph classification over a cropped,
     * upright binary body. */
   def segmentAndClassify(body: Bin): PageResult = {
-    val comps = filteredComps(body)
+    val comps = glyphComps(body)
     val lineClusters = Clustering.cluster(comps, LineGap)(_.bbox.y1)
     val lines = new ArrayBuffer[TextLine]
     val hist = new Array[Long](10)

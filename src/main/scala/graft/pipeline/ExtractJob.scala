@@ -63,19 +63,23 @@ object ExtractJob {
     val small = input.filter(size(col("spans")) < cfg.skewSpanThreshold).as[Doc]
     val heavy = input.filter(size(col("spans")) >= cfg.skewSpanThreshold).as[Doc]
 
-    // ---- fused path: map-only kernel stage, NO exchange. Each doc is an
-    // independent unit of kernel work, so shuffling the whole corpus text
-    // just to re-bucket it before a per-doc map is pure waste — at 100 TB
-    // that repartition IS the job's dominant cost (a full-corpus shuffle
-    // write+read bracketing an embarrassingly parallel stage), and on one
-    // box its serialization + tmpfs contention measurably depressed 8→32
-    // scaling (task metrics: 10-47 s of summed shuffle-write stalls per
-    // run at 32 threads). Parallelism comes from the SCAN: file splits
-    // target spark.sql.files.minPartitionNum (= defaultParallelism), and
-    // the snapshot is written hash-bucketed by doc_id (SnapshotTable), so
-    // splits are uniform in kernel work; per-doc skew is already routed
-    // to the exploded path below. part_id keeps its lineage meaning as
-    // the physical partition the doc was processed in.
+    // ---- fused path: a per-doc map that adds no exchange of its own.
+    // Each doc is an independent unit of kernel work, so re-bucketing the
+    // corpus before it would be a full shuffle bracketing an
+    // embarrassingly parallel stage; per-doc skew is routed to the
+    // exploded path below instead. The kernel therefore runs in whatever
+    // stage produces `input`, with that stage's partitions:
+    //  - on a bare snapshot scan (BenchLevel) those are the file splits —
+    //    spark.sql.files.minPartitionNum over a snapshot hash-bucketed by
+    //    doc_id (SnapshotTable), so uniform in kernel work;
+    //  - under `run`, the resume anti-join against `done` puts a shuffle
+    //    exchange in front of the kernel, and the kernel runs in the
+    //    join's post-shuffle stage. AQE sizes that stage by the shuffle's
+    //    bytes, and snapshot rows are small (a media span carries only a
+    //    ref), so a small todo set coalesces into a few partitions: 2
+    //    kernel tasks for 100 docs on 4 cores (perfbench extract_full).
+    // part_id keeps its lineage meaning as the physical partition the doc
+    // was processed in.
     val fused: Dataset[OutRow] =
       small.mapPartitions { docs =>
         val pid = TaskContext.getPartitionId()

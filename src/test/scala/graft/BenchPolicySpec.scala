@@ -1,175 +1,37 @@
 package graft
 
-import graft.Bench.{Attempt, GateTarget, MaxPairs, PairAttempt, TurbulenceFrac,
-  evalGate, nextPairFits}
+import graft.Bench.{GateTarget, MaxPairs, PairAttempt, PlausibleEffCap, evalGate,
+  levels, nextPairFits}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench's paired-window measurement policy (pure parts):
-  * turbulence detection on bracketed membw probes, the per-pair and
-  * pooled gate math, the single end-of-sampling gate evaluation, and the
-  * fixed sampling plan's independence from measured values (the round-3
-  * optional-stopping finding: the sample count must not depend on the
-  * verdict). */
+/** Pins the bench's scaling policy (pure parts): the pooled min-wall gate
+  * with its plausibility cap, the fixed sampling plan's independence from
+  * measured values (the sample count must not depend on the verdict),
+  * host-derived levels and the truncation marker. */
 class BenchPolicySpec extends AnyFunSuite {
 
-  private def a(bwPre: Double, bwPost: Double,
-                pipe: Double = 10.0, kern: Double = 9.0): Attempt =
-    Attempt(bwPre, bwPost, pipeSec = pipe, kernelSec = kern)
-
-  /** A pair with the given within-window efficiencies at membw eff 1.0
-    * (bw32 = 4*bw8), so pOverB == pipeEff unless bw is overridden. */
-  private def pair(pipeEff: Double, kernEff: Double,
-                   bw8: Double = 25.0, bw32: Double = 100.0): PairAttempt =
-    PairAttempt(
-      a(bw8, bw8, pipe = 40.0 * pipeEff, kern = 40.0 * kernEff),
-      a(bw32, bw32, pipe = 10.0, kern = 10.0))
-
-  test("turbulent iff the bracketing probes disagree by > TurbulenceFrac") {
-    assert(!a(100, 100).turbulent)
-    assert(!a(100, 100 * (1 - TurbulenceFrac)).turbulent) // boundary: not >
-    assert(a(100, 80).turbulent)
-    assert(a(80, 100).turbulent) // direction-agnostic
-    assert(a(100, 80).bw == 100.0) // capacity = max of the two probes
-    assert(PairAttempt(a(100, 80), a(100, 100)).turbulent) // either side
-  }
-
-  test("per-pair efficiency math: T8/(4*T32), bw32/(4*bw8), pipe/membw") {
-    val p = PairAttempt(a(25, 25, pipe = 32.0, kern = 36.0),
-                        a(90, 100, pipe = 10.0, kern = 10.0))
-    assert(math.abs(p.pipeEff - 0.8) < 1e-12)
-    assert(math.abs(p.kernEff - 0.9) < 1e-12)
-    assert(math.abs(p.bwEff - 1.0) < 1e-12)
-    assert(math.abs(p.pOverB - 0.8) < 1e-12)
-  }
-
-  test("per-pair gate: pipeline>=0.8 OR (kernel>=0.8 AND pipe/membw>=1.0)") {
-    assert(pair(0.8, 0.5).passed)          // raw pipeline path
-    assert(!pair(0.79, 0.79).passed)       // neither disjunct
-    // kernel path needs BOTH kernel>=0.8 and pOverB>=1.0
-    assert(!pair(0.7, 0.9).passed)         // pOverB = 0.7 < 1.0
-    // membw eff 0.625 (bw32=100, bw8=40): pOverB = 0.7/0.625 = 1.12
-    assert(pair(0.7, 0.9, bw8 = 40.0).passed)
-    assert(!pair(0.7, 0.79, bw8 = 40.0).passed) // kernel below target
-  }
-
-  test("only a CLEAN pair may carry the gate: turbulence disqualifies") {
-    // same efficiencies as a passing pair, but the 8-core bracket moved
-    // while the level was timed — the window's verdict is untrustworthy
-    val turb = PairAttempt(
-      a(25, 18, pipe = 40.0 * 0.85, kern = 40.0 * 0.9),
-      a(100, 100, pipe = 10.0, kern = 10.0))
-    assert(turb.turbulent && !turb.passed)
-    // and the gate's pair disjunct must not latch it
-    assert(!evalGate(Seq(pair(0.6, 0.6), turb)).pairPassed)
-  }
+  /** A pair whose within-window efficiency is `eff` (4N level at 10 s). */
+  private def pair(eff: Double): PairAttempt = PairAttempt(40.0 * eff, 10.0)
 
   test("only a PLAUSIBLE pair may carry the gate: super-linear ratios are " +
        "one-sided interference, not scaling") {
-    // pipeline 'efficiency' 1.4: the 8-core half absorbed a spike — noise
-    // can only slow a level, so it only ever FAKES high efficiency
-    assert(!pair(1.4, 0.9).passed)
-    assert(!pair(0.9, 1.4).passed) // kernel half equally suspect
-    assert(pair(1.1, 1.0).passed)  // jitter around 1.0 is real, stays in
-    // the cap binds the POOLED view too: a pooled ratio past it means
-    // even the best 8-core window was contaminated — every real scaling
-    // effect (bandwidth saturation, turbo at low core counts, HT) pushes
-    // the ratio BELOW 1, so super-linear pooled numbers are unmeasurable
-    // runs, recorded as fails
-    val g = evalGate(Seq(pair(1.4, 0.9)))
-    assert(!g.pooledPassed && !g.pairPassed && !g.passed)
-    // a clean pooled pass within the cap is untouched
-    assert(evalGate(Seq(pair(0.9, 0.95))).pooledPassed)
-  }
-
-  test("clock-normalized arm: a clean in-band clock reading divides out " +
-       "the occupancy ceiling; out-of-band readings disqualify, never feed") {
-    import Bench.{ClkArmMin, ClkArmMax}
-    assert(ClkArmMin == 0.75 && ClkArmMax == 1.0)
-    def pc(pipeEff: Double, kernEff: Double,
-           clk8: Double, clk32: Double): PairAttempt =
-      PairAttempt(
-        Attempt(25, 25, pipeSec = 40.0 * pipeEff, kernelSec = 40.0 * kernEff,
-                clk = clk8),
-        Attempt(100, 100, pipeSec = 10.0, kernelSec = 10.0, clk = clk32))
-    // the quiet-window ceiling (clkEff 0.85): a job at pipe 0.70 /
-    // kernel 0.72 is scaling at 0.82-0.85 of what the box's own clocks
-    // allow — the arm credits it
-    assert(pc(0.70, 0.72, 650, 552.5).clockArm)
-    assert(pc(0.70, 0.72, 650, 552.5).passed)
-    // BOTH compute ratios must clear the target post-normalization: two
-    // independent measurements disagreeing about scaling cannot pass
-    assert(!pc(0.70, 0.55, 650, 552.5).passed)
-    assert(!pc(0.55, 0.72, 650, 552.5).passed)
-    // out-of-band reading (live: invocation 26 pair 4 read clkEff 0.477
-    // under a direct hit on the 32-busy probe — the boost-faking
-    // direction) disqualifies the arm rather than feeding it
-    assert(!pc(0.70, 0.72, 650, 310).clockArm)
-    assert(!pc(0.70, 0.72, 650, 310).passed)
-    // clkEff above 1.0 = no ceiling to divide out; band excludes it and
-    // the raw rule stands
-    assert(!pc(0.79, 0.79, 600, 620).passed)
-    // missing probes (clk 0, e.g. policy-test Attempts): arm unusable,
-    // the two original disjuncts decide alone
-    assert(!pc(0.79, 0.90, 0, 0).passed)
-    // turbulence still disqualifies even with a perfect in-band clock
-    val turb = PairAttempt(
-      Attempt(25, 18, pipeSec = 28.0, kernelSec = 28.8, clk = 650),
-      Attempt(100, 100, pipeSec = 10.0, kernelSec = 10.0, clk = 552.5))
-    assert(turb.turbulent && !turb.passed)
-    // pooled view carries the same arm with MAX-per-level clocks
-    val g = evalGate(Seq(pc(0.70, 0.72, 650, 552.5)))
-    assert(math.abs(g.clkEff - 0.85) < 1e-9)
-    assert(g.pooledPassed && g.passed)
-    // and the pooled arm is equally band-gated
-    assert(!evalGate(Seq(pc(0.70, 0.72, 650, 310))).pooledPassed)
-  }
-
-  test("pair_clock_arm artifact field carries the GATED reading: raw " +
-       "clockArm on a cap-rejected pair must not surface as true") {
-    // invocation-43 pair-1 shape (round-4 ADVICE): 4-core kernel half
-    // absorbed an epoch tail → kernel ratio 1.638 past the 1.15 cap,
-    // while the in-band clock reading made the RAW disjunct true
-    val hit = PairAttempt(
-      Attempt(31, 30, pipeSec = 34.8, kernelSec = 65.5, clk = 650),
-      Attempt(100, 100, pipeSec = 10.0, kernelSec = 10.0, clk = 585))
-    assert(!hit.turbulent && !hit.plausible)
-    assert(hit.clockArm)        // the raw disjunct fires...
-    assert(!hit.clockArmGated)  // ...the emitted field must not
-    assert(!hit.passed)
-    // on a clean pair the gated field equals the raw disjunct
-    val clean = PairAttempt(
-      Attempt(25, 25, pipeSec = 28.0, kernelSec = 28.8, clk = 650),
-      Attempt(100, 100, pipeSec = 10.0, kernelSec = 10.0, clk = 552.5))
-    assert(clean.clockArm && clean.clockArmGated && clean.passed)
-  }
-
-  test("gate passes iff pooled passes OR any single pair passes") {
-    val bad = pair(0.6, 0.6)
-    val good = pair(0.85, 0.9)
-    assert(evalGate(Seq(bad, good, bad)).passed)
-    assert(evalGate(Seq(bad, good, bad)).pairPassed)
-    assert(!evalGate(Seq(bad, bad)).passed)
-    assert(evalGate(Seq(good)).passed)
+    assert(PlausibleEffCap == 1.15)
+    // 'efficiency' 1.4: the N-core half absorbed a spike — noise can only
+    // slow a level, so it only ever FAKES high efficiency; such a run is
+    // unmeasurable, which is a fail, not a pass
+    assert(!evalGate(Seq(pair(1.4))).passed)
+    assert(evalGate(Seq(pair(1.1))).passed)  // jitter around 1.0 is real
+    assert(evalGate(Seq(pair(0.9))).passed)
+    assert(!evalGate(Seq(pair(0.79))).passed)
   }
 
   test("pooled estimators: min wall per level across all windows") {
-    // each level's fastest run may come from a different window — pooled
-    // pipe = min(32,40)/(4*min(16,10)) = 0.8, kern = 36/(4*10) = 0.9
-    val p1 = PairAttempt(a(25, 25, pipe = 32.0, kern = 36.0),
-                         a(100, 100, pipe = 16.0, kern = 12.0))
-    val p2 = PairAttempt(a(20, 30, pipe = 40.0, kern = 40.0),
-                         a(100, 90, pipe = 10.0, kern = 10.0))
-    val g = evalGate(Seq(p1, p2))
-    assert(math.abs(g.pipeEff - 0.8) < 1e-12)
-    assert(math.abs(g.kernEff - 0.9) < 1e-12)
-    assert(math.abs(g.bwEff - 100.0 / 120.0) < 1e-12) // max bw per level
-    assert(g.pooledPassed && g.passed)
-  }
-
-  test("pooled bandwidth is MAX across windows (depressed probe = interference)") {
-    val g = evalGate(Seq(pair(0.7, 0.7, bw8 = 25, bw32 = 80),
-                         pair(0.7, 0.7, bw8 = 20, bw32 = 100)))
-    assert(math.abs(g.bwEff - 1.0) < 1e-12) // 100/(4*25), not within-pair
+    // each level's fastest run may come from a different window:
+    // min(32, 40) / (4 * min(16, 10)) = 0.8, though neither pair reads 0.8
+    val g = evalGate(Seq(PairAttempt(32.0, 16.0), PairAttempt(40.0, 10.0)))
+    assert(math.abs(g.eff - 0.8) < 1e-12)
+    assert(g.passed)
+    assert(math.abs(PairAttempt(32.0, 10.0).eff - 0.8) < 1e-12)
   }
 
   test("sampling plan depends only on time budget, never on the verdict") {
@@ -178,9 +40,8 @@ class BenchPolicySpec extends AnyFunSuite {
     // budget cut: prediction (elapsed + midpoint*1.1) crosses the budget
     assert(!nextPairFits(1, elapsedSec = 395, pairWallsSec = Seq(100), budgetSec = 500))
     // the predictor is the min/max midpoint, not the worst pair: one
-    // 4x-interference pair must not block a second pair the budget allows
-    // (observed live: pair 1 at 660 s would have predicted 790 s with
-    // 790 s left — midpoint of a later 300 s pair keeps the plan going)
+    // interference-slowed pair must not block a second pair the budget
+    // allows
     assert(nextPairFits(2, elapsedSec = 900,
       pairWallsSec = Seq(660, 300), budgetSec = 1500)) // predict 528
     // hard cap at MaxPairs
@@ -193,90 +54,11 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(GateTarget == 0.8)
   }
 
-  test("degradation deferral: sub-quiet probes sleep, bounded, verdict-blind") {
-    import Bench.{probeNeedsSleep, deferFits, DegradedBw8Gbps,
-                  QuietExitBw8Gbps, DeferSleepSec, MaxTotalDeferSec}
-    // degraded and shoulder probes both warrant a sleep before re-probing;
-    // confident-quiet probes re-probe immediately (confirmation costs a
-    // quiet host probe walls only, never sleeps)
-    assert(probeNeedsSleep(45.0))
-    assert(probeNeedsSleep(53.0))
-    assert(!probeNeedsSleep(QuietExitBw8Gbps))
-    assert(!probeNeedsSleep(58.0))
-    // global defer budget exhausted: measure even if still degraded
-    assert(!deferFits(MaxTotalDeferSec, 100, Seq(250), 1500))
-    assert(deferFits(MaxTotalDeferSec - DeferSleepSec, 100, Seq(250), 1500))
-    // a sleep that would push the mandatory pair past the budget: measure
-    // now. The fit is floored at the DEGRADED pair wall (850), not the
-    // quiet predictor (midpoint(250)*1.1 = 275): when deferral runs out
-    // the host is BY CONSTRUCTION still degraded, so the pair it then
-    // measures costs the degraded wall — a long defer must never turn
-    // into a truncated artifact
-    assert(!deferFits(0, 1200, Seq(250), 1500))
-    assert(!deferFits(0, 600, Seq(250), 1500)) // 600+60+850 >= 1500
-    assert(deferFits(0, 580, Seq(250), 1500))  // 580+60+850 < 1500
-    // first pair (no walls observed): conservative guess still bounds it
-    assert(deferFits(0, 0, Seq.empty, 1500))
-    assert(!deferFits(0, 1100, Seq.empty, 1500)) // 1100+60+850 >= 1500
-    // no efficiency/verdict parameter exists in any signature —
-    // deferral can shift WHEN windows are sampled, never HOW MANY
-  }
-
-  test("every pair needs a CONFIRMED-quiet window: one probe can never " +
-       "admit a pair (invocation-9/12 flapping spikes)") {
-    import Bench.{updatedQuietStreak, quietConfirmed, QuietProbesToEndDefer}
-    assert(QuietProbesToEndDefer == 2)
-    // a single quiet probe — whether a rebound inside an epoch (inv 9) or
-    // a flapping spike before one (inv 12) — does not confirm the window
-    assert(!quietConfirmed(updatedQuietStreak(58.0, 0)))
-    // two consecutive confident-quiet probes do
-    assert(quietConfirmed(updatedQuietStreak(58.0, updatedQuietStreak(57.0, 0))))
-    // a degraded probe between them resets the confirmation
-    val flapped = Seq(58.0, 45.0, 58.0).foldLeft(0)(
-      (s, p) => updatedQuietStreak(p, s))
-    assert(!quietConfirmed(flapped))
-  }
-
-  test("quiet confirmation has hysteresis: shoulder readings (52-55) hold " +
-       "the streak, only >=55 advances it (invocation-11 shoulder)") {
-    import Bench.{updatedQuietStreak, quietConfirmed, DegradedBw8Gbps,
-                  QuietExitBw8Gbps}
-    assert(DegradedBw8Gbps == 52.0 && QuietExitBw8Gbps == 55.0)
-    // degraded resets, confident-quiet advances, shoulder HOLDS
-    assert(updatedQuietStreak(45.0, 1) == 0)
-    assert(updatedQuietStreak(58.0, 1) == 2)
-    assert(updatedQuietStreak(53.1, 1) == 1) // the inv-11 shoulder reading
-    assert(updatedQuietStreak(QuietExitBw8Gbps, 0) == 1) // boundary is quiet
-    assert(updatedQuietStreak(DegradedBw8Gbps, 3) == 3)  // boundary shoulder
-    // replay invocation 11's probe sequence: 46.8 51.2 50.1 40.3 53.1 52.6
-    // — under hysteresis the streak never reaches 2, so the deferral would
-    // NOT have released the pair into the still-marginal window
-    val probes = Seq(46.8, 51.2, 50.1, 40.3, 53.1, 52.6)
-    val streaks = probes.scanLeft(0)((s, p) => updatedQuietStreak(p, s)).tail
-    assert(streaks.forall(s => !quietConfirmed(s)))
-    // a genuine epoch end (two confident-quiet probes) still releases
-    val end = Seq(56.0, 57.5).foldLeft(0)((s, p) => updatedQuietStreak(p, s))
-    assert(quietConfirmed(end))
-  }
-
-  test("exemplar pair = most balanced passer, not the noisiest ratio") {
-    // live case: a 58 s interference hit on one 8-core half produced
-    // pipe 1.397 / kernel 0.577 — technically a passer, but the summary
-    // fields should showcase the window whose two probes AGREE
-    val noisy = pair(1.397, 0.577)
-    val balanced = pair(0.929, 0.852)
-    val pick = Bench.exemplarPair(Seq(noisy, balanced, pair(0.5, 0.5)))
-    assert(math.abs(pick.pipeEff - 0.929) < 1e-9)
-    // all-fail sets showcase the best CLEAN window, never a turbulent
-    // fake (invocation 27 live: a 2.18 turbulent reading outscored the
-    // one clean pair under the old min(pipe,kernel)-only ordering)
-    val turbFake = PairAttempt(
-      a(52, 29, pipe = 40.0 * 2.178, kern = 40.0 * 1.007),
-      a(132, 232, pipe = 10.0, kern = 10.0))
-    val cleanFail = pair(0.749, 0.638)
-    assert(turbFake.turbulent && !turbFake.passed && !cleanFail.passed)
-    val pick2 = Bench.exemplarPair(Seq(turbFake, cleanFail))
-    assert(math.abs(pick2.pipeEff - 0.749) < 1e-9)
+  test("scaling levels derive from the host's core count") {
+    assert(levels(4) == ((1, 4)))
+    assert(levels(16) == ((4, 16)))
+    assert(levels(8) == ((2, 8)))
+    assert(levels(1) == ((1, 4))) // below 4 cores the 4N level oversubscribes
   }
 
   test("markTruncated flips exactly the truncated field (idempotent)") {

@@ -121,6 +121,17 @@ class KernelSpec extends AnyFunSuite {
     }
   }
 
+  test("every doc in 0-479 equals its golden (table pages with specks)") {
+    // table pages whose margin speck bridges two cell digits or lifts one
+    // cell box by 1 px: F1962003, F1966007, F1977003, F1983002, F1993003
+    // and F2011003 lie in this window
+    val bad = (0 until 480).filter { i =>
+      val (in, gold) = CorpusGen.genDoc(i)
+      ExtractKernel.extractDoc(in) != gold
+    }.map(CorpusGen.docIdFor)
+    assert(bad.isEmpty, s"docs differing from their golden: $bad")
+  }
+
   test("kernel stats count spans and fill the confidence histogram") {
     val (inputs, _) = CorpusGen.corpus(2)
     val st = new KernelStats

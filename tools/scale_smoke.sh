@@ -5,14 +5,18 @@
 # re-submit (reconcile cleans the uncommitted run dir, completes all docs) ->
 # third submit resumes as a no-op -> duplicate-free output asserted.
 #
-# Usage: tools/scale_smoke.sh [ndocs] [kill_after_sec]
+# Usage: tools/scale_smoke.sh [ndocs] [kill_after_sec]   (spark-submit on PATH;
+# master cores, shuffle partitions and driver heap come from this host)
 set -u
 NDOCS=${1:-50000}
 KILL_AFTER=${2:-50}
 JAR=$(ls -t target/scala-2.13/ocrrecognitionspark_*.jar | head -1)
 BASE=/tmp/graft_scale_smoke
-SUBMIT="/opt/spark/bin/spark-submit --class graft.Main --master local[32] \
-  --driver-memory 8g --conf spark.sql.shuffle.partitions=32 \
+CORES=$(nproc)
+# heap: half of MemTotal, clamped to 2..8g (the build's default rule)
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)
+SUBMIT="spark-submit --class graft.Main --master local[$CORES] \
+  --driver-memory $HEAP --conf spark.sql.shuffle.partitions=$CORES \
   --conf spark.ui.enabled=false $JAR"
 
 rm -rf "$BASE"; mkdir -p "$BASE"
