@@ -195,21 +195,22 @@ object Bench {
     all.toSeq.sortBy(_._1).filter { case (n, _) => names.isEmpty || names.contains(n) }
   }
 
-  /** The query loop of phase 2 and the `queries` mode: an untimed warm-up,
-    * then each query `repeats` times through the noop sink. A
+  /** The query loop of phase 2 and the `queries` mode: an untimed warm-up
+    * run of the first query, then each query `repeats` times through the noop sink. A
     * query is left out while `skip()` holds; one that throws on any
     * repeat (or is cancelled at the cap) reports `None`. */
   private def runQueries(spark: SparkSession, sfDir: String,
                          queries: Seq[(String, Query)], repeats: Int,
                          skip: () => Boolean): Seq[(String, Option[Double])] = {
     val sc = spark.sparkContext
-    // untimed session warm-up: parquet scan + codegen'd agg, so the first
-    // timed query stops absorbing the session's JIT/classload cost
-    try SparkEntry.queries("d3_token_stats")(spark, sfDir)
-      .write.mode("overwrite").format("noop").save()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
-    }
+    // untimed session warm-up with the first query itself, so its timed
+    // run stops absorbing the session's and its own first-run
+    // JIT/classload cost
+    for ((name, fn) <- queries.headOption)
+      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup ($name) failed: ${e.getMessage}")
+      }
     val timer = new java.util.Timer("bench-query-cap", true)
     def once(name: String, fn: Query): Option[Double] = {
       sc.setJobGroup(name, name, interruptOnCancel = true)

@@ -1,6 +1,6 @@
 package graft.kernel
 
-import graft.core.{Doc, Span}
+import graft.core.{Crop, Doc, Span}
 import graft.img.Gray
 import graft.synth.PageRenderer
 
@@ -57,27 +57,33 @@ object ExtractKernel {
     val out = Vector.newBuilder[Span]
     var i = 0
     while (i < ordered.length) {
-      val s = ordered(i)
-      if (i != coverIdx) {
-        s.kind match {
-          case "media" =>
-            val page = Recognize.recognizeStored(store.decode(s.media_ref), crop)
-            stats.addHist(page.confHist)
-            out += Span("media", page.text, s.media_ref, s.offset)
-            stats.mediaSpanCount += 1
-          case "text" =>
-            out += Span("text", BoilerplateStrip.strip(s.text), "", s.offset)
-            stats.textSpanCount += 1
-          case other =>
-            throw new IllegalArgumentException(
-              s"unknown span kind '$other' in ${doc.doc_id}")
-        }
-        stats.spanCount += 1
-      }
+      if (i != coverIdx) out += extractSpan(ordered(i), crop, store, stats)
       i += 1
     }
     stats.docCount += 1
     Doc(doc.doc_id, out.result())
+  }
+
+  /** Extract one non-cover span — the per-span seam shared by the fused
+    * path ([[extractDoc]]) and ExtractJob's exploded path. Adds the span
+    * to `stats` (kind counts, span count, confidence histogram). */
+  def extractSpan(span: Span, crop: Crop, store: MediaStore,
+                  stats: KernelStats): Span = {
+    val out = span.kind match {
+      case "media" =>
+        val page = Recognize.recognizeStored(store.decode(span.media_ref), crop)
+        stats.addHist(page.confHist)
+        stats.mediaSpanCount += 1
+        Span("media", page.text, span.media_ref, span.offset)
+      case "text" =>
+        stats.textSpanCount += 1
+        Span("text", BoilerplateStrip.strip(span.text), "", span.offset)
+      case other =>
+        throw new IllegalArgumentException(
+          s"unknown span kind '$other' at offset ${span.offset}")
+    }
+    stats.spanCount += 1
+    out
   }
 
   def extractDoc(doc: Doc): Doc = extractDoc(doc, SyntheticStore, new KernelStats)

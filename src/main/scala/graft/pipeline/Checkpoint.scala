@@ -4,26 +4,26 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Checkpoint + lineage tables (north_rule: "resumable from checkpoint with
+/** Lineage table (north_rule: "resumable from checkpoint with
   * per-partition lineage + metrics"). Layout:
   *
-  *   <ckptDir>/done/run=<runId>/     (snapshot_id, doc_id, part_id, completed_at)
   *   <ckptDir>/lineage/run=<runId>/  (snapshot_id, part_id, doc_count, span_count,
   *                                    media_span_count, text_span_count,
   *                                    conf_histogram: array<long>[10], completed_at)
   *
-  * Resume = left-anti join of the input on done(snapshot_id) — strictly
-  * better than the reference's max-filename watermark
-  * (joradp_parse.py:101-114), which can skip unprocessed smaller names.
+  * There is no separate record of done docs: a doc is done for snapshot S
+  * when it sits in a committed (`_SUCCESS`) output dir `run=<S>_<nonce>`,
+  * and resume is a left-anti join of the input on those dirs' doc_id
+  * column (ExtractJob.run) — strictly better than the reference's
+  * max-filename watermark (joradp_parse.py:101-114), which can skip
+  * unprocessed smaller names.
   *
-  * Both tables are written per run into a `run=<runId>` partition
-  * subdirectory with Overwrite semantics, which makes [[append]]
-  * IDEMPOTENT per run: a crash anywhere inside it leaves a state that a
-  * re-append for the same runId repairs exactly (the done subdir is
-  * rewritten, never double-appended). The lineage subdir's `_SUCCESS`
-  * marker is the commit point — lineage is written after done, so its
-  * marker implies both tables are complete ([[isRecorded]]); ExtractJob's
-  * startup reconcile re-appends any output run the marker is missing for.
+  * Lineage is written per run into a `run=<runId>` subdirectory with
+  * Overwrite semantics, which makes [[append]] IDEMPOTENT per run: a
+  * crash inside it leaves a state that a re-append for the same runId
+  * repairs exactly. The lineage subdir's `_SUCCESS` marker is the run's
+  * commit point ([[isRecorded]]); ExtractJob's startup reconcile
+  * re-appends any committed output run the marker is missing for.
   */
 object Checkpoint {
 
@@ -32,28 +32,11 @@ object Checkpoint {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** doc_ids already completed for this input snapshot. */
-  def doneDocs(spark: SparkSession, ckptDir: String, snapshotId: String): DataFrame = {
-    val p = s"$ckptDir/done"
-    if (exists(spark, p))
-      spark.read.parquet(p)
-        .filter(col("snapshot_id") === snapshotId)
-        .select("doc_id").distinct()
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "doc_id", org.apache.spark.sql.types.StringType))))
-  }
-
   /** Done-doc total for the snapshot, summed from the LINEAGE table — the
     * per-partition metadata rows, 3-4 orders of magnitude smaller than the
-    * one-row-per-doc done table (which at 100 TB must never be scanned for
-    * a log line). Unlike the driver-side counter file this replaces, it
-    * cannot go stale: the same write that records a run's docs as done is
-    * what this sums, and [[append]]'s per-run Overwrite keeps re-appended
-    * (reconciled) runs counted exactly once. */
+    * one-row-per-doc output (which at 100 TB must never be scanned for a
+    * log line). It cannot go stale: [[append]]'s per-run Overwrite keeps
+    * re-appended (reconciled) runs counted exactly once. */
   def doneTotal(spark: SparkSession, ckptDir: String, snapshotId: String): Long = {
     val p = s"$ckptDir/lineage"
     if (!exists(spark, p)) 0L
@@ -63,9 +46,8 @@ object Checkpoint {
         .agg(coalesce(sum(col("doc_count")), lit(0L))).head().getLong(0)
   }
 
-  /** True iff [[append]] for this run committed completely (lineage is
-    * written last, so its `_SUCCESS` marker implies the done rows too).
-    * A run whose subdirectory was absorbed by [[compact]] is still
+  /** True iff [[append]] for this run committed (its lineage `_SUCCESS`
+    * marker exists). A run whose subdirectory was absorbed by [[compact]] is still
     * recorded: its id lives in a consolidated dir's manifest. */
   def isRecorded(spark: SparkSession, ckptDir: String, runId: String): Boolean =
     isRecorded(spark, ckptDir, runId, compactedRunIds(spark, ckptDir))
@@ -80,24 +62,18 @@ object Checkpoint {
     exists(spark, s"$ckptDir/lineage/run=$runId/_SUCCESS") ||
     compacted.contains(runId)
 
-  /** Record a run's written OutRows as done + lineage, idempotently: both
-    * tables get a `run=<runId>` subdirectory written with Overwrite, so
-    * calling this again for the same run (the crash-recovery path) repairs
-    * rather than duplicates. The scan is column-pruned: only the small
-    * metadata columns are read, never the span payloads. Returns the docs
-    * completed this run — taken from the (tiny, cached) lineage
-    * aggregation so callers need no extra count job over the run's files. */
+  /** Record a run's written OutRows as lineage, idempotently: the table
+    * gets a `run=<runId>` subdirectory written with Overwrite, so calling
+    * this again for the same run (the crash-recovery path) repairs rather
+    * than duplicates. The scan is column-pruned: only the small metadata
+    * columns are read, never the span payloads. Returns the docs completed
+    * this run — observed on the lineage write itself, so callers need no
+    * extra count job over the run's files. */
   def append(spark: SparkSession, ckptDir: String, snapshotId: String,
              runId: String, written: DataFrame): Long = {
     val ts = System.currentTimeMillis()
-    written.select(
-        lit(snapshotId).as("snapshot_id"),
-        col("doc_id"),
-        col("part_id"),
-        lit(ts).as("completed_at"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$ckptDir/done/run=$runId")
-
-    val lineageRows = written.groupBy(col("part_id"))
+    val obs = new org.apache.spark.sql.Observation()
+    written.groupBy(col("part_id"))
       .agg(
         count(lit(1)).as("doc_count"),
         sum(col("span_count")).as("span_count"),
@@ -115,13 +91,12 @@ object Checkpoint {
         col("media_span_count"), col("text_span_count"),
         col("conf_histogram"),
         lit(ts).as("completed_at"))
-      .persist()
-    lineageRows.write.mode(SaveMode.Overwrite)
+      // observed above the aggregation: below it, AQE drops the metrics
+      // of an empty run once it replaces the empty shuffle stage
+      .observe(obs, coalesce(sum(col("doc_count")), lit(0L)).as("docs"))
+      .write.mode(SaveMode.Overwrite)
       .parquet(s"$ckptDir/lineage/run=$runId")
-    val docsThisRun = lineageRows
-      .agg(coalesce(sum(col("doc_count")), lit(0L))).head().getLong(0)
-    lineageRows.unpersist()
-    docsThisRun
+    obs.get("docs").asInstanceOf[Long]
   }
 
   def lineage(spark: SparkSession, ckptDir: String): DataFrame =
@@ -136,8 +111,8 @@ object Checkpoint {
   /** Manifest file inside a consolidated LINEAGE dir: one absorbed runId
     * per line. Underscore-prefixed, so parquet partition discovery skips
     * it. Its existence is the compaction's COMMIT POINT (mirror of
-    * [[append]]'s lineage-last rule): before it, a crash rolls the
-    * consolidated dirs back; after it, a crash finishes by deleting the
+    * [[append]]'s `_SUCCESS` marker): before it, a crash rolls the
+    * consolidated dir back; after it, a crash finishes by deleting the
     * absorbed source dirs ([[repairCompaction]]). */
   private val ManifestName = "_manifest.txt"
 
@@ -173,28 +148,29 @@ object Checkpoint {
     }
   }
 
-  /** Compact the checkpoint tables: when the number of `run=` subdirs in
-    * the lineage table exceeds `maxRunDirs`, rewrite done + lineage into
-    * ONE consolidated `run=compact_<nonce>` pair and delete the absorbed
-    * sources, so the resume anti-join's listing/partition-discovery cost
+  /** Compact the lineage table: when the number of its `run=` subdirs
+    * exceeds `maxRunDirs`, rewrite them into ONE consolidated
+    * `run=compact_<nonce>` dir and delete the absorbed sources, so the
+    * lineage listing ([[isRecorded]], [[compactedRunIds]], [[doneTotal]])
     * stays bounded over hundreds of incremental runs instead of growing
-    * one subdir pair per run. Row contents are unchanged (both tables
-    * carry snapshot_id per row, so mixed-snapshot consolidation is
-    * lossless); [[doneDocs]]/[[doneTotal]]/[[lineage]] read the same data
-    * after as before.
+    * one subdir per run. Row contents are unchanged (every row carries
+    * snapshot_id, so mixed-snapshot consolidation is lossless);
+    * [[doneTotal]]/[[lineage]] read the same data after as before.
+    *
+    * Contract: the checkpoint dir must live on a file system whose rename
+    * is atomic (local FS, HDFS). The manifest commit below is a rename;
+    * on an object store (S3A: copy + delete) a crash mid-rename can leave
+    * a partial manifest that reads as committed.
     *
     * Crash safety, same single-writer contract as [[ExtractJob.run]]:
-    *  1. consolidated done dir is written first, then consolidated
-    *     lineage, then the manifest (the commit point) into the lineage
-    *     dir, then sources are deleted;
+    *  1. the consolidated lineage dir is written first, then the manifest
+    *     (the commit point) into it, then the sources are deleted;
     *  2. [[repairCompaction]] runs first on every call: a consolidated
-    *     pair without a committed manifest is rolled back (sources are
+    *     dir without a committed manifest is rolled back (sources are
     *     intact), a committed manifest whose sources still exist has the
     *     deletes finished. Between a mid-delete crash and the next
-    *     repair, done rows can transiently duplicate — harmless for
-    *     resume ([[doneDocs]] is distinct) and repaired before
-    *     [[doneTotal]] is next consulted, because callers compact (and
-    *     therefore repair) before reading it.
+    *     repair, lineage rows can transiently duplicate; callers compact
+    *     (and therefore repair) before [[doneTotal]] is next consulted.
     *
     * A consolidated dir that absorbs an OLDER consolidated dir folds the
     * old manifest into its own, so [[isRecorded]] keeps answering true
@@ -206,11 +182,9 @@ object Checkpoint {
     val fs = lineageRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     repairCompaction(spark, ckptDir)
     if (!fs.exists(lineageRoot)) return false
-    def runDirs(root: Path): Seq[String] =
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("run="))
-        .map(_.getPath.getName.stripPrefix("run="))
-    val sources = runDirs(lineageRoot)
+    val sources = fs.listStatus(lineageRoot).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("run="))
+      .map(_.getPath.getName.stripPrefix("run="))
     if (sources.size <= maxRunDirs) return false
 
     // manifest = absorbed dir names ∪ their own manifests (see scaladoc)
@@ -219,28 +193,17 @@ object Checkpoint {
       .flatMap(id => readManifest(fs, new Path(lineageRoot, s"run=$id")))
     val id = s"$CompactedPrefix${System.nanoTime()}"
 
-    // coalesce (shuffle-free) bounds the consolidated FILE count at the
-    // session's width — never 1: the done table is one row per doc and a
-    // single-file rewrite of it would serialize the whole consolidation
-    // through one task at scale. Dir count (the listing cost this exists
-    // to bound) drops to 1 regardless.
-    val width = math.max(1, spark.sparkContext.defaultParallelism)
-    // 1. consolidated done (partition column `run` from discovery is
-    // dropped — the consolidated dir carries its own run= value)
-    spark.read.parquet(s"$ckptDir/done").drop("run")
-      .coalesce(width).write.mode(SaveMode.Overwrite)
-      .parquet(s"$ckptDir/done/run=$id")
-    // 2. consolidated lineage
+    // 1. consolidated lineage: a few rows per run, so one file (partition
+    // column `run` from discovery is dropped — the consolidated dir
+    // carries its own run= value)
     spark.read.parquet(s"$ckptDir/lineage").drop("run")
-      .coalesce(width).write.mode(SaveMode.Overwrite)
+      .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$ckptDir/lineage/run=$id")
-    // 3. commit point: the manifest — written to a temp name and RENAMED
-    // into place (r6, round-5 ADVICE): fs.create() makes the final name
-    // visible before its contents are written, so a crash between create
-    // and close would leave an empty manifest that repairCompaction
-    // treats as committed and the unlisted sources' rows would duplicate
-    // forever. Rename is atomic on local FS and HDFS, so the manifest
-    // exists only when complete.
+    // 2. commit point: the manifest — written to a temp name and RENAMED
+    // into place: fs.create() makes the final name visible before its
+    // contents are written, so a crash between create and close would
+    // leave an empty manifest that repairCompaction treats as committed
+    // and the unlisted sources' rows would duplicate forever.
     val mfFinal = new Path(s"$ckptDir/lineage/run=$id/$ManifestName")
     val mfTmp = new Path(s"$ckptDir/lineage/run=$id/$ManifestName.tmp")
     val out = fs.create(mfTmp, true)
@@ -248,11 +211,8 @@ object Checkpoint {
     finally out.close()
     require(fs.rename(mfTmp, mfFinal),
       s"compaction commit failed: rename $mfTmp -> $mfFinal")
-    // 4. delete absorbed sources
-    for (src <- sources) {
-      fs.delete(new Path(s"$ckptDir/done/run=$src"), true)
-      fs.delete(new Path(lineageRoot, s"run=$src"), true)
-    }
+    // 3. delete absorbed sources
+    for (src <- sources) fs.delete(new Path(lineageRoot, s"run=$src"), true)
     true
   }
 
@@ -260,36 +220,20 @@ object Checkpoint {
     * crash-safety scaladoc). */
   def repairCompaction(spark: SparkSession, ckptDir: String): Unit = {
     val lineageRoot = new Path(s"$ckptDir/lineage")
-    val doneRoot = new Path(s"$ckptDir/done")
     val fs = lineageRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lineageCompacts: Set[String] =
-      if (!fs.exists(lineageRoot)) Set.empty
-      else fs.listStatus(lineageRoot).iterator.map(_.getPath.getName)
-        .filter(_.startsWith(s"run=$CompactedPrefix"))
-        .map(_.stripPrefix("run=")).toSet
-    for (id <- lineageCompacts) {
-      val dir = new Path(lineageRoot, s"run=$id")
+    if (!fs.exists(lineageRoot)) return
+    for (s <- fs.listStatus(lineageRoot)
+         if s.getPath.getName.startsWith(s"run=$CompactedPrefix")) {
+      val dir = s.getPath
       val committed = fs.exists(new Path(dir, ManifestName)) &&
                       fs.exists(new Path(dir, "_SUCCESS"))
-      if (committed) {
+      if (committed)
         // finish: absorbed sources must be gone
-        for (src <- readManifest(fs, dir)) {
-          fs.delete(new Path(doneRoot, s"run=$src"), true)
+        for (src <- readManifest(fs, dir))
           fs.delete(new Path(lineageRoot, s"run=$src"), true)
-        }
-      } else {
-        // roll back: sources are intact, the half-written pair goes
-        fs.delete(new Path(doneRoot, s"run=$id"), true)
+      else
+        // roll back: sources are intact, the half-written dir goes
         fs.delete(dir, true)
-      }
-    }
-    // a consolidated DONE dir with no lineage twin = crash between the
-    // two writes; sources intact, roll it back
-    if (fs.exists(doneRoot)) {
-      for (s <- fs.listStatus(doneRoot)
-             if s.getPath.getName.startsWith(s"run=$CompactedPrefix")
-             if !lineageCompacts.contains(s.getPath.getName.stripPrefix("run=")))
-        fs.delete(s.getPath, true)
     }
   }
 }

@@ -27,9 +27,9 @@ case class SpanOut(doc_id: String, kind: String, text: String,
 /** The production extraction run — the Spark lifecycle equivalent of
   * joradp_parse.py (SURVEY §3.1):
   *
-  *   snapshot read → checkpoint anti-join → skew routing →
-  *   one fused map-only mapPartitions(kernel), no exchange →
-  *   write output + lineage + checkpoint.
+  *   snapshot read → anti-join on the snapshot's committed output →
+  *   skew routing → one fused map-only mapPartitions(kernel) →
+  *   write output, then lineage (the commit point).
   *
   * Skew plan (SURVEY §4): documents are atomic units of kernel work, so a
   * multi-hundred-page doc would stall its partition at 4N scale. Docs with
@@ -45,14 +45,13 @@ object ExtractJob {
       buckets: Int = 32,
       skewSpanThreshold: Int = 64,
       store: MediaStore = SyntheticStore,
-      /** Compact the checkpoint tables when their `run=` subdir count
-        * exceeds this (0 = disabled). A long-lived incremental table
-        * accretes one done+lineage subdir pair per run; past the
-        * threshold [[Checkpoint.compact]] rewrites them into one
-        * consolidated pair so the resume anti-join's listing cost stays
-        * bounded over hundreds of runs. Once enabled for a table, keep
-        * it enabled: the compaction's crash repair runs on the same
-        * flag. */
+      /** Compact the lineage table when its `run=` subdir count exceeds
+        * this (0 = disabled). A long-lived incremental table accretes one
+        * lineage subdir per run; past the threshold
+        * [[Checkpoint.compact]] rewrites them into one consolidated dir
+        * so the lineage listing stays bounded over hundreds of runs.
+        * Once enabled for a table, keep it enabled: the compaction's
+        * crash repair runs on the same flag. */
       compactRunDirsOver: Int = 0)
 
   /** Pure transformation: input docs → extracted OutRows. */
@@ -69,15 +68,17 @@ object ExtractJob {
     // embarrassingly parallel stage; per-doc skew is routed to the
     // exploded path below instead. The kernel therefore runs in whatever
     // stage produces `input`, with that stage's partitions:
-    //  - on a bare snapshot scan (BenchLevel) those are the file splits —
+    //  - on a bare snapshot scan (BenchLevel, and `run` on a snapshot
+    //    with no committed output yet) those are the file splits —
     //    spark.sql.files.minPartitionNum over a snapshot hash-bucketed by
     //    doc_id (SnapshotTable), so uniform in kernel work;
-    //  - under `run`, the resume anti-join against `done` puts a shuffle
-    //    exchange in front of the kernel, and the kernel runs in the
-    //    join's post-shuffle stage. AQE sizes that stage by the shuffle's
-    //    bytes, and snapshot rows are small (a media span carries only a
-    //    ref), so a small todo set coalesces into a few partitions: 2
-    //    kernel tasks for 100 docs on 4 cores (perfbench extract_full).
+    //  - when `run` resumes a snapshot that has committed output, the
+    //    anti-join against that output's doc_id column sits in front of
+    //    the kernel. As a broadcast anti-join (the usual case: one short
+    //    string per done doc) it keeps the scan's partitions; as a
+    //    shuffled join the kernel runs in the join's post-shuffle stage,
+    //    which AQE sizes by bytes, so a small todo set coalesces into a
+    //    few partitions.
     // part_id keeps its lineage meaning as the physical partition the doc
     // was processed in.
     val fused: Dataset[OutRow] =
@@ -105,21 +106,11 @@ object ExtractJob {
       .mapPartitions { it =>
         it.filter(!_.is_cover).map { s =>
           val st = new KernelStats
-          val crop = graft.kernel.CropConfig.lookup(s.doc_id)
-          s.kind match {
-            case "media" =>
-              val page = graft.kernel.Recognize.recognizeStored(
-                store.decode(s.media_ref), crop)
-              st.addHist(page.confHist)
-              SpanOut(s.doc_id, "media", page.text, s.media_ref, s.offset,
-                      1L, 0L, st.confHist.toSeq)
-            case "text" =>
-              SpanOut(s.doc_id, "text",
-                      graft.kernel.BoilerplateStrip.strip(s.text), "",
-                      s.offset, 0L, 1L, st.confHist.toSeq)
-            case other =>
-              throw new IllegalArgumentException(s"unknown span kind '$other'")
-          }
+          val out = ExtractKernel.extractSpan(
+            Span(s.kind, s.text, s.media_ref, s.offset),
+            graft.kernel.CropConfig.lookup(s.doc_id), store, st)
+          SpanOut(s.doc_id, out.kind, out.text, out.media_ref, out.offset,
+                  st.mediaSpanCount, st.textSpanCount, st.confHist.toSeq)
         }
       }
     val reassembled: Dataset[OutRow] = spanOuts
@@ -147,14 +138,18 @@ object ExtractJob {
   final case class RunSummary(snapshotId: String, docsProcessed: Long,
                               docsThisRun: Long)
 
-  /** Full job: read pinned snapshot, anti-join the checkpoint table
-    * (supersedes the reference's max-filename watermark,
-    * joradp_parse.py:101-114 — SURVEY §2.1 S7), extract, write output +
-    * lineage + checkpoint. Each run writes to its own `run=<id>` partition
-    * subdirectory so lineage/checkpoint rows are derived from a
-    * column-pruned re-scan of exactly this run's files — never a
-    * read-modify-write of a directory a concurrent scan is planned over.
-    * Calling run() again after a kill processes only unfinished docs. */
+  /** Full job: read the pinned snapshot, drop the docs already done for
+    * it, extract, write output, then lineage. A doc is done when it sits
+    * in a committed output run dir of this snapshot ([[reconcile]] returns
+    * them), so resume is a left-anti join on those dirs' doc_id column —
+    * superseding the reference's max-filename watermark
+    * (joradp_parse.py:101-114 — SURVEY §2.1 S7). With no committed run of
+    * the snapshot there is no join at all, and no exchange before the
+    * kernel. Each run writes to its own `run=<id>` subdirectory, so its
+    * lineage is derived from a column-pruned scan of exactly this run's
+    * files — never a read-modify-write of a directory a concurrent scan
+    * is planned over. Calling run() again after a kill processes only
+    * unfinished docs. */
   def run(spark: SparkSession, inputPath: String, outPath: String,
           ckptDir: String, cfg: Config = Config(),
           worklist: Option[DataFrame] = None): RunSummary = {
@@ -162,17 +157,15 @@ object ExtractJob {
     val (inputDf, snapId) = SnapshotTable.read(spark, inputPath)
     val input = inputDf.as[Doc]
 
-    // crash-window reconcile BEFORE reading the done table: a prior run
-    // that died between committing its output dir and recording it in the
-    // checkpoint would otherwise be re-extracted into a second run dir,
-    // duplicating every doc in readOutput
-    reconcile(spark, outPath, ckptDir)
-    // optional checkpoint-table compaction (after reconcile, which may
-    // have re-appended a crashed run's subdirs; before the done read)
+    // reconcile first: it reclaims a crashed run's uncommitted dir,
+    // re-appends the lineage of a committed but unrecorded one, and
+    // returns this snapshot's committed dirs — the docs already done
+    val doneRuns = reconcile(spark, outPath, ckptDir, snapId)
+    // optional lineage compaction (after reconcile, which may have
+    // re-appended a crashed run's lineage)
     if (cfg.compactRunDirsOver > 0)
       Checkpoint.compact(spark, ckptDir, cfg.compactRunDirsOver)
 
-    val done: DataFrame = Checkpoint.doneDocs(spark, ckptDir, snapId)
     // optional selective work-list (F2/J5: the reference's CSV-driven
     // reprocessing, joradp_correct_add_missing_bboxes.py:179-192) — a
     // semi-join so only listed docs are (re)processed
@@ -180,22 +173,23 @@ object ExtractJob {
       case Some(wl) => input.join(wl.select("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
       case None => input
     }
-    val todo = scoped.join(done, Seq("doc_id"), "left_anti").as[Doc]
+    val todo =
+      if (doneRuns.isEmpty) scoped
+      else scoped.join(spark.read.schema("doc_id STRING").parquet(doneRuns: _*),
+                       Seq("doc_id"), "left_anti").as[Doc]
 
     val runId = s"${snapId}_${System.nanoTime()}"
-    val out = extract(spark, todo, cfg)
-    out.write.mode(SaveMode.ErrorIfExists).parquet(s"$outPath/run=$runId")
-
-    val written = spark.read.parquet(s"$outPath/run=$runId")
-    // docsThisRun comes out of the lineage aggregation — no extra count
-    // job over the run's files (they were just written; every scan of
-    // them at 100 TB is a real job)
-    val thisRun = Checkpoint.append(spark, ckptDir, snapId, runId, written)
+    extract(spark, todo, cfg)
+      .write.mode(SaveMode.ErrorIfExists).parquet(s"$outPath/run=$runId")
+    // docsThisRun is observed on the lineage write — no extra count job
+    // over the run's files (every scan of them at 100 TB is a real job)
+    val thisRun = Checkpoint.append(spark, ckptDir, snapId, runId,
+      spark.read.parquet(s"$outPath/run=$runId"))
     val doneTotal = Checkpoint.doneTotal(spark, ckptDir, snapId)
     if (thisRun == 0L && doneTotal > 0L) {
       // no-op resume: everything was already done, so this run's output
-      // and checkpoint subdirs are empty shells. Reap them immediately —
-      // a scheduler re-submitting a finished snapshot daily would
+      // and lineage subdirs are empty shells. Reap them immediately — a
+      // scheduler re-submitting a finished snapshot daily would
       // otherwise grow one empty run= dir per invocation, and every
       // later reconcile/readOutput pays listing + partition discovery
       // over the pile (the single-writer contract makes this delete
@@ -207,33 +201,14 @@ object ExtractJob {
       val fs = new Path(outPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new Path(s"$outPath/run=$runId"), true)
-      fs.delete(new Path(s"$ckptDir/done/run=$runId"), true)
       fs.delete(new Path(s"$ckptDir/lineage/run=$runId"), true)
     }
     // summary total from the per-partition LINEAGE table (tiny, bounded)
-    // — never a scan of the one-row-per-doc done table, which at 100 TB
-    // is a real job run purely for a log line
+    // — never a scan of the one-row-per-doc output, which at 100 TB is a
+    // real job run purely for a log line
     RunSummary(snapId, doneTotal, thisRun)
   }
 
-  /** Repair the output↔checkpoint gap left by a crashed prior run. Two
-    * cases, keyed off the run dir's Spark `_SUCCESS` marker and the
-    * checkpoint's per-run record:
-    *
-    *   - output dir WITHOUT `_SUCCESS`: the write job never committed;
-    *     its docs were never checkpointed, so the dir (plus any partial
-    *     checkpoint subdirs from the same run) is deleted and the docs
-    *     re-extract normally;
-    *   - output dir WITH `_SUCCESS` but not recorded ([[Checkpoint
-    *     .isRecorded]]): the run died between output commit and
-    *     checkpoint append — re-run the (idempotent, per-run Overwrite)
-    *     append from the committed files, so the resume anti-join skips
-    *     those docs instead of duplicating them in a new run dir.
-    *
-    * The runId encodes its snapshot (`<snapId>_<nonce>`), so recovery
-    * attributes re-appended rows to the snapshot that produced them.
-    * Cost: one directory listing per run() plus, only on an actual
-    * crashed run, a column-pruned scan of that run's files. */
   /** A run id this pipeline itself minted: `<snapId>_<nanoTime nonce>`
     * (see [[run]]), where snapId is ALWAYS the 16-lowercase-hex content
     * hash [[SnapshotTable.commit]] emits. Reconcile must only ever touch
@@ -244,7 +219,27 @@ object ExtractJob {
     * chars makes an accidental match practically impossible. */
   private val OwnRunId = "^([0-9a-f]{16})_([0-9]+)$".r
 
-  /** SINGLE-WRITER contract: like any Spark job committing to one output
+  /** Repair the output↔lineage gap left by a crashed prior run, and
+    * return the committed output run dirs of snapshot `snapId` — the
+    * record of which docs are done. Two repair cases, keyed off the run
+    * dir's Spark `_SUCCESS` marker and its lineage record:
+    *
+    *   - output dir WITHOUT `_SUCCESS`: the write job never committed;
+    *     the dir (plus any partial lineage subdir from the same run) is
+    *     deleted and its docs re-extract normally;
+    *   - output dir WITH `_SUCCESS` but not recorded ([[Checkpoint
+    *     .isRecorded]]): the run died between output commit and lineage
+    *     append — re-run the (idempotent, per-run Overwrite) append from
+    *     the committed files. Its docs are done either way: the dir is
+    *     returned with the others.
+    *
+    * The runId encodes its snapshot (`<snapId>_<nonce>`), so recovery
+    * attributes re-appended rows to the snapshot that produced them, and
+    * a committed run of another snapshot never marks docs done for this
+    * one. Cost: one directory listing per run() plus, only on an actual
+    * crashed run, a column-pruned scan of that run's files.
+    *
+    * SINGLE-WRITER contract: like any Spark job committing to one output
     * path, at most one `run()` may execute against a given
     * (outPath, ckptDir) at a time — reconcile cannot distinguish a
     * crashed run's uncommitted dir from a concurrent run's in-flight one
@@ -252,29 +247,29 @@ object ExtractJob {
     * have its partial output reclaimed. Serialize runs per output table
     * (the driver loop and the streaming wrapper both do). */
   private def reconcile(spark: SparkSession, outPath: String,
-                        ckptDir: String): Unit = {
+                        ckptDir: String, snapId: String): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val root = new Path(outPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val runDirs = fs.listStatus(root)
+    if (!fs.exists(root)) return Seq.empty
+    val runDirs = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("run="))
-    // one manifest sweep for the whole reconcile (r6, round-5 ADVICE):
-    // the per-dir isRecorded re-listed the lineage root and re-read
-    // every consolidated manifest on each compacted-run miss — O(runs)
-    // reads of O(runs)-line manifests per invocation, quadratic
-    // small-file IO in exactly the listing dimension compaction bounds
+    // one manifest sweep for the whole reconcile: the per-dir isRecorded
+    // would re-list the lineage root and re-read every consolidated
+    // manifest on each compacted-run miss
     val compacted = Checkpoint.compactedRunIds(spark, ckptDir)
-    for (dir <- runDirs) {
+    runDirs.flatMap { dir =>
       dir.getPath.getName.stripPrefix("run=") match {
         case runId @ OwnRunId(runSnap, _) =>
           if (!fs.exists(new Path(dir.getPath, "_SUCCESS"))) {
             fs.delete(dir.getPath, true)
-            fs.delete(new Path(s"$ckptDir/done/run=$runId"), true)
             fs.delete(new Path(s"$ckptDir/lineage/run=$runId"), true)
-          } else if (!Checkpoint.isRecorded(spark, ckptDir, runId, compacted)) {
-            Checkpoint.append(spark, ckptDir, runSnap, runId,
-              spark.read.parquet(dir.getPath.toString))
+            None
+          } else {
+            if (!Checkpoint.isRecorded(spark, ckptDir, runId, compacted))
+              Checkpoint.append(spark, ckptDir, runSnap, runId,
+                spark.read.parquet(dir.getPath.toString))
+            if (runSnap == snapId) Some(dir.getPath.toString) else None
           }
         case foreign =>
           // not ours: warn and leave it alone — it still pollutes the
@@ -286,6 +281,7 @@ object ExtractJob {
             s"[extract] reconcile: skipping foreign run dir " +
             s"'run=$foreign' in $outPath (not a <16-hex-snapId>_<nonce> " +
             "id this pipeline mints); move it out of the output table")
+          None
       }
     }
   }
@@ -316,15 +312,6 @@ object ExtractJob {
     obs.get("docs").asInstanceOf[Long]
   }
 
-  /** Selective page re-OCR — the Spark equivalent of
-    * joradp_correct_add_missing_bboxes.py (SURVEY §3.3 sibling): a
-    * work-list of (doc_id, page_number) rows from the failure-report CSV
-    * selects exactly the pages to re-recognize
-    * (parse_images_to_text_structure_selective_heavy,
-    * pdf_parser.py:320-384). Page numbers are media-span ordinals
-    * (cover = 0); out-of-range indices simply don't join and are dropped,
-    * the reference's warn-and-drop (pdf_parser.py:205-209). Emits one row
-    * per re-OCR'd page with the recognized text and its glyph count. */
   /** Warn-and-drop accounting for the selective passes: every selective
     * result emits >= 1 row per matched (doc, page), so work-list rows
     * absent from the result are exactly the ones the inner join dropped
@@ -358,16 +345,32 @@ object ExtractJob {
     n
   }
 
+  /** One row per media span of each doc: (doc_id, page_number,
+    * media_ref), page_number being the media-span ordinal in offset order
+    * (cover = 0) — the page index both selective passes join on. */
+  private def mediaPages(spark: SparkSession, input: Dataset[Doc]): DataFrame = {
+    import spark.implicits._
+    input.flatMap { doc =>
+      doc.spans.filter(_.kind == "media").sortBy(_.offset).zipWithIndex
+        .map { case (s, pn) => (doc.doc_id, pn, s.media_ref) }
+    }.toDF("doc_id", "page_number", "media_ref")
+  }
+
+  /** Selective page re-OCR — the Spark equivalent of
+    * joradp_correct_add_missing_bboxes.py (SURVEY §3.3 sibling): a
+    * work-list of (doc_id, page_number) rows from the failure-report CSV
+    * selects exactly the pages to re-recognize
+    * (parse_images_to_text_structure_selective_heavy,
+    * pdf_parser.py:320-384). Page numbers are media-span ordinals
+    * (cover = 0); out-of-range indices simply don't join and are dropped,
+    * the reference's warn-and-drop (pdf_parser.py:205-209). Emits one row
+    * per re-OCR'd page with the recognized text and its glyph count. */
   def reOcrSelective(spark: SparkSession, input: Dataset[Doc],
       worklist: DataFrame, cfg: Config = Config()): DataFrame = {
     import spark.implicits._
     val store = cfg.store
     val wl = worklist.select(col("doc_id"), col("page_number").cast("int"))
-    val pages = input.flatMap { doc =>
-      doc.spans.filter(_.kind == "media").sortBy(_.offset).zipWithIndex
-        .map { case (s, pn) => (doc.doc_id, pn, s.media_ref) }
-    }.toDF("doc_id", "page_number", "media_ref")
-    val res = pages.join(broadcast(wl), Seq("doc_id", "page_number"))
+    val res = mediaPages(spark, input).join(broadcast(wl), Seq("doc_id", "page_number"))
       .as[(String, Int, String)]
       .mapPartitions { it =>
         it.map { case (docId, pn, ref) =>
@@ -413,11 +416,7 @@ object ExtractJob {
       from_json(col("table_boxes"),
         ArrayType(ArrayType(IntegerType))).as("boxes"),
       rotatedCol.as("rotated"))
-    val pages = input.flatMap { doc =>
-      doc.spans.filter(_.kind == "media").sortBy(_.offset).zipWithIndex
-        .map { case (s, pn) => (doc.doc_id, pn, s.media_ref) }
-    }.toDF("doc_id", "page_number", "media_ref")
-    val res = pages.join(broadcast(wl), Seq("doc_id", "page_number"))
+    val res = mediaPages(spark, input).join(broadcast(wl), Seq("doc_id", "page_number"))
       .as[(String, Int, String, Boolean, Seq[Seq[Int]], Boolean)]
       .mapPartitions { it =>
         it.flatMap { case (docId, pn, ref, fullPage, boxesRaw, rotated) =>

@@ -79,56 +79,83 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("run() summary never scans the done table (metadata counter only)") {
     import spark.implicits._
     // round-3 verdict #3: RunSummary.docsProcessed used to be a full
-    // done-table count() per run — a real job at 100 TB. Pin the fix:
-    // across a whole resume run(), exactly ONE executed query scans the
-    // done dir (the anti-join inside the output write), and none after it
-    // (the summary total is summed from the tiny per-partition lineage
-    // table, never the one-row-per-doc done table).
+    // done-table count() per run — a real job at 100 TB. The record of
+    // done docs is now the committed output itself, so pin the scans:
+    //  - a first run scans no prior output (there is no anti-join);
+    //  - a resume scans the prior run dirs exactly once, in the anti-join
+    //    inside the output write;
+    //  - after the output write, the only scan of a one-row-per-doc table
+    //    is the lineage append over this run's own dir, and the summary
+    //    total reads nothing but the per-partition lineage table.
     val in = tmp("in-noscan"); val out = tmp("out-noscan"); val ck = tmp("ck-noscan")
     val (inputs, _) = CorpusGen.corpus(4)
     SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
-    val r1 = ExtractJob.run(spark, in, out, ck) // seeds the done table
-    assert(r1.docsProcessed == 4)
 
-    val doneScans = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var sentinelSeen = false
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = {
-        if (qe.analyzed.toString.contains("424242")) sentinelSeen = true
-        else {
-          val scans = qe.executedPlan.collect {
-            case f: org.apache.spark.sql.execution.FileSourceScanExec
-                if f.relation.location.rootPaths
-                  .exists(_.toString.contains(s"$ck/done")) => f
-          }
-          if (scans.nonEmpty) doneScans.incrementAndGet()
+    /** Root paths of every file scan, per executed query, in order. */
+    def scansOf(body: => Unit): Seq[Seq[String]] = {
+      val scans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+      @volatile var sentinelSeen = false
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit = {
+          if (qe.analyzed.toString.contains("424242")) sentinelSeen = true
+          else scans.add(qe.executedPlan.collect {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+              f.relation.location.rootPaths.map(_.toString)
+          }.flatten)
         }
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
       }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false") // plain plan trees
+      spark.listenerManager.register(listener)
+      try {
+        body
+        // listener delivery is async FIFO: a sentinel query marks the drain
+        spark.range(424242).count()
+        val deadline = System.currentTimeMillis() + 15000
+        while (!sentinelSeen && System.currentTimeMillis() < deadline)
+          Thread.sleep(25)
+        assert(sentinelSeen, "listener bus did not drain")
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      }
+      scans.asScala.toSeq
     }
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false") // plain plan trees
-    spark.listenerManager.register(listener)
-    try {
+    def isOut(p: String) = p.contains(s"$out/run=")
+    def isIn(p: String) = p.contains(in)
+
+    val first = scansOf {
+      val r1 = ExtractJob.run(spark, in, out, ck)
+      assert(r1.docsThisRun == 4 && r1.docsProcessed == 4)
+    }
+    val prior = new java.io.File(out).listFiles.map(_.getName)
+      .filter(_.startsWith("run=")).toSeq
+    assert(prior.size == 1)
+    val write1 = first.filter(_.exists(isIn))
+    assert(write1.size == 1 && !write1.head.exists(isOut),
+      s"a first run must scan no prior output, got $write1")
+
+    val second = scansOf {
       val r2 = ExtractJob.run(spark, in, out, ck)
       assert(r2.docsThisRun == 0 && r2.docsProcessed == 4)
-      // listener delivery is async FIFO: a sentinel query marks the drain
-      spark.range(424242).count()
-      val deadline = System.currentTimeMillis() + 15000
-      while (!sentinelSeen && System.currentTimeMillis() < deadline)
-        Thread.sleep(25)
-      assert(sentinelSeen, "listener bus did not drain")
-      assert(doneScans.get() == 1,
-        s"expected exactly 1 done-table scan (the resume anti-join), " +
-        s"got ${doneScans.get()}")
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
+    val priorScans = second.filter(_.exists(_.endsWith(s"/${prior.head}")))
+    assert(priorScans.size == 1 && priorScans.head.exists(isIn),
+      s"expected exactly 1 prior-output scan (the resume anti-join), " +
+      s"got $priorScans")
+    val ownDirScans = second.filter(q => !q.exists(isIn) && q.exists(isOut))
+    assert(ownDirScans.size == 1 &&
+           !ownDirScans.head.exists(_.endsWith(s"/${prior.head}")),
+      s"expected one scan of this run's own dir (the lineage append), " +
+      s"got $ownDirScans")
+    val rest = second.filterNot(q => q.exists(isIn) || q.exists(isOut))
+    assert(rest.forall(_.forall(_.contains(s"$ck/lineage"))),
+      s"after the write only the lineage table may be scanned, got $rest")
   }
 
   test("resume: killed-halfway run completes only the remainder") {
@@ -141,9 +168,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val half = inputs.take(5).map(_.doc_id).toSet
     val partial = ExtractJob.extract(
       spark, inputs.filter(d => half(d.doc_id)).toDS, ExtractJob.Config(buckets = 2))
-    partial.write.parquet(s"$out/run=${snapId}_prior")
-    Checkpoint.append(spark, ck, snapId, s"${snapId}_prior",
-                      spark.read.parquet(s"$out/run=${snapId}_prior"))
+    partial.write.parquet(s"$out/run=${snapId}_1")
+    Checkpoint.append(spark, ck, snapId, s"${snapId}_1",
+                      spark.read.parquet(s"$out/run=${snapId}_1"))
     // the resumed run must process exactly the other 5 docs
     val r = ExtractJob.run(spark, in, out, ck)
     assert(r.docsThisRun == 5, s"expected 5 remaining, got ${r.docsThisRun}")
@@ -151,6 +178,31 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val outDocs = ExtractJob.readOutput(spark, out).collect().toSeq
     assert(outDocs.map(_.doc_id).distinct.size == 10, "no duplicates")
     assertSpanEquality(outDocs, goldens)
+  }
+
+  test("resume: a committed run of one snapshot marks no docs done for " +
+       "a re-committed snapshot") {
+    import spark.implicits._
+    val in = tmp("in-resnap"); val out = tmp("out-resnap"); val ck = tmp("ck-resnap")
+    val (inputs, goldens) = CorpusGen.corpus(6)
+    val snapA = SnapshotTable.write(inputs.take(4).toDS.toDF, in, buckets = 2)
+    assert(ExtractJob.run(spark, in, out, ck).docsThisRun == 4)
+    // the table is rewritten and re-committed: snapshot B shares A's 4
+    // docs, but done-ness is per snapshot, so B extracts all 6
+    val snapB = SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
+    assert(snapB != snapA)
+    val r = ExtractJob.run(spark, in, out, ck)
+    assert(r.snapshotId == snapB)
+    assert(r.docsThisRun == 6 && r.docsProcessed == 6,
+      s"docs done under A must re-extract under B, got $r")
+    val r2 = ExtractJob.run(spark, in, out, ck)
+    assert(r2.docsThisRun == 0 && r2.docsProcessed == 6)
+    val bDirs = new java.io.File(out).listFiles
+      .filter(_.getName.startsWith(s"run=${snapB}_")).toSeq
+    assert(bDirs.size == 1)
+    assertSpanEquality(
+      spark.read.parquet(bDirs.head.toString).select("doc_id", "spans")
+        .as[Doc].collect().toSeq, goldens)
   }
 
   test("reconcile: an uncommitted run dir (no _SUCCESS) is reclaimed and " +
@@ -251,8 +303,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       java.nio.file.Files.list(java.nio.file.Paths.get(ck, sub))
         .iterator().asScala.map(_.getFileName.toString)
         .filter(_.startsWith("run=")).toSeq
-    assert(ckDirs("done").size == 1 && ckDirs("lineage").size == 1,
-      "checkpoint subdirs of no-op runs must be reaped too")
+    assert(ckDirs("lineage").size == 1,
+      "lineage subdirs of no-op runs must be reaped too")
     // output is intact after the reaps
     assert(ExtractJob.readOutput(spark, out).count() == 4)
   }
@@ -313,8 +365,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         worklist = Some(Seq(doc).toDF("doc_id")))
       assert(runDirs("lineage").size <= 4, // threshold + this run's dir
         s"lineage dirs unbounded: ${runDirs("lineage")}")
-      assert(runDirs("done").size <= 4,
-        s"done dirs unbounded: ${runDirs("done")}")
+      assert(!new java.io.File(s"$ck/done").exists,
+        "no done table is written: the committed output is the record")
     }
     // post-compaction the totals and output are exactly the 10 docs
     val fin = ExtractJob.run(spark, in, out, ck, cfg)
@@ -344,19 +396,16 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val before = Checkpoint.doneTotal(spark, ck,
       SnapshotTable.currentSnapshotId(in))
     assert(before == 4)
-    // simulate a crash BEFORE the manifest commit: half-written
-    // consolidated dirs exist, sources intact
-    val doneAll = spark.read.parquet(s"$ck/done").drop("run")
-    doneAll.write.parquet(s"$ck/done/run=compact_999")
+    // simulate a crash BEFORE the manifest commit: a half-written
+    // consolidated lineage dir exists, sources intact
     spark.read.parquet(s"$ck/lineage").drop("run")
       .write.parquet(s"$ck/lineage/run=compact_999") // no _manifest.txt
     Checkpoint.repairCompaction(spark, ck)
-    assert(!new java.io.File(s"$ck/done/run=compact_999").exists)
     assert(!new java.io.File(s"$ck/lineage/run=compact_999").exists)
     assert(Checkpoint.doneTotal(spark, ck,
       SnapshotTable.currentSnapshotId(in)) == 4, "rollback lost rows")
     // now a real compaction, then simulate a crash AFTER the commit
-    // point: resurrect one absorbed source pair and let repair finish
+    // point: resurrect one absorbed source dir and let repair finish
     val srcs = new java.io.File(s"$ck/lineage").listFiles
       .map(_.getName).filter(_.startsWith("run=")).toSeq
     assert(Checkpoint.compact(spark, ck, 1))
@@ -365,11 +414,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(consolidated.size == 1 && srcs.nonEmpty)
     val ghost = srcs.head.stripPrefix("run=")
     new java.io.File(s"$ck/lineage/run=$ghost").mkdirs()
-    new java.io.File(s"$ck/done/run=$ghost").mkdirs()
     Checkpoint.repairCompaction(spark, ck)
     assert(!new java.io.File(s"$ck/lineage/run=$ghost").exists,
       "committed manifest must finish deleting absorbed sources")
-    assert(!new java.io.File(s"$ck/done/run=$ghost").exists)
     assert(Checkpoint.doneTotal(spark, ck,
       SnapshotTable.currentSnapshotId(in)) == 4)
   }
@@ -385,22 +432,19 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         worklist = Some(Seq(doc).toDF("doc_id")))
     val snap = SnapshotTable.currentSnapshotId(in)
     assert(Checkpoint.doneTotal(spark, ck, snap) == 4)
-    // simulate the r6 atomic-commit crash window: consolidated pair fully
-    // written (with _SUCCESS) but the manifest only exists under its
-    // TEMP name — the rename never happened. Before the tmp+rename fix,
-    // an empty/partial _manifest.txt at the final name would have read
-    // as committed and left the absorbed sources' rows duplicated.
-    val doneAll = spark.read.parquet(s"$ck/done").drop("run")
-    doneAll.write.parquet(s"$ck/done/run=compact_777")
+    // simulate the r6 atomic-commit crash window: consolidated lineage
+    // fully written (with _SUCCESS) but the manifest only exists under
+    // its TEMP name — the rename never happened. Before the tmp+rename
+    // fix, an empty/partial _manifest.txt at the final name would have
+    // read as committed and left the absorbed sources' rows duplicated.
     spark.read.parquet(s"$ck/lineage").drop("run")
       .write.parquet(s"$ck/lineage/run=compact_777")
     val tmpMf = new java.io.File(s"$ck/lineage/run=compact_777/_manifest.txt.tmp")
     val w = new java.io.PrintWriter(tmpMf)
     try w.println("half-written") finally w.close()
     Checkpoint.repairCompaction(spark, ck)
-    assert(!new java.io.File(s"$ck/done/run=compact_777").exists,
+    assert(!new java.io.File(s"$ck/lineage/run=compact_777").exists,
       "tmp-only manifest must read as uncommitted -> rollback")
-    assert(!new java.io.File(s"$ck/lineage/run=compact_777").exists)
     assert(Checkpoint.doneTotal(spark, ck, snap) == 4,
       "rollback must leave source rows intact and never double-count")
   }

@@ -57,25 +57,22 @@ assert rows == docs, f"{rows - docs} duplicate doc rows"
 print(f"OK: {docs} distinct docs, {rows} rows, zero duplicates")
 EOF
 
-echo "== layout evidence (partition counts, lineage:done size ratio)"
+echo "== layout evidence (partition counts, lineage:output size ratio)"
 python3 - "$BASE" <<'EOF'
 import duckdb, glob, os, sys
 base = sys.argv[1]
 out_files = glob.glob(f"{base}/out/run=*/*.parquet")
-done_files = glob.glob(f"{base}/ckpt/done/run=*/*.parquet")
 lin_files = glob.glob(f"{base}/ckpt/lineage/run=*/*.parquet")
 lin_rows, lin_docs = duckdb.sql(
     f"SELECT count(*), sum(doc_count) "
     f"FROM read_parquet('{base}/ckpt/lineage/run=*/*.parquet')").fetchone()
-done_b = sum(os.path.getsize(f) for f in done_files)
 lin_b = sum(os.path.getsize(f) for f in lin_files)
 out_b = sum(os.path.getsize(f) for f in out_files)
 print(f"output: {len(out_files)} part files, {out_b/1e6:.1f} MB; "
       f"run dirs: {len(set(os.path.dirname(f) for f in out_files))}")
-print(f"done table: {len(done_files)} files, {done_b/1e6:.2f} MB; "
-      f"lineage: {len(lin_files)} files, {lin_b/1e6:.3f} MB, "
+print(f"lineage: {len(lin_files)} files, {lin_b/1e6:.3f} MB, "
       f"{lin_rows} partition rows covering {lin_docs} docs")
-print(f"lineage:done size ratio 1:{done_b/max(lin_b,1):.0f} "
-      f"(the metadata the run summary reads vs the per-doc table it avoids)")
+print(f"lineage:output size ratio 1:{out_b/max(lin_b,1):.0f} "
+      f"(the metadata the run summary reads vs the per-doc output it avoids)")
 EOF
 du -sh "$BASE/out" "$BASE/ckpt"
