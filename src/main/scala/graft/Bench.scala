@@ -130,10 +130,8 @@ object Bench {
   val CorpusBuckets = 256
   /** Scan splits (spark.sql.files.minPartitionNum). */
   val ScanMinSplits = 256
-  /** Shuffle partitions (reassembly of the exploded skew path). */
+  /** Shuffle partitions (the doc_id reassembly after the kernel). */
   val ShufflePartitions = 128
-  /** Exploded-span-path repartition width. */
-  val ExplodedBuckets = 128
   /** Untimed runs before the timed one, the same at both levels: unequal
     * warm-up would bias the ratio. */
   val WarmRuns = 2

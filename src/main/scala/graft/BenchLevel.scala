@@ -32,9 +32,10 @@ object BenchLevel {
     import spark.implicits._
     def once(): Double = {
       val (df, _) = SnapshotTable.read(spark, corpusPath)
+      // the kernel runs in as many tasks as the scan has splits
+      // (Bench.ScanMinSplits), at both levels
       val out = ExtractJob.extract(spark, df.as[graft.core.Doc],
-        ExtractJob.Config(buckets = Bench.ExplodedBuckets,
-                          skewSpanThreshold = 32))
+        ExtractJob.Config(skewSpanThreshold = 32))
       val t0 = System.nanoTime()
       out.write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9

@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *     snapshot table (the zero-egress stand-in for corpus ingest).
   *   extract <snapshotDir> <outDir> <ckptDir> [buckets] [worklistCsv]
   *     Run the extraction pipeline: pinned-snapshot read → checkpoint
-  *     anti-join (resume) → fused kernel + exploded skew path → output,
-  *     lineage and checkpoint. Re-running after a kill processes only
+  *     anti-join (resume) → kernel over whole docs and heavy docs' spans →
+  *     output, then lineage. Re-running after a kill processes only
   *     unfinished docs. worklistCsv (header: doc_id) restricts the run
   *     to listed docs (the reference's CSV-driven selective reprocessing).
   *   tables <snapshotDir> <outDir> <worklistCsv>

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
-  /** Flagship: the full extraction pipeline (fused kernel + skew path) on a
+  /** Flagship: the full extraction pipeline (kernel + skew split) on a
     * deterministic synthetic interleaved-span corpus; returns exploded
     * recognized spans. Driver smoke-checks rows > 0. */
   def entry(spark: SparkSession): DataFrame = extractSpans(spark, nDocs = 8)

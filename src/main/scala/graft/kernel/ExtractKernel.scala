@@ -34,8 +34,8 @@ final class KernelStats {
   }
 }
 
-/** The fused extraction kernel: one document in, its extracted span
-  * sequence out. Runs inside a single Catalyst-planned mapPartitions stage
+/** The extraction kernel: one document in, its extracted span
+  * sequence out. Runs inside ExtractJob's one kernel stage
   * (SURVEY §3.1 "Spark lifecycle equivalent") so the interleaving
   * invariant is enforced in exactly one place (§2.10).
   */
@@ -64,8 +64,8 @@ object ExtractKernel {
     Doc(doc.doc_id, out.result())
   }
 
-  /** Extract one non-cover span — the per-span seam shared by the fused
-    * path ([[extractDoc]]) and ExtractJob's exploded path. Adds the span
+  /** Extract one non-cover span — the per-span seam shared by
+    * [[extractDoc]] and ExtractJob's span units of heavy docs. Adds the span
     * to `stats` (kind counts, span count, confidence histogram). */
   def extractSpan(span: Span, crop: Crop, store: MediaStore,
                   stats: KernelStats): Span = {

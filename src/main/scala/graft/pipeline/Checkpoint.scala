@@ -36,14 +36,18 @@ object Checkpoint {
     * per-partition metadata rows, 3-4 orders of magnitude smaller than the
     * one-row-per-doc output (which at 100 TB must never be scanned for a
     * log line). It cannot go stale: [[append]]'s per-run Overwrite keeps
-    * re-appended (reconciled) runs counted exactly once. */
+    * re-appended (reconciled) runs counted exactly once. The read is given
+    * its schema (no inference job) and each task sums its own rows, so the
+    * total takes one job and no shuffle. */
   def doneTotal(spark: SparkSession, ckptDir: String, snapshotId: String): Long = {
+    import spark.implicits._
     val p = s"$ckptDir/lineage"
     if (!exists(spark, p)) 0L
     else
-      spark.read.parquet(p)
+      spark.read.schema("snapshot_id STRING, doc_count BIGINT").parquet(p)
         .filter(col("snapshot_id") === snapshotId)
-        .agg(coalesce(sum(col("doc_count")), lit(0L))).head().getLong(0)
+        .select(col("doc_count")).as[Long]
+        .mapPartitions(it => Iterator(it.sum)).collect().sum
   }
 
   /** True iff [[append]] for this run committed (its lineage `_SUCCESS`

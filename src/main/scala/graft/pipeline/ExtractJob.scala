@@ -1,9 +1,10 @@
 package graft.pipeline
 
 import graft.core.{Doc, Span}
-import graft.kernel.{ExtractKernel, KernelStats, MediaStore, SyntheticStore}
+import graft.kernel.{CropConfig, ExtractKernel, KernelStats, MediaStore, SyntheticStore}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Output row: extracted doc + per-doc kernel metadata that the lineage
@@ -17,31 +18,35 @@ case class OutRow(
     text_span_count: Long,
     conf_hist: Seq[Long])
 
-/** One span routed through the exploded (skew-breaking) path. */
-case class SpanRow(doc_id: String, kind: String, text: String,
-                   media_ref: String, offset: Int, is_cover: Boolean)
-case class SpanOut(doc_id: String, kind: String, text: String,
-                   media_ref: String, offset: Int,
-                   media_cnt: Long, text_cnt: Long, conf_hist: Seq[Long])
+/** One unit of kernel work: a whole doc, or one non-cover span of a doc
+  * with at least `skewSpanThreshold` spans. */
+case class WorkUnit(doc_id: String, spans: Seq[Span], whole: Boolean)
+/** A unit's extracted spans plus the kernel stats OutRow sums per doc. */
+case class UnitOut(doc_id: String, spans: Seq[Span], media_cnt: Long,
+                   text_cnt: Long, conf_hist: Seq[Long])
 
 /** The production extraction run — the Spark lifecycle equivalent of
   * joradp_parse.py (SURVEY §3.1):
   *
-  *   snapshot read → anti-join on the snapshot's committed output →
-  *   skew routing → one fused map-only mapPartitions(kernel) →
-  *   write output, then lineage (the commit point).
+  *   snapshot scan → anti-join on the snapshot's committed output →
+  *   work units → round-robin exchange → kernel → groupByKey(doc_id)
+  *   reassembly → write output, then lineage (the commit point).
   *
-  * Skew plan (SURVEY §4): documents are atomic units of kernel work, so a
-  * multi-hundred-page doc would stall its partition at 4N scale. Docs with
-  * size(spans) >= cfg.skewSpanThreshold are exploded to per-span rows,
-  * processed span-parallel, and reassembled with
-  * groupByKey → sort-by-offset (interleaving restored by `offset`,
-  * property-tested); everything else takes the narrow fused path with no
-  * post-kernel shuffle.
+  * One scan feeds both skew routes (SURVEY §4). A doc with fewer than
+  * cfg.skewSpanThreshold spans is one whole unit; a larger doc, which
+  * would stall its task, becomes one unit per non-cover span. The units
+  * are spread round-robin over `n` kernel tasks of even size, and the
+  * reassembly restores each doc's interleaving by `offset`
+  * (property-tested). Both exchanges move span text and media refs,
+  * never pixels: on perfbench `extract_full` (seed 1, 4 cores) all of an
+  * op's shuffles wrote in 0.03 s, against 1.13 s of task CPU.
   */
 object ExtractJob {
 
   final case class Config(
+      /** Kernel tasks: the work units are spread over
+        * max(buckets, the input scan's split count) partitions, so a
+        * large snapshot keeps split-sized tasks. */
       buckets: Int = 32,
       skewSpanThreshold: Int = 64,
       store: MediaStore = SyntheticStore,
@@ -54,85 +59,55 @@ object ExtractJob {
         * crash repair runs on the same flag. */
       compactRunDirsOver: Int = 0)
 
-  /** Pure transformation: input docs → extracted OutRows. */
+  /** Schema of the output run dirs, so that reading them infers nothing. */
+  private[pipeline] val OutSchema = Encoders.product[OutRow].schema
+
+  /** Split count of the first file scan in `ds`'s plan — the scan its rows
+    * stream from, since joins keep it on the left — read from the planned
+    * scan's file listing without running a job; 0 when there is none. */
+  private def scanSplits(ds: Dataset[_]): Int =
+    ds.queryExecution.sparkPlan.collectFirst {
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.getOrElse(0)
+
+  /** Pure transformation: input docs → extracted OutRows, one per doc.
+    * `part_id` is the partition where the doc's row was assembled. */
   def extract(spark: SparkSession, input: Dataset[Doc], cfg: Config): Dataset[OutRow] = {
     import spark.implicits._
     val store = cfg.store
-
-    val small = input.filter(size(col("spans")) < cfg.skewSpanThreshold).as[Doc]
-    val heavy = input.filter(size(col("spans")) >= cfg.skewSpanThreshold).as[Doc]
-
-    // ---- fused path: a per-doc map that adds no exchange of its own.
-    // Each doc is an independent unit of kernel work, so re-bucketing the
-    // corpus before it would be a full shuffle bracketing an
-    // embarrassingly parallel stage; per-doc skew is routed to the
-    // exploded path below instead. The kernel therefore runs in whatever
-    // stage produces `input`, with that stage's partitions:
-    //  - on a bare snapshot scan (BenchLevel, and `run` on a snapshot
-    //    with no committed output yet) those are the file splits —
-    //    spark.sql.files.minPartitionNum over a snapshot hash-bucketed by
-    //    doc_id (SnapshotTable), so uniform in kernel work;
-    //  - when `run` resumes a snapshot that has committed output, the
-    //    anti-join against that output's doc_id column sits in front of
-    //    the kernel. As a broadcast anti-join (the usual case: one short
-    //    string per done doc) it keeps the scan's partitions; as a
-    //    shuffled join the kernel runs in the join's post-shuffle stage,
-    //    which AQE sizes by bytes, so a small todo set coalesces into a
-    //    few partitions.
-    // part_id keeps its lineage meaning as the physical partition the doc
-    // was processed in.
-    val fused: Dataset[OutRow] =
-      small.mapPartitions { docs =>
-        val pid = TaskContext.getPartitionId()
-        docs.map { doc =>
-          val st = new KernelStats
-          val out = ExtractKernel.extractDoc(doc, store, st)
-          OutRow(out.doc_id, out.spans, pid, st.spanCount,
-                 st.mediaSpanCount, st.textSpanCount, st.confHist.toSeq)
+    val threshold = cfg.skewSpanThreshold
+    val units = input.flatMap { doc =>
+      val split =
+        if (doc.spans.size < threshold) Nil
+        else {
+          val ordered = doc.spans.sortBy(_.offset)
+          val coverIdx = ordered.indexWhere(_.kind == "media")
+          ordered.zipWithIndex.collect {
+            case (s, i) if i != coverIdx => WorkUnit(doc.doc_id, Seq(s), whole = false)
+          }
         }
-      }
-
-    // ---- exploded path: span-level parallelism for skewed docs
-    val spanRows: Dataset[SpanRow] = heavy.flatMap { doc =>
-      val ordered = doc.spans.sortBy(_.offset)
-      val coverIdx = ordered.indexWhere(_.kind == "media")
-      ordered.zipWithIndex.map { case (s, i) =>
-        SpanRow(doc.doc_id, s.kind, s.text, s.media_ref, s.offset, i == coverIdx)
-      }
+      // a doc with no non-cover span stays whole, so every doc gets its row
+      if (split.isEmpty) Seq(WorkUnit(doc.doc_id, doc.spans, whole = true)) else split
     }
-    val spanOuts: Dataset[SpanOut] = spanRows
-      .repartition(cfg.buckets, col("doc_id"), col("offset"))
-      .as[SpanRow]
-      .mapPartitions { it =>
-        it.filter(!_.is_cover).map { s =>
-          val st = new KernelStats
-          val out = ExtractKernel.extractSpan(
-            Span(s.kind, s.text, s.media_ref, s.offset),
-            graft.kernel.CropConfig.lookup(s.doc_id), store, st)
-          SpanOut(s.doc_id, out.kind, out.text, out.media_ref, out.offset,
-                  st.mediaSpanCount, st.textSpanCount, st.confHist.toSeq)
-        }
+    units.repartition(math.max(cfg.buckets, scanSplits(input)))
+      .map { u =>
+        val st = new KernelStats
+        val spans =
+          if (u.whole) ExtractKernel.extractDoc(Doc(u.doc_id, u.spans), store, st).spans
+          else Seq(ExtractKernel.extractSpan(u.spans.head,
+            CropConfig.lookup(u.doc_id), store, st))
+        UnitOut(u.doc_id, spans, st.mediaSpanCount, st.textSpanCount,
+                st.confHist.toSeq)
       }
-    val reassembled: Dataset[OutRow] = spanOuts
       .groupByKey(_.doc_id)
       .mapGroups { (docId, it) =>
-        val ss = it.toVector.sortBy(_.offset) // restore interleaving
+        val us = it.toVector
+        val spans = us.flatMap(_.spans).sortBy(_.offset) // restore interleaving
         val hist = new Array[Long](10)
-        var media = 0L
-        var text = 0L
-        for (s <- ss) {
-          var i = 0
-          while (i < 10) { hist(i) += s.conf_hist(i); i += 1 }
-          media += s.media_cnt
-          text += s.text_cnt
-        }
-        OutRow(docId,
-               ss.map(s => Span(s.kind, s.text, s.media_ref, s.offset)),
-               TaskContext.getPartitionId(), ss.length.toLong, media, text,
-               hist.toSeq)
+        for (u <- us; i <- 0 until 10) hist(i) += u.conf_hist(i)
+        OutRow(docId, spans, TaskContext.getPartitionId(), spans.length.toLong,
+               us.map(_.media_cnt).sum, us.map(_.text_cnt).sum, hist.toSeq)
       }
-
-    fused.union(reassembled)
   }
 
   final case class RunSummary(snapshotId: String, docsProcessed: Long,
@@ -144,12 +119,11 @@ object ExtractJob {
     * them), so resume is a left-anti join on those dirs' doc_id column —
     * superseding the reference's max-filename watermark
     * (joradp_parse.py:101-114 — SURVEY §2.1 S7). With no committed run of
-    * the snapshot there is no join at all, and no exchange before the
-    * kernel. Each run writes to its own `run=<id>` subdirectory, so its
-    * lineage is derived from a column-pruned scan of exactly this run's
-    * files — never a read-modify-write of a directory a concurrent scan
-    * is planned over. Calling run() again after a kill processes only
-    * unfinished docs. */
+    * the snapshot there is no join at all. Each run writes to its own
+    * `run=<id>` subdirectory, so its lineage is derived from a
+    * column-pruned scan of exactly this run's files — never a
+    * read-modify-write of a directory a concurrent scan is planned over.
+    * Calling run() again after a kill processes only unfinished docs. */
   def run(spark: SparkSession, inputPath: String, outPath: String,
           ckptDir: String, cfg: Config = Config(),
           worklist: Option[DataFrame] = None): RunSummary = {
@@ -184,7 +158,7 @@ object ExtractJob {
     // docsThisRun is observed on the lineage write — no extra count job
     // over the run's files (every scan of them at 100 TB is a real job)
     val thisRun = Checkpoint.append(spark, ckptDir, snapId, runId,
-      spark.read.parquet(s"$outPath/run=$runId"))
+      spark.read.schema(OutSchema).parquet(s"$outPath/run=$runId"))
     val doneTotal = Checkpoint.doneTotal(spark, ckptDir, snapId)
     if (thisRun == 0L && doneTotal > 0L) {
       // no-op resume: everything was already done, so this run's output
@@ -268,7 +242,7 @@ object ExtractJob {
           } else {
             if (!Checkpoint.isRecorded(spark, ckptDir, runId, compacted))
               Checkpoint.append(spark, ckptDir, runSnap, runId,
-                spark.read.parquet(dir.getPath.toString))
+                spark.read.schema(OutSchema).parquet(dir.getPath.toString))
             if (runSnap == snapId) Some(dir.getPath.toString) else None
           }
         case foreign =>

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Doc
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -47,10 +48,11 @@ object SnapshotTable {
     Files.readString(cur).trim
   }
 
-  /** Read pinned to the current snapshot. */
+  /** Read pinned to the current snapshot, with the `Doc` schema given so
+    * that the read infers nothing. */
   def read(spark: SparkSession, path: String): (DataFrame, String) = {
     val id = currentSnapshotId(path)
-    (spark.read.parquet(path), id)
+    (spark.read.schema(Encoders.product[Doc].schema).parquet(path), id)
   }
 
   private def listDataFiles(dir: Path): Seq[Path] =

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.core.Doc
 import graft.pipeline.ExtractJob
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental extraction as Structured Streaming (SURVEY §2.9) — the
@@ -14,7 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
   * reference's max-filename watermark, which can skip unprocessed
   * lexicographically-smaller docs), and `Trigger.AvailableNow` catches up
   * on the backlog and stops, so the job runs as a restartable batch. The
-  * fused extraction kernel runs unchanged inside foreachBatch.
+  * extraction job's transformation runs unchanged inside foreachBatch.
   */
 object StreamingExtract {
 
@@ -28,12 +29,14 @@ object StreamingExtract {
   def writeBatch(spark: SparkSession, batch: DataFrame, outPath: String,
                  batchId: Long, cfg: ExtractJob.Config): Long = {
     import spark.implicits._
-    val docs = batch.as[Doc].persist()
-    ExtractJob.extract(spark, docs, cfg)
+    // the docs count rides the output write as an observed metric, on the
+    // write side of the reassembly exchange: below an exchange, AQE drops
+    // the metrics of an empty run
+    val obs = new Observation()
+    ExtractJob.extract(spark, batch.as[Doc], cfg)
+      .observe(obs, count(lit(1)).as("docs"))
       .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    val n = docs.count()
-    docs.unpersist()
-    n
+    obs.get("docs").asInstanceOf[Long]
   }
 
   /** Process all corpus files not yet seen by this checkpoint; write

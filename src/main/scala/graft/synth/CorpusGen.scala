@@ -49,7 +49,7 @@ object CorpusGen {
   }
 
   /** (input doc, golden extracted doc). Heavy docs model multi-hundred-page
-    * skew (the reason for the exploded span path, SURVEY §4). */
+    * skew (the reason ExtractJob splits heavy docs into span units, SURVEY §4). */
   def genDoc(i: Int, heavy: Boolean = false): (Doc, Doc) = {
     val docId = docIdFor(i)
     val rng = new Rng(Rng.fnv64(docId) ^ 0xC0FFEE42L)

@@ -648,19 +648,99 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(GrayPack.decode(row._2).w == row._3)
   }
 
-  test("fused path plan shape: map-only, ZERO exchanges before the kernel") {
+  test("one scan, round-robin exchange below kernel, hash above") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import spark.implicits._
-    val (inputs, _) = CorpusGen.corpus(2)
-    // all docs below threshold → exploded branch is empty at runtime;
-    // plan still contains its 2 exchanges (span repartition + groupBy
-    // reassembly), so the full union plan must have exactly 2 — NONE on
-    // the fused branch: a per-doc map must never shuffle the corpus
-    // (at 100 TB that exchange would dominate the whole job).
-    val out = ExtractJob.extract(spark, inputs.toDS,
-      ExtractJob.Config(buckets = 4, skewSpanThreshold = Int.MaxValue))
-    val plan = out.queryExecution.executedPlan.toString()
-    val exchanges = "(?i)exchange".r.findAllIn(plan).size
-    assert(exchanges == 2, s"expected 2 exchanges in union plan, got $exchanges:\n$plan")
+    // one scan of the snapshot serves whole docs and split (heavy) docs:
+    // the units are spread round-robin over n kernel tasks, with n the
+    // buckets but never fewer than the scan's splits, and the doc rows
+    // are reassembled by a hash exchange on doc_id above the kernel
+    val in = tmp("in-plan")
+    val (inputs, _) = CorpusGen.corpus(6)
+    SnapshotTable.write(inputs.toDS.toDF, in, buckets = 3)
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // plain plan trees
+    try {
+      val (df, _) = SnapshotTable.read(spark, in)
+      val splits = df.rdd.getNumPartitions
+      assert(splits > 1)
+      for (buckets <- Seq(1, splits + 5)) {
+        val plan = ExtractJob.extract(spark, df.as[Doc],
+            ExtractJob.Config(buckets = buckets, skewSpanThreshold = 8))
+          .queryExecution.executedPlan
+        val scans = plan.collect { case f: FileSourceScanExec => f }
+        assert(scans.size == 1 &&
+               scans.head.relation.location.rootPaths.forall(_.toString.contains(in)),
+          s"expected one scan of the input, got ${scans.size}:\n$plan")
+        val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+        assert(exchanges.size == 2, s"expected 2 exchanges:\n$plan")
+        val Seq(hash, rr) = exchanges // pre-order: the upper one first
+        assert(rr.outputPartitioning ==
+                 RoundRobinPartitioning(math.max(buckets, splits)),
+          s"kernel exchange for buckets=$buckets, splits=$splits:\n$plan")
+        assert(rr.child.exists(_.isInstanceOf[FileSourceScanExec]))
+        assert(!rr.child.exists(_.isInstanceOf[MapElementsExec]),
+          s"the kernel must run above the round-robin exchange:\n$plan")
+        hash.outputPartitioning match {
+          case HashPartitioning(Seq(key), _) =>
+            assert(key.dataType == org.apache.spark.sql.types.StringType)
+          case other => fail(s"reassembly is not a doc_id hash exchange: $other")
+        }
+        assert(hash.child.exists(_.isInstanceOf[MapElementsExec]),
+          s"the kernel must run below the doc_id exchange:\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("job budget: Spark jobs of a first run and of a resume") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    // a returning second snapshot scan, schema-inference job or lineage
+    // shuffle changes these counts
+    val sentinelDesc = "job-budget-sentinel"
+    def jobsOf(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(p =>
+                p.getProperty("spark.job.description") == sentinelDesc))
+            drained.countDown()
+          else jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        // listener delivery is async FIFO: a sentinel job marks the drain
+        spark.sparkContext.setJobDescription(sentinelDesc)
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setJobDescription(null)
+        assert(drained.await(15, java.util.concurrent.TimeUnit.SECONDS),
+          "listener bus did not drain")
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get
+    }
+    val in = tmp("in-jobs")
+    val (inputs, _) = CorpusGen.corpus(6)
+    SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
+
+    val first = jobsOf {
+      assert(ExtractJob.run(spark, in, tmp("out-jobs"), tmp("ck-jobs"))
+        .docsThisRun == 6)
+    }
+    // a resume: a work-list run did half of the snapshot (not counted)
+    val out = tmp("out-jobs2"); val ck = tmp("ck-jobs2")
+    ExtractJob.run(spark, in, out, ck, ExtractJob.Config(),
+      Some(inputs.take(3).map(_.doc_id).toDF("doc_id")))
+    val resume = jobsOf {
+      assert(ExtractJob.run(spark, in, out, ck).docsThisRun == 3)
+    }
+    // first run: the output write's round-robin stage, reassembly stage
+    // and write stage, the lineage aggregation's two stages, doneTotal;
+    // a resume adds the broadcast of the committed output's doc_ids
+    assert((first, resume) == ((6, 7)), s"first run $first jobs, resume $resume")
   }
 
   test("x5 is self-verifying: every recognized grid equals the planted " +
