@@ -28,9 +28,6 @@ case class BBox(x1: Int, y1: Int, x2: Int, y2: Int) {
   def contains(o: BBox): Boolean =
     x1 <= o.x1 && y1 <= o.y1 && x2 >= o.x2 && y2 >= o.y2
 
-  def containsPoint(px: Int, py: Int): Boolean =
-    x1 <= px && px < x2 && y1 <= py && py < y2
-
   def intersect(o: BBox): BBox =
     BBox(math.max(x1, o.x1), math.max(y1, o.y1),
          math.min(x2, o.x2), math.min(y2, o.y2))

@@ -56,22 +56,6 @@ final class Bin(val w: Int, val h: Int, val b: Array[Boolean]) {
     c
   }
 
-  /** Ink pixels per row — the projection profile used for orientation
-    * detection (our classical stand-in for tesseract OSD,
-    * classes/ocr_processor.py:268-295). */
-  def rowProfile: Array[Int] = {
-    val p = new Array[Int](h)
-    var y = 0
-    while (y < h) {
-      var c = 0
-      var x = 0
-      while (x < w) { if (b(y * w + x)) c += 1; x += 1 }
-      p(y) = c
-      y += 1
-    }
-    p
-  }
-
   override def equals(o: Any): Boolean = o match {
     case g: Bin => g.w == w && g.h == h && java.util.Arrays.equals(g.b, b)
     case _ => false

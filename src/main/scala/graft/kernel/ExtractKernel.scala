@@ -23,11 +23,6 @@ final class KernelStats {
   var textSpanCount = 0L
   val confHist = new Array[Long](10) // [0.0,0.1) .. [0.9,1.0]
 
-  def addConf(c: Double): Unit = {
-    val b = math.min(9, math.max(0, (c * 10).toInt))
-    confHist(b) += 1
-  }
-
   def addHist(h: Array[Long]): Unit = {
     var i = 0
     while (i < 10) { confHist(i) += h(i); i += 1 }

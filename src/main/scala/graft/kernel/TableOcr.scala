@@ -15,17 +15,9 @@ object TableOcr {
   /** Gap (logical px) above which two cells are in different rows. */
   val RowGap = 6
 
-  /** Recognize the text of one detected cell (2x coords) on an upright
-    * stored page. The 1px hole expansion captured rule-line slivers; the
+  /** Recognize the text of one detected cell (2x coords) on the binarized
+    * logical page. The 1px hole expansion captured rule-line slivers; the
     * glyph-size graphics gate in segmentAndClassify drops them. */
-  def cellText(stored: Gray, cell2x: BBox): String = {
-    val n = stored.px.length / (Recognize.PageScale * Recognize.PageScale)
-    val logical = stored.downsample(Recognize.PageScale,
-      PlanePool.bytes("tocr.ds", n))
-    val bin = Otsu.binarizeInv(logical, PlanePool.bools("tocr.bin", n))
-    cellTextOn(bin, cell2x)
-  }
-
   private def cellTextOn(bin: Bin, cell2x: BBox): String = {
     val b = BBox(
       math.max(0, cell2x.x1 / 2), math.max(0, cell2x.y1 / 2),

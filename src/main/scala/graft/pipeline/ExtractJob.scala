@@ -49,15 +49,7 @@ object ExtractJob {
         * large snapshot keeps split-sized tasks. */
       buckets: Int = 32,
       skewSpanThreshold: Int = 64,
-      store: MediaStore = SyntheticStore,
-      /** Compact the lineage table when its `run=` subdir count exceeds
-        * this (0 = disabled). A long-lived incremental table accretes one
-        * lineage subdir per run; past the threshold
-        * [[Checkpoint.compact]] rewrites them into one consolidated dir
-        * so the lineage listing stays bounded over hundreds of runs.
-        * Once enabled for a table, keep it enabled: the compaction's
-        * crash repair runs on the same flag. */
-      compactRunDirsOver: Int = 0)
+      store: MediaStore = SyntheticStore)
 
   /** Schema of the output run dirs, so that reading them infers nothing. */
   private[pipeline] val OutSchema = Encoders.product[OutRow].schema
@@ -135,10 +127,6 @@ object ExtractJob {
     // re-appends the lineage of a committed but unrecorded one, and
     // returns this snapshot's committed dirs — the docs already done
     val doneRuns = reconcile(spark, outPath, ckptDir, snapId)
-    // optional lineage compaction (after reconcile, which may have
-    // re-appended a crashed run's lineage)
-    if (cfg.compactRunDirsOver > 0)
-      Checkpoint.compact(spark, ckptDir, cfg.compactRunDirsOver)
 
     // optional selective work-list (F2/J5: the reference's CSV-driven
     // reprocessing, joradp_correct_add_missing_bboxes.py:179-192) — a
@@ -228,10 +216,6 @@ object ExtractJob {
     if (!fs.exists(root)) return Seq.empty
     val runDirs = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("run="))
-    // one manifest sweep for the whole reconcile: the per-dir isRecorded
-    // would re-list the lineage root and re-read every consolidated
-    // manifest on each compacted-run miss
-    val compacted = Checkpoint.compactedRunIds(spark, ckptDir)
     runDirs.flatMap { dir =>
       dir.getPath.getName.stripPrefix("run=") match {
         case runId @ OwnRunId(runSnap, _) =>
@@ -240,7 +224,7 @@ object ExtractJob {
             fs.delete(new Path(s"$ckptDir/lineage/run=$runId"), true)
             None
           } else {
-            if (!Checkpoint.isRecorded(spark, ckptDir, runId, compacted))
+            if (!Checkpoint.isRecorded(spark, ckptDir, runId))
               Checkpoint.append(spark, ckptDir, runSnap, runId,
                 spark.read.schema(OutSchema).parquet(dir.getPath.toString))
             if (runSnap == snapId) Some(dir.getPath.toString) else None

@@ -346,107 +346,56 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(r2.docsThisRun == 5 && r2.docsProcessed == 8)
   }
 
-  test("checkpoint compaction: many incremental runs keep the done/lineage " +
-       "dir count bounded, resume semantics and totals unchanged") {
+  test("many incremental runs: resume, totals and recorded status hold") {
     import spark.implicits._
     val in = tmp("cin"); val out = tmp("cout"); val ck = tmp("cck")
     val (inputs, goldens) = CorpusGen.corpus(10)
     SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
-    val cfg = ExtractJob.Config(buckets = 2, compactRunDirsOver = 3)
-    def runDirs(sub: String): Seq[String] = {
-      val d = new java.io.File(s"$ck/$sub")
-      if (!d.exists) Seq.empty
-      else d.listFiles.filter(f => f.isDirectory &&
-        f.getName.startsWith("run=")).map(_.getName).toSeq
-    }
+    val cfg = ExtractJob.Config(buckets = 2)
     // 10 incremental runs, one doc each, via single-doc work-lists
     for (doc <- inputs.map(_.doc_id)) {
       ExtractJob.run(spark, in, out, ck, cfg,
         worklist = Some(Seq(doc).toDF("doc_id")))
-      assert(runDirs("lineage").size <= 4, // threshold + this run's dir
-        s"lineage dirs unbounded: ${runDirs("lineage")}")
       assert(!new java.io.File(s"$ck/done").exists,
         "no done table is written: the committed output is the record")
     }
-    // post-compaction the totals and output are exactly the 10 docs
+    // a final full run finds every doc done and counts each once
     val fin = ExtractJob.run(spark, in, out, ck, cfg)
-    assert(fin.docsThisRun == 0, "resume must still see every compacted doc")
-    assert(fin.docsProcessed == 10,
-      "lineage totals must survive compaction without double-count")
+    assert(fin.docsThisRun == 0, "resume must see every committed doc")
+    assert(fin.docsProcessed == 10, "lineage totals must count each run once")
     val outDocs = ExtractJob.readOutput(spark, out).collect().toSeq
     assert(outDocs.map(_.doc_id).distinct.size == 10 && outDocs.size == 10)
     assertSpanEquality(outDocs, goldens)
-    // every historical run id stays recorded (via consolidated manifests),
-    // so reconcile of the long-lived OUTPUT dirs never re-appends them
+    // every output run dir is recorded, so reconcile never re-appends it
     for (d <- new java.io.File(out).listFiles
            if d.getName.startsWith("run="))
       assert(Checkpoint.isRecorded(spark, ck, d.getName.stripPrefix("run=")),
-        s"${d.getName} lost its recorded status after compaction")
+        s"${d.getName} is not recorded in the lineage")
   }
 
-  test("checkpoint compaction crash repair: an uncommitted consolidated " +
-       "pair rolls back; a committed manifest finishes its deletes") {
+  test("a doc with no content span gets one row with empty spans and " +
+       "counts as done") {
     import spark.implicits._
-    val in = tmp("rin"); val out = tmp("rout"); val ck = tmp("rck")
-    val (inputs, _) = CorpusGen.corpus(4)
-    SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
-    for (doc <- inputs.map(_.doc_id))
-      ExtractJob.run(spark, in, out, ck,
-        worklist = Some(Seq(doc).toDF("doc_id")))
-    val before = Checkpoint.doneTotal(spark, ck,
-      SnapshotTable.currentSnapshotId(in))
-    assert(before == 4)
-    // simulate a crash BEFORE the manifest commit: a half-written
-    // consolidated lineage dir exists, sources intact
-    spark.read.parquet(s"$ck/lineage").drop("run")
-      .write.parquet(s"$ck/lineage/run=compact_999") // no _manifest.txt
-    Checkpoint.repairCompaction(spark, ck)
-    assert(!new java.io.File(s"$ck/lineage/run=compact_999").exists)
-    assert(Checkpoint.doneTotal(spark, ck,
-      SnapshotTable.currentSnapshotId(in)) == 4, "rollback lost rows")
-    // now a real compaction, then simulate a crash AFTER the commit
-    // point: resurrect one absorbed source dir and let repair finish
-    val srcs = new java.io.File(s"$ck/lineage").listFiles
-      .map(_.getName).filter(_.startsWith("run=")).toSeq
-    assert(Checkpoint.compact(spark, ck, 1))
-    val consolidated = new java.io.File(s"$ck/lineage").listFiles
-      .map(_.getName).filter(_.startsWith("run=compact_")).toSeq
-    assert(consolidated.size == 1 && srcs.nonEmpty)
-    val ghost = srcs.head.stripPrefix("run=")
-    new java.io.File(s"$ck/lineage/run=$ghost").mkdirs()
-    Checkpoint.repairCompaction(spark, ck)
-    assert(!new java.io.File(s"$ck/lineage/run=$ghost").exists,
-      "committed manifest must finish deleting absorbed sources")
-    assert(Checkpoint.doneTotal(spark, ck,
-      SnapshotTable.currentSnapshotId(in)) == 4)
-  }
-
-  test("checkpoint compaction: a crash mid-manifest-write (tmp file only) " +
-       "is uncommitted and rolls back, never treated as a commit") {
-    import spark.implicits._
-    val in = tmp("min"); val out = tmp("mout"); val ck = tmp("mck")
-    val (inputs, _) = CorpusGen.corpus(4)
-    SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
-    for (doc <- inputs.map(_.doc_id))
-      ExtractJob.run(spark, in, out, ck,
-        worklist = Some(Seq(doc).toDF("doc_id")))
-    val snap = SnapshotTable.currentSnapshotId(in)
-    assert(Checkpoint.doneTotal(spark, ck, snap) == 4)
-    // simulate the r6 atomic-commit crash window: consolidated lineage
-    // fully written (with _SUCCESS) but the manifest only exists under
-    // its TEMP name — the rename never happened. Before the tmp+rename
-    // fix, an empty/partial _manifest.txt at the final name would have
-    // read as committed and left the absorbed sources' rows duplicated.
-    spark.read.parquet(s"$ck/lineage").drop("run")
-      .write.parquet(s"$ck/lineage/run=compact_777")
-    val tmpMf = new java.io.File(s"$ck/lineage/run=compact_777/_manifest.txt.tmp")
-    val w = new java.io.PrintWriter(tmpMf)
-    try w.println("half-written") finally w.close()
-    Checkpoint.repairCompaction(spark, ck)
-    assert(!new java.io.File(s"$ck/lineage/run=compact_777").exists,
-      "tmp-only manifest must read as uncommitted -> rollback")
-    assert(Checkpoint.doneTotal(spark, ck, snap) == 4,
-      "rollback must leave source rows intact and never double-count")
+    val in = tmp("ein"); val out = tmp("eout"); val ck = tmp("eck")
+    val (inputs, goldens) = CorpusGen.corpus(4)
+    val cover = inputs.head.spans.sortBy(_.offset).find(_.kind == "media").get
+    val empties = Seq(Doc("F1999001", Seq.empty), Doc("F1999002", Seq(cover)))
+    SnapshotTable.write((inputs ++ empties).toDS.toDF, in, buckets = 2)
+    // threshold 1 sends every doc with a span down the split route, so both
+    // empty docs reach the fallback that keeps a doc with no non-cover
+    // span whole
+    val r = ExtractJob.run(spark, in, out, ck,
+      ExtractJob.Config(buckets = 2, skewSpanThreshold = 1))
+    assert(r.docsThisRun == 6 && r.docsProcessed == 6)
+    assert(Checkpoint.lineage(spark, ck).agg(sum("doc_count")).head.getLong(0) == 6)
+    val outDocs = ExtractJob.readOutput(spark, out).collect().toSeq
+    for (e <- empties) {
+      val rows = outDocs.filter(_.doc_id == e.doc_id)
+      assert(rows.size == 1 && rows.head.spans.isEmpty,
+        s"${e.doc_id}: want one row with empty spans, got $rows")
+    }
+    assertSpanEquality(outDocs.filterNot(d => empties.exists(_.doc_id == d.doc_id)),
+      goldens)
   }
 
   test("JSON export: year-partitioned sink roundtrips the span arrays (S6)") {

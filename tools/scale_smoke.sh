@@ -1,15 +1,21 @@
 #!/bin/bash
 # 50k-doc spark-submit scale smoke with a real mid-extract kill — validates
 # the crash-window reconcile (pipeline/ExtractJob.reconcile) at scale, not
-# just in PipelineSpec's simulated crash: gen -> extract killed -9 at ~50% ->
-# re-submit (reconcile cleans the uncommitted run dir, completes all docs) ->
-# third submit resumes as a no-op -> duplicate-free output asserted.
+# just in PipelineSpec's simulated crash: gen -> extract killed -9 inside a
+# crash window -> re-submit (reconcile cleans the uncommitted run dir, or
+# re-appends a committed run's lineage, and completes all docs) -> third
+# submit resumes as a no-op -> duplicate-free output asserted.
+#
+# The output run dir exists only while the extract writes, near its end, so
+# the kill is not timed: the script polls every 0.2 s and kills as soon as a
+# run dir appears, with kill_after_sec as the upper bound. It prints which
+# window the kill hit and fails if it hit none.
 #
 # Usage: tools/scale_smoke.sh [ndocs] [kill_after_sec]   (spark-submit on PATH;
 # master cores, shuffle partitions and driver heap come from this host)
 set -u
 NDOCS=${1:-50000}
-KILL_AFTER=${2:-50}
+KILL_AFTER=${2:-600}
 JAR=$(ls -t target/scala-2.13/ocrrecognitionspark_*.jar | head -1)
 BASE=/tmp/graft_scale_smoke
 CORES=$(nproc)
@@ -24,15 +30,34 @@ rm -rf "$BASE"; mkdir -p "$BASE"
 echo "== gen $NDOCS docs"
 time $SUBMIT gen "$BASE/snap" "$NDOCS" 2>"$BASE/gen.err" | grep GEN
 
-echo "== extract (killed -9 after ${KILL_AFTER}s)"
+echo "== extract (killed -9 once a run dir exists, at most ${KILL_AFTER}s)"
+START=$(date +%s.%N)
 setsid $SUBMIT extract "$BASE/snap" "$BASE/out" "$BASE/ckpt" \
   >"$BASE/extract1.out" 2>"$BASE/extract1.err" &
 PID=$!
-sleep "$KILL_AFTER"
+for ((i = 0; i < KILL_AFTER * 5; i++)); do
+  compgen -G "$BASE/out/run=*" >/dev/null && break
+  kill -0 "$PID" 2>/dev/null || break
+  sleep 0.2
+done
 kill -9 -- "-$PID" 2>/dev/null
 wait "$PID" 2>/dev/null
-echo "killed extract pgid $PID after ${KILL_AFTER}s"
+echo "killed extract pgid $PID after $(awk -v s="$START" -v e="$(date +%s.%N)" 'BEGIN {printf "%.1f", e - s}') s"
 ls "$BASE/out" 2>/dev/null || echo "(no output dir yet)"
+RUN=$(compgen -G "$BASE/out/run=*" | head -1)
+if [ -z "$RUN" ]; then
+  WINDOW="none: no run dir yet, nothing for reconcile to repair"
+elif [ ! -e "$RUN/_SUCCESS" ]; then
+  WINDOW="run dir without _SUCCESS: reconcile deletes it"
+elif [ ! -e "$BASE/ckpt/lineage/$(basename "$RUN")/_SUCCESS" ]; then
+  WINDOW="committed output without lineage _SUCCESS: reconcile re-appends its lineage"
+else
+  WINDOW="none: output and lineage both committed"
+fi
+echo "kill window: $WINDOW"
+case "$WINDOW" in
+  none*) echo "SMOKE FAILED: the kill missed every crash window"; exit 1 ;;
+esac
 
 echo "== re-submit extract (reconcile + complete)"
 time $SUBMIT extract "$BASE/snap" "$BASE/out" "$BASE/ckpt" \
