@@ -68,7 +68,8 @@ object Main {
       val sum = ExtractJob.run(spark, in, out, ckpt,
         ExtractJob.Config(buckets = buckets), worklist)
       println(s"EXTRACT snapshot=${sum.snapshotId} " +
-              s"docs_this_run=${sum.docsThisRun} docs_done=${sum.docsProcessed}")
+              s"docs_this_run=${sum.docsThisRun} " +
+              s"docs_already_done=${sum.docsAlreadyDone} docs_done=${sum.docsProcessed}")
       spark.stop()
 
     case "tables" :: in :: out :: wlCsv :: Nil =>

@@ -14,11 +14,10 @@ object SyntheticStore extends MediaStore {
   def decode(mediaRef: String): Gray = PageRenderer.decode(mediaRef)
 }
 
-/** Per-partition stats feeding the lineage table (north_rule: span counts
-  * + OCR confidence histograms per partition). */
+/** Kernel stats of one work unit, carried into its doc's output row and
+  * from there into the lineage table (north_rule: span counts + OCR
+  * confidence histograms per partition). */
 final class KernelStats {
-  var docCount = 0L
-  var spanCount = 0L
   var mediaSpanCount = 0L
   var textSpanCount = 0L
   val confHist = new Array[Long](10) // [0.0,0.1) .. [0.9,1.0]
@@ -55,16 +54,15 @@ object ExtractKernel {
       if (i != coverIdx) out += extractSpan(ordered(i), crop, store, stats)
       i += 1
     }
-    stats.docCount += 1
     Doc(doc.doc_id, out.result())
   }
 
   /** Extract one non-cover span — the per-span seam shared by
     * [[extractDoc]] and ExtractJob's span units of heavy docs. Adds the span
-    * to `stats` (kind counts, span count, confidence histogram). */
+    * to `stats` (kind counts, confidence histogram). */
   def extractSpan(span: Span, crop: Crop, store: MediaStore,
-                  stats: KernelStats): Span = {
-    val out = span.kind match {
+                  stats: KernelStats): Span =
+    span.kind match {
       case "media" =>
         val page = Recognize.recognizeStored(store.decode(span.media_ref), crop)
         stats.addHist(page.confHist)
@@ -77,9 +75,6 @@ object ExtractKernel {
         throw new IllegalArgumentException(
           s"unknown span kind '$other' at offset ${span.offset}")
     }
-    stats.spanCount += 1
-    out
-  }
 
   def extractDoc(doc: Doc): Doc = extractDoc(doc, SyntheticStore, new KernelStats)
 }

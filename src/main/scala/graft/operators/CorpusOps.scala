@@ -333,6 +333,11 @@ object CorpusOps {
     * problem the LSH blocking exists to avoid). Small corpora (< target)
     * get the full exact audit. */
   val D10AuditSampleTarget = 1000L
+  /** Longest wait for the d10 audit verdict. The audit is a fixed-size
+    * sample (~target²/2 pairs) over the cached edge set, seconds at any
+    * corpus size, so a wait this long means a hung job. */
+  val D10AuditTimeout: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(10, "minutes")
   private def d9Seed(t: Int): Long = 1000003L * t + 42L
 
   /** d9: embedding-cosine near-duplicate pairs with an EXACT integer
@@ -439,159 +444,172 @@ object CorpusOps {
     val nodes = table(s, dir, "embeddings").select(col("vec_id"))
     val edges = d9EmbedDup(s, dir).select(col("vec_a"), col("vec_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Recall audit (eager, like the loop's per-round convergence counts):
-    // the edge set comes from d9's LSH-blocked pair space, and a boundary
-    // pair escaping all D9Tables tables (p ≈ 0.60^16 per pair at the 0.40
-    // threshold, worse at higher thresholds) would SILENTLY split a
-    // cluster. Before resolving, the exact predicate is re-run ALL-PAIRS
-    // over a deterministic hash sample of ~D10AuditSampleTarget vectors —
-    // FIXED COUNT, not a fixed fraction, so the deliberate nested loop
-    // over the sample stays ~target²/2 pairs and the broadcast ~target
-    // rows at ANY corpus size — and any passing sample pair missing from
-    // the edge set fails the job loudly: wrong clusters never ship. The
-    // target is the audit-cost dial; the fix for a tripped audit is
-    // raising D9Tables.
-    // env escape valves (no rebuild needed when benching other scale
-    // factors): audit sample target + propagation round cap
-    val auditTarget = sys.env.get("SPARK_GRAFT_D10_AUDIT_TARGET")
-      .map(_.toLong).getOrElse(D10AuditSampleTarget)
-    val maxRounds = sys.env.get("SPARK_GRAFT_D10_MAX_ROUNDS")
-      .map(_.toInt).getOrElse(25)
-    val nVec = nodes.count() // metadata action (d10 is an eager resolver)
-    val auditMod = math.max(1L, nVec / auditTarget)
-    val sampled = quantized(s, dir)
-      .filter(pmod(xxhash64(col("vec_id")), lit(auditMod)) === 0)
-      .withColumn("nrm", dotCol(col("qv"), col("qv")))
-    val missedDf = sampled
-      .select(col("vec_id").as("vec_a"), col("qv").as("qa"), col("nrm").as("na"))
-      // repartition the streamed side (r6): the 1-file scan is a single
-      // partition, so the deliberate ~target²/2-pair nested loop ran in
-      // ONE task; spreading it over the session's width divides the
-      // audit wall by the core count (audit size is fixed, so the
-      // partition count can be the parallelism, not a data constant)
-      .repartition(s.sparkContext.defaultParallelism)
-      .join(broadcast(sampled.select(col("vec_id").as("vec_b"),
-              col("qv").as("qb"), col("nrm").as("nb"))),
-            col("vec_a") < col("vec_b"))
-      // fused predicate (see d9): one dot evaluation per sampled pair
-      // instead of three in the join condition
-      .filter(call_function("cos04_ge",
-                col("qa"), col("qb"), col("na"), col("nb")))
-      .select(col("vec_a"), col("vec_b"))
-      .join(edges, Seq("vec_a", "vec_b"), "left_anti")
-    // Each round: (1) neighbour-min step, (2) pointer-jump step
-    // (lbl := lbl(lbl)) — pointer doubling makes convergence logarithmic
-    // in component diameter instead of linear (a chain of near-dups
-    // otherwise needs diameter rounds — observed blowing the query budget
-    // at sf0.1).
-    //
-    // The LOOP runs on pair RDDs with one fixed HashPartitioner (r6,
-    // guide §2.4 "remove shuffles outright"): the DataFrame form paid
-    // full Catalyst analysis + AQE planning and re-shuffled BOTH join
-    // inputs every round because localCheckpoint erases partitioning
-    // metadata. With edges partitioned by src ONCE and labels kept
-    // partitioned by vec_id (reduceByKey/leftOuterJoin with the same
-    // partitioner preserve it), the neighbour-min join is NARROW every
-    // round — only the dst-keyed min shuffle and the jump lookup move
-    // data, and each round is exactly ONE job (the convergence count
-    // rides a LongAccumulator filled during materialization instead of a
-    // second agg job; `changed` only gates on == 0, and task re-runs of
-    // deterministic data can only re-count real changes, never invent
-    // one). localCheckpoint(eager) still truncates lineage each round.
-    // Algorithm, trajectory, round count and output are identical to the
-    // DataFrame form; at sf0.1 (longest chain ~10 doubling rounds) the
-    // per-round wall drops ~4x.
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
-    // partition count: scale-adaptive (one partition per ~100k vectors,
-    // capped below the session width; local corpora get 1 → single-task
-    // rounds, a 100 TB corpus inherits the cluster's width)
-    val nParts = math.max(1, math.min(s.sparkContext.defaultParallelism,
-      ((nVec + 99999L) / 100000L).toInt))
-    val part = new HashPartitioner(nParts)
-    val edgesBi = edges.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-      .union(edges.select(col("vec_b").as("src"), col("vec_a").as("dst")))
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize the (persisted) edge set once, up front: the audit and
-    // every propagation round read it from cache instead of racing to
-    // compute d9 concurrently
-    edgesBi.count()
-    // OVERLAPPED AUDIT (r6, guide §2.6): the audit's all-pairs re-check
-    // only needs to have PASSED before the result ships — it reads the
-    // cached edge set and is otherwise independent of the propagation
-    // loop, so its jobs run concurrently with the rounds from a helper
-    // thread (job group/description copied so a driver-side cancel of
-    // this query still covers it) and the verdict is awaited (and
-    // enforced, same require) before the labels are returned.
-    val sc = s.sparkContext
-    val groupId = sc.getLocalProperty("spark.jobGroup.id")
-    val jobDesc = sc.getLocalProperty("spark.job.description")
-    val interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
-    val auditFut = scala.concurrent.Future {
-      if (groupId != null)
-        sc.setJobGroup(groupId,
-          if (jobDesc != null) jobDesc else "d10 audit",
-          interruptOnCancel = interrupt != null && interrupt.toBoolean)
-      missedDf.count()
-    }(scala.concurrent.ExecutionContext.global)
-    // no per-round persist/localCheckpoint (r6): RDD shuffle outputs are
-    // implicit checkpoints — each round's count() schedules the full
-    // chain but every prior round's ShuffleMapStage is SKIPPED (its
-    // shuffle files are on disk), so only the narrow tail re-executes.
-    // There is no Catalyst re-analysis to truncate on the RDD side (the
-    // DataFrame loop's reason for checkpointing), and dropping the
-    // per-round persist+checkpoint removes one materialization pass per
-    // round. The `chg` accumulator fills when the mapValues segment
-    // executes (once or twice per round — the jump join reads `minned`
-    // on both sides); it gates only on == 0, so double-counting and
-    // retry re-counting are both harmless.
-    var labels = nodes.rdd.map(r => { val v = r.getLong(0); (v, v) })
-      .partitionBy(part)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val chgAcc = s.sparkContext.longAccumulator(s"d10.chg.round$rounds")
-      // neighbour-min: narrow join (both sides partitioned by `part`),
-      // then one dst-keyed min shuffle
-      val msgs = edgesBi.join(labels, part)
-        .map { case (_, (dst, lbl)) => (dst, lbl) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      val minned = labels.leftOuterJoin(msgs, part) // narrow on both sides
-        .mapValues { case (lbl, nbr) =>
-          val nl = nbr.fold(lbl)(math.min(lbl, _))
-          if (nl < lbl) chgAcc.add(1L)
-          nl
-        }
-      // pointer jump lbl := lbl(lbl): the (lbl, vec_id) side shuffles by
-      // label; the lookup side is `minned`, already partitioned by key
-      val jumped = minned.map { case (v, l) => (l, v) }
-        .leftOuterJoin(minned, part)
-        .map { case (l, (v, pl)) => (v, pl.getOrElse(l)) }
+    // both edge caches are released, and a still-running audit is
+    // cancelled, on every path out of the resolver (see the finally)
+    var edgesBi: org.apache.spark.rdd.RDD[(Long, Long)] = null
+    val auditTag = s"d10-audit-${java.util.UUID.randomUUID()}"
+    var resolved = false
+    try {
+      // Recall audit (eager, like the loop's per-round convergence counts):
+      // the edge set comes from d9's LSH-blocked pair space, and a boundary
+      // pair escaping all D9Tables tables (p ≈ 0.60^16 per pair at the 0.40
+      // threshold, worse at higher thresholds) would SILENTLY split a
+      // cluster. Before resolving, the exact predicate is re-run ALL-PAIRS
+      // over a deterministic hash sample of ~D10AuditSampleTarget vectors —
+      // FIXED COUNT, not a fixed fraction, so the deliberate nested loop
+      // over the sample stays ~target²/2 pairs and the broadcast ~target
+      // rows at ANY corpus size — and any passing sample pair missing from
+      // the edge set fails the job loudly: wrong clusters never ship. The
+      // target is the audit-cost dial; the fix for a tripped audit is
+      // raising D9Tables.
+      // env escape valves (no rebuild needed when benching other scale
+      // factors): audit sample target + propagation round cap
+      val auditTarget = sys.env.get("SPARK_GRAFT_D10_AUDIT_TARGET")
+        .map(_.toLong).getOrElse(D10AuditSampleTarget)
+      val maxRounds = sys.env.get("SPARK_GRAFT_D10_MAX_ROUNDS")
+        .map(_.toInt).getOrElse(25)
+      val nVec = nodes.count() // metadata action (d10 is an eager resolver)
+      val auditMod = math.max(1L, nVec / auditTarget)
+      val sampled = quantized(s, dir)
+        .filter(pmod(xxhash64(col("vec_id")), lit(auditMod)) === 0)
+        .withColumn("nrm", dotCol(col("qv"), col("qv")))
+      val missedDf = sampled
+        .select(col("vec_id").as("vec_a"), col("qv").as("qa"), col("nrm").as("na"))
+        // repartition the streamed side (r6): the 1-file scan is a single
+        // partition, so the deliberate ~target²/2-pair nested loop ran in
+        // ONE task; spreading it over the session's width divides the
+        // audit wall by the core count (audit size is fixed, so the
+        // partition count can be the parallelism, not a data constant)
+        .repartition(s.sparkContext.defaultParallelism)
+        .join(broadcast(sampled.select(col("vec_id").as("vec_b"),
+                col("qv").as("qb"), col("nrm").as("nb"))),
+              col("vec_a") < col("vec_b"))
+        // fused predicate (see d9): one dot evaluation per sampled pair
+        // instead of three in the join condition
+        .filter(call_function("cos04_ge",
+                  col("qa"), col("qb"), col("na"), col("nb")))
+        .select(col("vec_a"), col("vec_b"))
+        .join(edges, Seq("vec_a", "vec_b"), "left_anti")
+      // Each round: (1) neighbour-min step, (2) pointer-jump step
+      // (lbl := lbl(lbl)) — pointer doubling makes convergence logarithmic
+      // in component diameter instead of linear (a chain of near-dups
+      // otherwise needs diameter rounds — observed blowing the query budget
+      // at sf0.1).
+      //
+      // The LOOP runs on pair RDDs with one fixed HashPartitioner (r6,
+      // guide §2.4 "remove shuffles outright"): the DataFrame form paid
+      // full Catalyst analysis + AQE planning and re-shuffled BOTH join
+      // inputs every round because localCheckpoint erases partitioning
+      // metadata. With edges partitioned by src ONCE and labels kept
+      // partitioned by vec_id (reduceByKey/leftOuterJoin with the same
+      // partitioner preserve it), the neighbour-min join is NARROW every
+      // round — only the dst-keyed min shuffle and the jump lookup move
+      // data, and each round is exactly ONE job (the convergence count
+      // rides a LongAccumulator filled during materialization instead of a
+      // second agg job; `changed` only gates on == 0, and task re-runs of
+      // deterministic data can only re-count real changes, never invent
+      // one). localCheckpoint(eager) still truncates lineage each round.
+      // Algorithm, trajectory, round count and output are identical to the
+      // DataFrame form; at sf0.1 (longest chain ~10 doubling rounds) the
+      // per-round wall drops ~4x.
+      import org.apache.spark.HashPartitioner
+      import org.apache.spark.storage.StorageLevel
+      // partition count: scale-adaptive (one partition per ~100k vectors,
+      // capped below the session width; local corpora get 1 → single-task
+      // rounds, a 100 TB corpus inherits the cluster's width)
+      val nParts = math.max(1, math.min(s.sparkContext.defaultParallelism,
+        ((nVec + 99999L) / 100000L).toInt))
+      val part = new HashPartitioner(nParts)
+      edgesBi = edges.select(col("vec_a").as("src"), col("vec_b").as("dst"))
+        .union(edges.select(col("vec_b").as("src"), col("vec_a").as("dst")))
+        .rdd.map(r => (r.getLong(0), r.getLong(1)))
         .partitionBy(part)
-      jumped.count() // ONE action per round: materializes + fills chgAcc
-      labels = jumped
-      if (chgAcc.value == 0L) converged = true
-      rounds += 1
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // materialize the (persisted) edge set once, up front: the audit and
+      // every propagation round read it from cache instead of racing to
+      // compute d9 concurrently
+      edgesBi.count()
+      // OVERLAPPED AUDIT (r6, guide §2.6): the audit's all-pairs re-check
+      // only needs to have PASSED before the result ships — it reads the
+      // cached edge set and is otherwise independent of the propagation
+      // loop, so its jobs run concurrently with the rounds from a helper
+      // thread (job group/description copied so a driver-side cancel of
+      // this query still covers it; tagged so a failed resolve cancels it)
+      // and the verdict is awaited (bounded, and enforced by the same
+      // require) before the labels are returned.
+      val sc = s.sparkContext
+      val groupId = sc.getLocalProperty("spark.jobGroup.id")
+      val jobDesc = sc.getLocalProperty("spark.job.description")
+      val interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
+      val auditFut = scala.concurrent.Future {
+        if (groupId != null)
+          sc.setJobGroup(groupId,
+            if (jobDesc != null) jobDesc else "d10 audit",
+            interruptOnCancel = interrupt != null && interrupt.toBoolean)
+        sc.addJobTag(auditTag)
+        // the pool thread outlives this query: leave no group or tag on it
+        try missedDf.count()
+        finally { sc.removeJobTag(auditTag); sc.clearJobGroup() }
+      }(scala.concurrent.ExecutionContext.global)
+      // no per-round persist/localCheckpoint (r6): RDD shuffle outputs are
+      // implicit checkpoints — each round's count() schedules the full
+      // chain but every prior round's ShuffleMapStage is SKIPPED (its
+      // shuffle files are on disk), so only the narrow tail re-executes.
+      // There is no Catalyst re-analysis to truncate on the RDD side (the
+      // DataFrame loop's reason for checkpointing), and dropping the
+      // per-round persist+checkpoint removes one materialization pass per
+      // round. The `chg` accumulator fills when the mapValues segment
+      // executes (once or twice per round — the jump join reads `minned`
+      // on both sides); it gates only on == 0, so double-counting and
+      // retry re-counting are both harmless.
+      var labels = nodes.rdd.map(r => { val v = r.getLong(0); (v, v) })
+        .partitionBy(part)
+      var converged = false
+      var rounds = 0
+      while (!converged && rounds < maxRounds) {
+        val chgAcc = s.sparkContext.longAccumulator(s"d10.chg.round$rounds")
+        // neighbour-min: narrow join (both sides partitioned by `part`),
+        // then one dst-keyed min shuffle
+        val msgs = edgesBi.join(labels, part)
+          .map { case (_, (dst, lbl)) => (dst, lbl) }
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+        val minned = labels.leftOuterJoin(msgs, part) // narrow on both sides
+          .mapValues { case (lbl, nbr) =>
+            val nl = nbr.fold(lbl)(math.min(lbl, _))
+            if (nl < lbl) chgAcc.add(1L)
+            nl
+          }
+        // pointer jump lbl := lbl(lbl): the (lbl, vec_id) side shuffles by
+        // label; the lookup side is `minned`, already partitioned by key
+        val jumped = minned.map { case (v, l) => (l, v) }
+          .leftOuterJoin(minned, part)
+          .map { case (l, (v, pl)) => (v, pl.getOrElse(l)) }
+          .partitionBy(part)
+        jumped.count() // ONE action per round: materializes + fills chgAcc
+        labels = jumped
+        if (chgAcc.value == 0L) converged = true
+        rounds += 1
+      }
+      // the audit verdict gates the result exactly as before — only its
+      // WALL overlapped the propagation rounds
+      val missed = scala.concurrent.Await.result(auditFut, D10AuditTimeout)
+      require(missed == 0,
+        s"d10 audit: LSH blocking missed $missed exact near-dup edge(s) in " +
+        s"the 1/$auditMod vector sample — raise CorpusOps.D9Tables")
+      System.err.println(
+        s"[d10] ${if (converged) "converged" else "ROUND CAP HIT"} after " +
+        s"$rounds round(s) (cap $maxRounds, audit target $auditTarget)")
+      resolved = true
+      import s.implicits._
+      // the returned frame is lazy; its job re-reads the final round's
+      // shuffle output (all upstream map stages skip), so no cache needs
+      // to outlive this call
+      labels.toDF("vec_id", "cluster_id").orderBy("vec_id")
+    } finally {
+      if (!resolved) s.sparkContext.cancelJobsWithTag(auditTag)
+      edges.unpersist()
+      if (edgesBi != null) edgesBi.unpersist(blocking = false)
     }
-    // the audit verdict gates the result exactly as before — only its
-    // WALL overlapped the propagation rounds
-    val missed = scala.concurrent.Await.result(
-      auditFut, scala.concurrent.duration.Duration.Inf)
-    require(missed == 0,
-      s"d10 audit: LSH blocking missed $missed exact near-dup edge(s) in " +
-      s"the 1/$auditMod vector sample — raise CorpusOps.D9Tables")
-    System.err.println(
-      s"[d10] ${if (converged) "converged" else "ROUND CAP HIT"} after " +
-      s"$rounds round(s) (cap $maxRounds, audit target $auditTarget)")
-    edges.unpersist()
-    edgesBi.unpersist(blocking = false)
-    import s.implicits._
-    // the returned frame is lazy; its job re-reads the final round's
-    // shuffle output (all upstream map stages skip), so no cache needs
-    // to outlive this call
-    labels.toDF("vec_id", "cluster_id").orderBy("vec_id")
   }
 
   /** e3: IVF-style ANN — the scale path beside e2's LSH. A coarse

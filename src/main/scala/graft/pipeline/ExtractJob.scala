@@ -3,12 +3,14 @@ package graft.pipeline
 import graft.core.{Doc, Span}
 import graft.kernel.{CropConfig, ExtractKernel, KernelStats, MediaStore, SyntheticStore}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-/** Output row: extracted doc + per-doc kernel metadata that the lineage
-  * aggregation consumes (columns pruned away by public readers). */
+/** Output row: extracted doc + per-doc kernel metadata. The output write
+  * adds the metadata to the run's lineage as it goes; only the lineage
+  * repair path (`Checkpoint.append`) reads it back, and public readers
+  * prune it away. */
 case class OutRow(
     doc_id: String,
     spans: Seq[Span],
@@ -63,8 +65,12 @@ object ExtractJob {
     }.getOrElse(0)
 
   /** Pure transformation: input docs → extracted OutRows, one per doc.
-    * `part_id` is the partition where the doc's row was assembled. */
-  def extract(spark: SparkSession, input: Dataset[Doc], cfg: Config): Dataset[OutRow] = {
+    * `part_id` is the partition where the doc's row was assembled. Given
+    * `lineage`, each row is also added to it under its `part_id`, in the
+    * reassembly — the stage that makes the rows, so an action over the
+    * result (the output write) fills it once per partition. */
+  def extract(spark: SparkSession, input: Dataset[Doc], cfg: Config,
+              lineage: Option[LineageStats] = None): Dataset[OutRow] = {
     import spark.implicits._
     val store = cfg.store
     val threshold = cfg.skewSpanThreshold
@@ -97,13 +103,19 @@ object ExtractJob {
         val spans = us.flatMap(_.spans).sortBy(_.offset) // restore interleaving
         val hist = new Array[Long](10)
         for (u <- us; i <- 0 until 10) hist(i) += u.conf_hist(i)
-        OutRow(docId, spans, TaskContext.getPartitionId(), spans.length.toLong,
-               us.map(_.media_cnt).sum, us.map(_.text_cnt).sum, hist.toSeq)
+        val row = OutRow(docId, spans, TaskContext.getPartitionId(),
+          spans.length.toLong, us.map(_.media_cnt).sum, us.map(_.text_cnt).sum,
+          hist.toSeq)
+        lineage.foreach(_.add(PartStats(row.part_id, 1L, row.span_count,
+          row.media_span_count, row.text_span_count, row.conf_hist)))
+        row
       }
   }
 
+  /** `docsProcessed` = `docsAlreadyDone` + `docsThisRun`: the snapshot's
+    * docs in committed output before this run, and the docs it wrote. */
   final case class RunSummary(snapshotId: String, docsProcessed: Long,
-                              docsThisRun: Long)
+                              docsThisRun: Long, docsAlreadyDone: Long)
 
   /** Full job: read the pinned snapshot, drop the docs already done for
     * it, extract, write output, then lineage. A doc is done when it sits
@@ -112,9 +124,11 @@ object ExtractJob {
     * superseding the reference's max-filename watermark
     * (joradp_parse.py:101-114 — SURVEY §2.1 S7). With no committed run of
     * the snapshot there is no join at all. Each run writes to its own
-    * `run=<id>` subdirectory, so its lineage is derived from a
-    * column-pruned scan of exactly this run's files — never a
-    * read-modify-write of a directory a concurrent scan is planned over.
+    * `run=<id>` subdirectory. Its lineage rows are summed by the output
+    * write itself (a [[LineageStats]] filled in the reassembly), and the
+    * docs already done are counted by an `Observation` on the anti-join's
+    * read of the committed doc_ids, so nothing is read back after the
+    * write: the driver writes the lineage file and the run is committed.
     * Calling run() again after a kill processes only unfinished docs. */
   def run(spark: SparkSession, inputPath: String, outPath: String,
           ckptDir: String, cfg: Config = Config(),
@@ -135,40 +149,44 @@ object ExtractJob {
       case Some(wl) => input.join(wl.select("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
       case None => input
     }
+    val priorObs = new Observation()
     val todo =
       if (doneRuns.isEmpty) scoped
-      else scoped.join(spark.read.schema("doc_id STRING").parquet(doneRuns: _*),
-                       Seq("doc_id"), "left_anti").as[Doc]
+      else scoped.join(
+        spark.read.schema("doc_id STRING").parquet(doneRuns: _*)
+          .observe(priorObs, count(lit(1)).as("docs")),
+        Seq("doc_id"), "left_anti").as[Doc]
 
     val runId = s"${snapId}_${System.nanoTime()}"
-    extract(spark, todo, cfg)
-      .write.mode(SaveMode.ErrorIfExists).parquet(s"$outPath/run=$runId")
-    // docsThisRun is observed on the lineage write — no extra count job
-    // over the run's files (every scan of them at 100 TB is a real job)
-    val thisRun = Checkpoint.append(spark, ckptDir, snapId, runId,
-      spark.read.schema(OutSchema).parquet(s"$outPath/run=$runId"))
-    val doneTotal = Checkpoint.doneTotal(spark, ckptDir, snapId)
-    if (thisRun == 0L && doneTotal > 0L) {
+    val runDir = s"$outPath/run=$runId"
+    val lineage = new LineageStats
+    spark.sparkContext.register(lineage)
+    extract(spark, todo, cfg, Some(lineage))
+      .write.mode(SaveMode.ErrorIfExists).parquet(runDir)
+    val alreadyDone =
+      if (doneRuns.isEmpty) 0L
+      else priorObs.get.get("docs") match {
+        case Some(n: Long) => n
+        // AQE drops the observed read from the plan once a join side
+        // proves empty; the lineage (repaired by reconcile) then counts
+        case _ => Checkpoint.doneTotal(spark, ckptDir, snapId)
+      }
+    val thisRun = lineage.docs
+    if (thisRun == 0L && doneRuns.nonEmpty) {
       // no-op resume: everything was already done, so this run's output
-      // and lineage subdirs are empty shells. Reap them immediately — a
-      // scheduler re-submitting a finished snapshot daily would
-      // otherwise grow one empty run= dir per invocation, and every
-      // later reconcile/readOutput pays listing + partition discovery
-      // over the pile (the single-writer contract makes this delete
-      // safe: no concurrent scan is planned over a dir this run minted).
-      // Guarded on doneTotal > 0 so a genuinely EMPTY snapshot keeps its
-      // one empty-but-schema-bearing run dir and readOutput stays
+      // is an empty shell. Reap it and record no lineage — a scheduler
+      // re-submitting a finished snapshot daily would otherwise grow one
+      // empty run= dir per invocation, and every later reconcile pays the
+      // listing (the single-writer contract makes this delete safe: no
+      // concurrent scan is planned over a dir this run minted). Guarded
+      // on a committed run existing, so a genuinely EMPTY snapshot keeps
+      // its first, empty-but-schema-bearing run dir and readOutput stays
       // readable.
-      import org.apache.hadoop.fs.Path
-      val fs = new Path(outPath)
+      new org.apache.hadoop.fs.Path(runDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(s"$outPath/run=$runId"), true)
-      fs.delete(new Path(s"$ckptDir/lineage/run=$runId"), true)
-    }
-    // summary total from the per-partition LINEAGE table (tiny, bounded)
-    // — never a scan of the one-row-per-doc output, which at 100 TB is a
-    // real job run purely for a log line
-    RunSummary(snapId, doneTotal, thisRun)
+        .delete(new org.apache.hadoop.fs.Path(runDir), true)
+    } else Checkpoint.write(spark, ckptDir, snapId, runId, lineage.value.values)
+    RunSummary(snapId, alreadyDone + thisRun, thisRun, alreadyDone)
   }
 
   /** A run id this pipeline itself minted: `<snapId>_<nanoTime nonce>`
@@ -191,9 +209,10 @@ object ExtractJob {
     *     deleted and its docs re-extract normally;
     *   - output dir WITH `_SUCCESS` but not recorded ([[Checkpoint
     *     .isRecorded]]): the run died between output commit and lineage
-    *     append — re-run the (idempotent, per-run Overwrite) append from
-    *     the committed files. Its docs are done either way: the dir is
-    *     returned with the others.
+    *     commit — rebuild its lineage from a scan of the committed files
+    *     ([[Checkpoint.append]], which replaces any partial lineage
+    *     subdir). Its docs are done either way: the dir is returned with
+    *     the others.
     *
     * The runId encodes its snapshot (`<snapId>_<nonce>`), so recovery
     * attributes re-appended rows to the snapshot that produced them, and

@@ -133,12 +133,23 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("kernel stats count spans and fill the confidence histogram") {
-    val (inputs, _) = CorpusGen.corpus(2)
+    val (inputs, goldens) = CorpusGen.corpus(2)
     val st = new KernelStats
     inputs.foreach(d => ExtractKernel.extractDoc(d, SyntheticStore, st))
-    assert(st.docCount == 2)
-    assert(st.spanCount == st.mediaSpanCount + st.textSpanCount)
-    assert(st.confHist.sum > 0 && st.confHist(9) == st.confHist.sum)
+    // every non-cover span is counted once, under its kind
+    val spans = goldens.flatMap(_.spans)
+    assert(st.mediaSpanCount == spans.count(_.kind == "media"))
+    assert(st.textSpanCount == spans.count(_.kind == "text"))
+    assert(st.mediaSpanCount > 0 && st.textSpanCount > 0)
+    // the histogram holds every glyph of the recognized (non-cover)
+    // pages, all exact matches
+    val glyphs = inputs.map { d =>
+      val media = d.spans.filter(_.kind == "media").sortBy(_.offset).drop(1)
+      media.map(m => Recognize.recognizeStored(SyntheticStore.decode(m.media_ref),
+        CropConfig.lookup(d.doc_id)).glyphCount).sum
+    }.sum
+    assert(st.confHist.sum == glyphs && glyphs > 0)
+    assert(st.confHist(9) == st.confHist.sum)
   }
 
   test("horizontal-rule pages roundtrip exactly (rules graphics-gated)") {

@@ -286,6 +286,24 @@ class OperatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
     for ((v, c) <- rows) assert(c == (v / 6) * 6, s"vec $v cluster $c")
   }
 
+  test("d10: a resolve that fails releases its edge cache") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // one 3-dim vector among 64-dim ones: the exact predicate throws on
+    // the first pass over the (already cached) edge set
+    val d = Files.createTempDirectory("graft-ops-bad").toString
+    (0 until 12).map { i =>
+      (i.toLong, Seq.fill(if (i == 5) 3 else 64)(((i * 37) % 100) / 100.0f), 0)
+    }.toDF("vec_id", "embedding", "label").write.parquet(s"$d/embeddings.parquet")
+    val e = intercept[org.apache.spark.SparkException] {
+      CorpusOps.d10DupClusters(spark, d).collect()
+    }
+    assert(e.getMessage.contains("length mismatch"), e.getMessage)
+    val edges = CorpusOps.d9EmbedDup(spark, d).select(col("vec_a"), col("vec_b"))
+    assert(edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the failed resolve left its edge set cached")
+  }
+
   test("d8: fingerprints are stable and collide for identical docs") {
     val fp = CorpusOps.d8Fingerprints(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))

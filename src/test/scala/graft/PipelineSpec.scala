@@ -83,10 +83,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // done docs is now the committed output itself, so pin the scans:
     //  - a first run scans no prior output (there is no anti-join);
     //  - a resume scans the prior run dirs exactly once, in the anti-join
-    //    inside the output write;
-    //  - after the output write, the only scan of a one-row-per-doc table
-    //    is the lineage append over this run's own dir, and the summary
-    //    total reads nothing but the per-partition lineage table.
+    //    inside the output write, where the docs already done are counted;
+    //  - nothing is scanned after the output write: neither the run's own
+    //    dir (its lineage comes from the write) nor the lineage table.
     val in = tmp("in-noscan"); val out = tmp("out-noscan"); val ck = tmp("ck-noscan")
     val (inputs, _) = CorpusGen.corpus(4)
     SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
@@ -139,23 +138,21 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val write1 = first.filter(_.exists(isIn))
     assert(write1.size == 1 && !write1.head.exists(isOut),
       s"a first run must scan no prior output, got $write1")
+    assert(first.filter(_.nonEmpty) == write1,
+      s"a first run may scan only in its output write, got $first")
 
     val second = scansOf {
       val r2 = ExtractJob.run(spark, in, out, ck)
-      assert(r2.docsThisRun == 0 && r2.docsProcessed == 4)
+      assert(r2.docsThisRun == 0 && r2.docsProcessed == 4 &&
+             r2.docsAlreadyDone == 4)
     }
     val priorScans = second.filter(_.exists(_.endsWith(s"/${prior.head}")))
     assert(priorScans.size == 1 && priorScans.head.exists(isIn),
       s"expected exactly 1 prior-output scan (the resume anti-join), " +
       s"got $priorScans")
-    val ownDirScans = second.filter(q => !q.exists(isIn) && q.exists(isOut))
-    assert(ownDirScans.size == 1 &&
-           !ownDirScans.head.exists(_.endsWith(s"/${prior.head}")),
-      s"expected one scan of this run's own dir (the lineage append), " +
-      s"got $ownDirScans")
-    val rest = second.filterNot(q => q.exists(isIn) || q.exists(isOut))
-    assert(rest.forall(_.forall(_.contains(s"$ck/lineage"))),
-      s"after the write only the lineage table may be scanned, got $rest")
+    assert(second.filter(_.nonEmpty) == priorScans,
+      s"after the output write nothing may be scanned (not the run's own " +
+      s"dir, not the lineage table), got $second")
   }
 
   test("resume: killed-halfway run completes only the remainder") {
@@ -329,6 +326,83 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(hist(9) == hist.sum, "exact-match kernel → all confidences 1.0")
   }
 
+  test("lineage from the output write equals the lineage the repair " +
+       "scan derives from the written files") {
+    import spark.implicits._
+    val in = tmp("in-acc"); val out = tmp("out-acc"); val ck = tmp("ck-acc")
+    val ckScan = tmp("ck-acc-scan")
+    // doc 5 is heavy; a low threshold explodes it and most others into
+    // span units spread over all kernel tasks
+    val (inputs, goldens) = CorpusGen.corpus(6, heavyEvery = 6)
+    val cfg = ExtractJob.Config(buckets = 4, skewSpanThreshold = 6)
+    assert(inputs.exists(_.spans.size >= 40))
+    val snapId = SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
+    // keep the reassembly's 4 partitions: AQE would coalesce this tiny
+    // output into one
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    val r = try ExtractJob.run(spark, in, out, ck, cfg)
+      finally spark.conf.set(coalesce, prev)
+    assert(r.docsThisRun == 6 && r.docsAlreadyDone == 0)
+    val Seq(runDir) = new java.io.File(out).listFiles.toSeq
+      .filter(_.getName.startsWith("run="))
+    val runId = runDir.getName.stripPrefix("run=")
+    assert(Checkpoint.append(spark, ckScan, snapId, runId,
+      spark.read.parquet(runDir.toString)) == 6)
+    def rows(ckDir: String) = Checkpoint.lineage(spark, ckDir)
+      .drop("completed_at").as[(String, Int, Long, Long, Long, Long, Seq[Long], String)]
+      .collect().toSeq.sortBy(_._2)
+    val fromWrite = rows(ck)
+    assert(fromWrite.map(_._2).distinct.size == fromWrite.size && fromWrite.size > 1,
+      s"one row per output partition, got $fromWrite")
+    assert(fromWrite.map(_._3).sum == 6)
+    assert(fromWrite.map(_._4).sum == goldens.map(_.spans.size.toLong).sum)
+    assert(fromWrite == rows(ckScan))
+  }
+
+  test("reconcile: a lineage part file without _SUCCESS (crash inside the " +
+       "lineage commit) is re-written once and each doc counted once") {
+    import spark.implicits._
+    val in = tmp("in3e"); val out = tmp("out3e"); val ck = tmp("ck3e")
+    val (inputs, goldens) = CorpusGen.corpus(8)
+    val snapId = SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
+    val r1 = ExtractJob.run(spark, in, out, ck,
+      worklist = Some(inputs.take(3).map(_.doc_id).toDF("doc_id")))
+    assert(r1.docsThisRun == 3)
+    val Seq(lin) = new java.io.File(s"$ck/lineage").listFiles.toSeq
+    val runId = lin.getName.stripPrefix("run=")
+    assert(new java.io.File(lin, "_SUCCESS").delete())
+    assert(!Checkpoint.isRecorded(spark, ck, runId))
+    val r2 = ExtractJob.run(spark, in, out, ck)
+    assert(r2.docsThisRun == 5 && r2.docsAlreadyDone == 3 && r2.docsProcessed == 8,
+      s"got $r2")
+    assert(Checkpoint.isRecorded(spark, ck, runId))
+    assert(lin.listFiles.map(_.getName).count(_.endsWith(".parquet")) == 1,
+      "the re-write replaces the run's lineage file")
+    assert(Checkpoint.doneTotal(spark, ck, snapId) == 8)
+    assert(Checkpoint.lineage(spark, ck).agg(sum("doc_count")).head.getLong(0) == 8)
+    val outDocs = ExtractJob.readOutput(spark, out).collect().toSeq
+    assert(outDocs.size == 8 && outDocs.map(_.doc_id).distinct.size == 8)
+    assertSpanEquality(outDocs, goldens)
+  }
+
+  test("an empty snapshot commits one empty run; a re-run counts 0 done " +
+       "and leaves no second run dir") {
+    import spark.implicits._
+    val in = tmp("in-empty"); val out = tmp("out-empty"); val ck = tmp("ck-empty")
+    val snapId = SnapshotTable.write(Seq.empty[Doc].toDS.toDF, in, buckets = 2)
+    for (_ <- 1 to 2) {
+      val r = ExtractJob.run(spark, in, out, ck)
+      assert(r.docsThisRun == 0 && r.docsAlreadyDone == 0 && r.docsProcessed == 0)
+    }
+    assert(Checkpoint.doneTotal(spark, ck, snapId) == 0)
+    assert(ExtractJob.readOutput(spark, out).count() == 0)
+    // the re-run reaped its empty shell: one run dir, one lineage dir
+    for (dir <- Seq(out, s"$ck/lineage"))
+      assert(new java.io.File(dir).list().count(_.startsWith("run=")) == 1, dir)
+  }
+
   test("work-list selective run processes only listed docs (F2/J5)") {
     import spark.implicits._
     val in = tmp("in5"); val out = tmp("out5"); val ck = tmp("ck5")
@@ -344,6 +418,11 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // a later full run completes the rest without reprocessing
     val r2 = ExtractJob.run(spark, in, out, ck)
     assert(r2.docsThisRun == 5 && r2.docsProcessed == 8)
+    // a work-list that matches nothing still reports the docs done
+    val r3 = ExtractJob.run(spark, in, out, ck,
+      worklist = Some(Seq("F0000000").toDF("doc_id")))
+    assert(r3.docsThisRun == 0 && r3.docsAlreadyDone == 8 && r3.docsProcessed == 8,
+      s"got $r3")
   }
 
   test("many incremental runs: resume, totals and recorded status hold") {
@@ -687,9 +766,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(ExtractJob.run(spark, in, out, ck).docsThisRun == 3)
     }
     // first run: the output write's round-robin stage, reassembly stage
-    // and write stage, the lineage aggregation's two stages, doneTotal;
-    // a resume adds the broadcast of the committed output's doc_ids
-    assert((first, resume) == ((6, 7)), s"first run $first jobs, resume $resume")
+    // and write stage — its lineage comes from the write and the driver
+    // writes the file; a resume adds the broadcast of the committed
+    // output's doc_ids, which also counts the docs already done
+    assert((first, resume) == ((3, 4)), s"first run $first jobs, resume $resume")
   }
 
   test("x5 is self-verifying: every recognized grid equals the planted " +

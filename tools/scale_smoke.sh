@@ -4,7 +4,8 @@
 # just in PipelineSpec's simulated crash: gen -> extract killed -9 inside a
 # crash window -> re-submit (reconcile cleans the uncommitted run dir, or
 # re-appends a committed run's lineage, and completes all docs) -> third
-# submit resumes as a no-op -> duplicate-free output asserted.
+# submit resumes as a no-op, reporting docs_this_run=0 and every doc
+# already done -> duplicate-free output asserted.
 #
 # The output run dir exists only while the extract writes, near its end, so
 # the kill is not timed: the script polls every 0.2 s and kills as soon as a
@@ -64,8 +65,16 @@ time $SUBMIT extract "$BASE/snap" "$BASE/out" "$BASE/ckpt" \
   2>"$BASE/extract2.err" | grep EXTRACT
 
 echo "== third submit (no-op resume)"
-time $SUBMIT extract "$BASE/snap" "$BASE/out" "$BASE/ckpt" \
-  2>"$BASE/extract3.err" | grep EXTRACT
+START=$(date +%s.%N)
+LINE=$($SUBMIT extract "$BASE/snap" "$BASE/out" "$BASE/ckpt" \
+  2>"$BASE/extract3.err" | grep EXTRACT)
+echo "$LINE"
+echo "took $(awk -v s="$START" -v e="$(date +%s.%N)" 'BEGIN {printf "%.1f", e - s}') s"
+# the summary's counts must add up: nothing extracted, every doc already done
+for want in docs_this_run=0 "docs_already_done=$NDOCS" "docs_done=$NDOCS"; do
+  [[ " $LINE " == *" $want "* ]] ||
+    { echo "SMOKE FAILED: no-op resume did not report $want"; exit 1; }
+done
 
 echo "== duplicate-free output assertion (duckdb, driver-side check)"
 # the assertion must be able to FAIL the smoke: propagate python's status
@@ -98,6 +107,6 @@ print(f"output: {len(out_files)} part files, {out_b/1e6:.1f} MB; "
 print(f"lineage: {len(lin_files)} files, {lin_b/1e6:.3f} MB, "
       f"{lin_rows} partition rows covering {lin_docs} docs")
 print(f"lineage:output size ratio 1:{out_b/max(lin_b,1):.0f} "
-      f"(the metadata the run summary reads vs the per-doc output it avoids)")
+      f"(the per-partition metadata vs the per-doc output)")
 EOF
 du -sh "$BASE/out" "$BASE/ckpt"
