@@ -111,12 +111,6 @@ object Main {
       println(s"REBAND rows=${observedWrite(res, out)} dir=$out")
       spark.stop()
 
-    case "stream" :: in :: out :: ckpt :: Nil =>
-      val spark = session("graft-stream")
-      val n = graft.streaming.StreamingExtract.runAvailableNow(spark, in, out, ckpt)
-      println(s"STREAM docs_this_run=$n out=$out")
-      spark.stop()
-
     case "report" :: reportParquet :: htmlDir :: Nil =>
       val spark = session("graft-report")
       val n = graft.pipeline.HtmlReport.write(
@@ -139,7 +133,6 @@ object Main {
            |       reocr <snapshotDir> <outDir> <worklistCsv>
            |       regions <snapshotDir> <outDir>
            |       reband <regionsDir> <outDir>
-           |       stream <inputDir> <outDir> <streamCkptDir>
            |       report <evalReportParquet> <htmlDir>
            |       export <outDir> <jsonDir>""".stripMargin)
       sys.exit(2)

@@ -191,7 +191,7 @@ object ExtractJob {
 
   /** A run id this pipeline itself minted: `<snapId>_<nanoTime nonce>`
     * (see [[run]]), where snapId is ALWAYS the 16-lowercase-hex content
-    * hash [[SnapshotTable.commit]] emits. Reconcile must only ever touch
+    * id [[SnapshotTable.write]] emits. Reconcile must only ever touch
     * ITS OWN run dirs — a foreign `run=` directory (manual backup,
     * another tool) is not a crashed run and deleting it would destroy
     * data reconcile does not own. The loose shape `.+_digits` would claim
@@ -226,7 +226,7 @@ object ExtractJob {
     * crashed run's uncommitted dir from a concurrent run's in-flight one
     * (neither has `_SUCCESS` yet), so a second concurrent writer would
     * have its partial output reclaimed. Serialize runs per output table
-    * (the driver loop and the streaming wrapper both do). */
+    * (the driver loop does). */
   private def reconcile(spark: SparkSession, outPath: String,
                         ckptDir: String, snapId: String): Seq[String] = {
     import org.apache.hadoop.fs.Path

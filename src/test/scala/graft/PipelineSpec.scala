@@ -31,12 +31,29 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("snapshot table: commit produces stable content-hash id") {
     import spark.implicits._
     val dir = tmp("snap")
-    val (inputs, _) = CorpusGen.corpus(4)
+    val (inputs, goldens) = CorpusGen.corpus(4)
     val id1 = SnapshotTable.write(inputs.toDS.toDF, dir, buckets = 2)
+    assert(id1.matches("[0-9a-f]{16}"))
     assert(SnapshotTable.currentSnapshotId(dir) == id1)
     val (df, id2) = SnapshotTable.read(spark, dir)
     assert(id2 == id1)
     assert(df.count() == 4)
+    // the same docs, rewritten with new part files, another bucket count
+    // and another row order, keep the id; other docs get another one
+    assert(SnapshotTable.write(inputs.reverse.toDS.toDF, dir, buckets = 4) == id1)
+    assert(SnapshotTable.write(inputs.take(3).toDS.toDF, dir, buckets = 4) != id1)
+
+    // so a resume against a same-content rewrite extracts nothing, and
+    // the output holds each doc once
+    val in = tmp("snap-in"); val out = tmp("snap-out"); val ck = tmp("snap-ck")
+    SnapshotTable.write(inputs.toDS.toDF, in, buckets = 2)
+    assert(ExtractJob.run(spark, in, out, ck).docsThisRun == 4)
+    SnapshotTable.write(inputs.toDS.toDF, in, buckets = 4)
+    val r = ExtractJob.run(spark, in, out, ck)
+    assert(r.docsThisRun == 0 && r.docsProcessed == 4, s"rewrite re-extracted: $r")
+    val outDocs = ExtractJob.readOutput(spark, out).collect().toSeq
+    assert(outDocs.size == 4 && outDocs.map(_.doc_id).distinct.size == 4)
+    assertSpanEquality(outDocs, goldens)
   }
 
   test("end-to-end: extract job output matches goldens exactly") {
@@ -76,11 +93,12 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assertSpanEquality(ExtractJob.readOutput(spark, out).collect().toSeq, goldens)
   }
 
-  test("run() summary never scans the done table (metadata counter only)") {
+  test("run() summary: one prior-output scan, in the anti-join, none after " +
+       "the write") {
     import spark.implicits._
-    // round-3 verdict #3: RunSummary.docsProcessed used to be a full
-    // done-table count() per run — a real job at 100 TB. The record of
-    // done docs is now the committed output itself, so pin the scans:
+    // RunSummary.docsProcessed once cost a full count() of a done table
+    // per run — a real job at 100 TB. The record of done docs is the
+    // committed output itself, so pin the scans:
     //  - a first run scans no prior output (there is no anti-join);
     //  - a resume scans the prior run dirs exactly once, in the anti-join
     //    inside the output write, where the docs already done are counted;

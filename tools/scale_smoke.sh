@@ -5,7 +5,8 @@
 # crash window -> re-submit (reconcile cleans the uncommitted run dir, or
 # re-appends a committed run's lineage, and completes all docs) -> third
 # submit resumes as a no-op, reporting docs_this_run=0 and every doc
-# already done -> duplicate-free output asserted.
+# already done -> gen rewrites the same docs, which must keep the snapshot
+# id -> a fourth submit is a no-op too -> duplicate-free output asserted.
 #
 # The output run dir exists only while the extract writes, near its end, so
 # the kill is not timed: the script polls every 0.2 s and kills as soon as a
@@ -29,7 +30,8 @@ SUBMIT="spark-submit --class graft.Main --master local[$CORES] \
 rm -rf "$BASE"; mkdir -p "$BASE"
 
 echo "== gen $NDOCS docs"
-time $SUBMIT gen "$BASE/snap" "$NDOCS" 2>"$BASE/gen.err" | grep GEN
+time GEN1=$($SUBMIT gen "$BASE/snap" "$NDOCS" 2>"$BASE/gen.err" | grep GEN)
+echo "$GEN1"
 
 echo "== extract (killed -9 once a run dir exists, at most ${KILL_AFTER}s)"
 START=$(date +%s.%N)
@@ -64,17 +66,33 @@ echo "== re-submit extract (reconcile + complete)"
 time $SUBMIT extract "$BASE/snap" "$BASE/out" "$BASE/ckpt" \
   2>"$BASE/extract2.err" | grep EXTRACT
 
+# a no-op resume: the summary's counts must add up, nothing extracted and
+# every doc already done
+noop_extract() {
+  local START LINE want
+  START=$(date +%s.%N)
+  LINE=$($SUBMIT extract "$BASE/snap" "$BASE/out" "$BASE/ckpt" \
+    2>"$BASE/extract$1.err" | grep EXTRACT)
+  echo "$LINE"
+  echo "took $(awk -v s="$START" -v e="$(date +%s.%N)" 'BEGIN {printf "%.1f", e - s}') s"
+  for want in docs_this_run=0 "docs_already_done=$NDOCS" "docs_done=$NDOCS"; do
+    [[ " $LINE " == *" $want "* ]] ||
+      { echo "SMOKE FAILED: submit $1 did not report $want"; exit 1; }
+  done
+}
+
 echo "== third submit (no-op resume)"
-START=$(date +%s.%N)
-LINE=$($SUBMIT extract "$BASE/snap" "$BASE/out" "$BASE/ckpt" \
-  2>"$BASE/extract3.err" | grep EXTRACT)
-echo "$LINE"
-echo "took $(awk -v s="$START" -v e="$(date +%s.%N)" 'BEGIN {printf "%.1f", e - s}') s"
-# the summary's counts must add up: nothing extracted, every doc already done
-for want in docs_this_run=0 "docs_already_done=$NDOCS" "docs_done=$NDOCS"; do
-  [[ " $LINE " == *" $want "* ]] ||
-    { echo "SMOKE FAILED: no-op resume did not report $want"; exit 1; }
-done
+noop_extract 3
+
+echo "== gen the same $NDOCS docs again (new part files, same snapshot id)"
+GEN2=$($SUBMIT gen "$BASE/snap" "$NDOCS" 2>"$BASE/gen2.err" | grep GEN)
+echo "$GEN2"
+snap_of() { sed -n 's/.*snapshot=\([^ ]*\).*/\1/p' <<<"$1"; }
+[[ -n "$(snap_of "$GEN1")" && "$(snap_of "$GEN1")" == "$(snap_of "$GEN2")" ]] ||
+  { echo "SMOKE FAILED: the rewrite changed the snapshot id"; exit 1; }
+
+echo "== fourth submit (no-op resume against the rewrite)"
+noop_extract 4
 
 echo "== duplicate-free output assertion (duckdb, driver-side check)"
 # the assertion must be able to FAIL the smoke: propagate python's status
