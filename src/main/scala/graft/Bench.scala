@@ -55,6 +55,11 @@ object Bench {
     * kill it before halting. */
   @volatile private var liveChild: Process = null
 
+  /** Cores of the tool mains' local sessions: `SPARK_GRAFT_CPUS`, else
+    * the host's core count. */
+  def hostCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   private def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
@@ -260,8 +265,7 @@ object Bench {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val cpus = hostCpus
     args.toList match {
       case "queries" :: rest =>
         val (repeats, names) = rest match {

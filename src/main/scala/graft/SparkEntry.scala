@@ -510,29 +510,8 @@ object SparkEntry {
 
   /** Greedy best-IoU matching at threshold 0.5, the reference's eval rule
     * (test_tables.py:279-332): TP if best IoU >= 0.5 and the GT box is
-    * unclaimed, else FP; unclaimed GT boxes are FN. */
-  private def iouCounts(preds: Seq[graft.core.BBox],
-                        gts: Seq[graft.core.BBox]): (Int, Int, Int) = {
-    var tp = 0
-    var fp = 0
-    val matched = scala.collection.mutable.Set[Int]()
-    for (p <- preds) {
-      var bestIou = 0.0
-      var bestIdx = -1
-      for ((g, i) <- gts.zipWithIndex) {
-        val iou = p.iou(g)
-        if (iou > bestIou) { bestIou = iou; bestIdx = i }
-      }
-      if (bestIou >= 0.5 && bestIdx >= 0 && !matched(bestIdx)) {
-        tp += 1; matched += bestIdx
-      } else fp += 1
-    }
-    (tp, fp, gts.size - matched.size)
-  }
-
-  /** Greedy best-IoU matching like iouCounts, but emitting one row per
-    * prediction (tp/fp + matched GT + iou_e6) and per unmatched GT (fn) —
-    * the rows behind the counters. */
+    * unclaimed, else FP; unclaimed GT boxes are FN. One row per prediction
+    * (tp/fp + matched GT + iou_e6) and per unmatched GT (fn). */
   private def iouReport(preds: Seq[graft.core.BBox], gts: Seq[graft.core.BBox])
       : Vector[(String, Option[graft.core.BBox], Option[graft.core.BBox], Long)] = {
     val matched = scala.collection.mutable.Set[Int]()
@@ -605,12 +584,16 @@ object SparkEntry {
       val spec = PageRenderer.layoutFor(docId, page).table.get
       val stored = PageRenderer.render(docId, page)
       val tables = graft.kernel.TableDetect.detectTables(stored)
-      val (ttp, tfp, tfn) = iouCounts(tables, Seq(spec.bbox2x))
       val cells = tables.headOption
         .map(b => graft.kernel.TableDetect.detectTableCells(stored, b))
         .getOrElse(Seq.empty)
-      val (ctp, cfp, cfn) = iouCounts(cells, spec.cells2x)
-      (1L, ttp.toLong, tfp.toLong, tfn.toLong, ctp.toLong, cfp.toLong, cfn.toLong)
+      def counts(preds: Seq[graft.core.BBox], gts: Seq[graft.core.BBox]) = {
+        val n = iouReport(preds, gts).groupMapReduce(_._1)(_ => 1L)(_ + _)
+        (n.getOrElse("tp", 0L), n.getOrElse("fp", 0L), n.getOrElse("fn", 0L))
+      }
+      val (ttp, tfp, tfn) = counts(tables, Seq(spec.bbox2x))
+      val (ctp, cfp, cfn) = counts(cells, spec.cells2x)
+      (1L, ttp, tfp, tfn, ctp, cfp, cfn)
     }.toDF("pages", "t_tp", "t_fp", "t_fn", "c_tp", "c_fp", "c_fn")
     perPage
       .agg(sum("pages").as("n_pages"),

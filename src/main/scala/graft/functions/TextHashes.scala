@@ -1,12 +1,14 @@
 package graft.functions
 
 /** Deterministic text-hashing kernels shared by the custom Catalyst
-  * expressions and the ScalaTest oracles. FNV-1a (public domain algorithm)
-  * everywhere — no engine-specific hash so results are reproducible in any
-  * runtime.
+  * expressions, the ScalaTest oracles, the synthetic data's seeds
+  * ([[graft.synth.Rng]]) and the snapshot id. FNV-1a (public domain
+  * algorithm) everywhere — no engine-specific hash so results are
+  * reproducible in any runtime.
   */
 object TextHashes {
 
+  /** FNV-1a 64-bit over the string's UTF-16 chars. */
   def fnv64(s: String): Long = {
     var h = 0xcbf29ce484222325L
     var i = 0
@@ -18,7 +20,8 @@ object TextHashes {
     h
   }
 
-  /** SplitMix64 finalizer — used to derive per-seed hash families. */
+  /** SplitMix64 finalizer — derives per-seed hash families, and is the
+    * output step of [[graft.synth.Rng]]. */
   @inline def mix(z0: Long): Long = {
     var z = z0
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L

@@ -14,9 +14,10 @@ object SyntheticStore extends MediaStore {
   def decode(mediaRef: String): Gray = PageRenderer.decode(mediaRef)
 }
 
-/** Kernel stats of one work unit, carried into its doc's output row and
-  * from there into the lineage table (north_rule: span counts + OCR
-  * confidence histograms per partition). */
+/** Kernel stats of one work unit, counted inside its task; ExtractJob
+  * carries them on into its doc's output row and from there into the
+  * lineage table (north_rule: span counts + OCR confidence histograms per
+  * partition). */
 final class KernelStats {
   var mediaSpanCount = 0L
   var textSpanCount = 0L
@@ -37,29 +38,29 @@ object ExtractKernel {
 
   /** Extract one document:
     *  - spans processed in offset order (interleaving preserved);
-    *  - the first media span (the cover page) is dropped — the reference
-    *    never processes page 1 (pdf_parser.py:126, :161; orc_script cell 3
-    *    reads reader.pages[1:]);
+    *  - the cover page is dropped ([[contentSpans]]);
     *  - kind='media' → decode + recognize (crop config looked up per doc,
     *    J1 joradp_parse.py:84-90);
     *  - kind='text'  → HTML boilerplate strip.
     */
   def extractDoc(doc: Doc, store: MediaStore, stats: KernelStats): Doc = {
     val crop = CropConfig.lookup(doc.doc_id)
-    val ordered = doc.spans.sortBy(_.offset)
-    val coverIdx = ordered.indexWhere(_.kind == "media")
-    val out = Vector.newBuilder[Span]
-    var i = 0
-    while (i < ordered.length) {
-      if (i != coverIdx) out += extractSpan(ordered(i), crop, store, stats)
-      i += 1
-    }
-    Doc(doc.doc_id, out.result())
+    Doc(doc.doc_id, contentSpans(doc).map(extractSpan(_, crop, store, stats)))
   }
 
-  /** Extract one non-cover span — the per-span seam shared by
-    * [[extractDoc]] and ExtractJob's span units of heavy docs. Adds the span
-    * to `stats` (kind counts, confidence histogram). */
+  /** The spans extraction keeps: `doc`'s spans in offset order without
+    * the first media span, the cover page — the reference never processes
+    * page 1 (pdf_parser.py:126, :161; orc_script cell 3 reads
+    * reader.pages[1:]). */
+  def contentSpans(doc: Doc): Seq[Span] = {
+    val ordered = doc.spans.sortBy(_.offset)
+    val coverIdx = ordered.indexWhere(_.kind == "media")
+    if (coverIdx < 0) ordered else ordered.patch(coverIdx, Nil, 1)
+  }
+
+  /** Extract one content span — the per-span seam of [[extractDoc]] and
+    * of every ExtractJob work unit. Adds the span to `stats` (kind counts,
+    * confidence histogram). */
   def extractSpan(span: Span, crop: Crop, store: MediaStore,
                   stats: KernelStats): Span =
     span.kind match {

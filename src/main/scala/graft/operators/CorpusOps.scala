@@ -333,6 +333,10 @@ object CorpusOps {
     * problem the LSH blocking exists to avoid). Small corpora (< target)
     * get the full exact audit. */
   val D10AuditSampleTarget = 1000L
+  /** Cap on d10's propagation rounds. Pointer jumping converges in about
+    * log2(longest chain) rounds (~10 at sf0.1), so hitting the cap is
+    * logged as a warning, not silent. */
+  val D10MaxRounds = 25
   /** Longest wait for the d10 audit verdict. The audit is a fixed-size
     * sample (~target²/2 pairs) over the cached edge set, seconds at any
     * corpus size, so a wait this long means a hung job. */
@@ -462,14 +466,8 @@ object CorpusOps {
       // the edge set fails the job loudly: wrong clusters never ship. The
       // target is the audit-cost dial; the fix for a tripped audit is
       // raising D9Tables.
-      // env escape valves (no rebuild needed when benching other scale
-      // factors): audit sample target + propagation round cap
-      val auditTarget = sys.env.get("SPARK_GRAFT_D10_AUDIT_TARGET")
-        .map(_.toLong).getOrElse(D10AuditSampleTarget)
-      val maxRounds = sys.env.get("SPARK_GRAFT_D10_MAX_ROUNDS")
-        .map(_.toInt).getOrElse(25)
       val nVec = nodes.count() // metadata action (d10 is an eager resolver)
-      val auditMod = math.max(1L, nVec / auditTarget)
+      val auditMod = math.max(1L, nVec / D10AuditSampleTarget)
       val sampled = quantized(s, dir)
         .filter(pmod(xxhash64(col("vec_id")), lit(auditMod)) === 0)
         .withColumn("nrm", dotCol(col("qv"), col("qv")))
@@ -566,7 +564,7 @@ object CorpusOps {
         .partitionBy(part)
       var converged = false
       var rounds = 0
-      while (!converged && rounds < maxRounds) {
+      while (!converged && rounds < D10MaxRounds) {
         val chgAcc = s.sparkContext.longAccumulator(s"d10.chg.round$rounds")
         // neighbour-min: narrow join (both sides partitioned by `part`),
         // then one dst-keyed min shuffle
@@ -598,7 +596,7 @@ object CorpusOps {
         s"the 1/$auditMod vector sample — raise CorpusOps.D9Tables")
       System.err.println(
         s"[d10] ${if (converged) "converged" else "ROUND CAP HIT"} after " +
-        s"$rounds round(s) (cap $maxRounds, audit target $auditTarget)")
+        s"$rounds round(s) (cap $D10MaxRounds, audit target $D10AuditSampleTarget)")
       resolved = true
       import s.implicits._
       // the returned frame is lazy; its job re-reads the final round's

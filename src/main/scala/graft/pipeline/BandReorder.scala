@@ -28,11 +28,7 @@ object BandReorder {
               cfg: ExtractJob.Config = ExtractJob.Config()): DataFrame = {
     import spark.implicits._
     val store = cfg.store
-    val pages = input.flatMap { doc =>
-      doc.spans.filter(_.kind == "media").sortBy(_.offset).zipWithIndex
-        .map { case (s, pn) => (doc.doc_id, pn, s.media_ref) }
-    }
-    pages.mapPartitions { it =>
+    ExtractJob.mediaPages(spark, input).as[(String, Int, String)].mapPartitions { it =>
       it.flatMap { case (docId, pn, ref) =>
         val crop = graft.kernel.CropConfig.lookup(docId)
         val (layouts, lines) = graft.kernel.Recognize.segmentPageFull(

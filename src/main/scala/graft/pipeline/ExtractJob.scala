@@ -20,12 +20,9 @@ case class OutRow(
     text_span_count: Long,
     conf_hist: Seq[Long])
 
-/** One unit of kernel work: a whole doc, or one non-cover span of a doc
-  * with at least `skewSpanThreshold` spans. */
-case class WorkUnit(doc_id: String, spans: Seq[Span], whole: Boolean)
-/** A unit's extracted spans plus the kernel stats OutRow sums per doc. */
-case class UnitOut(doc_id: String, spans: Seq[Span], media_cnt: Long,
-                   text_cnt: Long, conf_hist: Seq[Long])
+/** A work unit's extracted spans plus its kernel stats (`part_id` and
+  * `doc_count` are set when its doc is reassembled). */
+case class UnitOut(doc_id: String, spans: Seq[Span], stats: PartStats)
 
 /** The production extraction run — the Spark lifecycle equivalent of
   * joradp_parse.py (SURVEY §3.1):
@@ -34,12 +31,15 @@ case class UnitOut(doc_id: String, spans: Seq[Span], media_cnt: Long,
   *   work units → round-robin exchange → kernel → groupByKey(doc_id)
   *   reassembly → write output, then lineage (the commit point).
   *
-  * One scan feeds both skew routes (SURVEY §4). A doc with fewer than
-  * cfg.skewSpanThreshold spans is one whole unit; a larger doc, which
-  * would stall its task, becomes one unit per non-cover span. The units
-  * are spread round-robin over `n` kernel tasks of even size, and the
-  * reassembly restores each doc's interleaving by `offset`
-  * (property-tested). Both exchanges move span text and media refs,
+  * One scan feeds every work unit (SURVEY §4). A unit is a `Doc` that
+  * holds only content spans ([[ExtractKernel.contentSpans]]: the cover
+  * page is dropped before the exchange). A doc with fewer than
+  * cfg.skewSpanThreshold spans is one unit; a larger doc, which would
+  * stall its task, becomes one unit per content span. The units are
+  * spread round-robin over `n` kernel tasks of even size, each unit runs
+  * the one per-span kernel path, and the reassembly restores each doc's
+  * interleaving by `offset` (property-tested) and sums its units' stats
+  * as one [[PartStats]]. Both exchanges move span text and media refs,
   * never pixels: on perfbench `extract_full` (seed 1, 4 cores) all of an
   * op's shuffles wrote in 0.03 s, against 1.13 s of task CPU.
   */
@@ -75,40 +75,28 @@ object ExtractJob {
     val store = cfg.store
     val threshold = cfg.skewSpanThreshold
     val units = input.flatMap { doc =>
-      val split =
-        if (doc.spans.size < threshold) Nil
-        else {
-          val ordered = doc.spans.sortBy(_.offset)
-          val coverIdx = ordered.indexWhere(_.kind == "media")
-          ordered.zipWithIndex.collect {
-            case (s, i) if i != coverIdx => WorkUnit(doc.doc_id, Seq(s), whole = false)
-          }
-        }
-      // a doc with no non-cover span stays whole, so every doc gets its row
-      if (split.isEmpty) Seq(WorkUnit(doc.doc_id, doc.spans, whole = true)) else split
+      val content = ExtractKernel.contentSpans(doc)
+      // a doc with no content span is still one unit, so every doc gets its row
+      if (doc.spans.size < threshold || content.isEmpty) Seq(Doc(doc.doc_id, content))
+      else content.map(s => Doc(doc.doc_id, Seq(s)))
     }
     units.repartition(math.max(cfg.buckets, scanSplits(input)))
       .map { u =>
         val st = new KernelStats
-        val spans =
-          if (u.whole) ExtractKernel.extractDoc(Doc(u.doc_id, u.spans), store, st).spans
-          else Seq(ExtractKernel.extractSpan(u.spans.head,
-            CropConfig.lookup(u.doc_id), store, st))
-        UnitOut(u.doc_id, spans, st.mediaSpanCount, st.textSpanCount,
-                st.confHist.toSeq)
+        val crop = CropConfig.lookup(u.doc_id)
+        val spans = u.spans.map(ExtractKernel.extractSpan(_, crop, store, st))
+        UnitOut(u.doc_id, spans, PartStats(0, 0L, spans.length.toLong,
+          st.mediaSpanCount, st.textSpanCount, st.confHist.toSeq))
       }
       .groupByKey(_.doc_id)
       .mapGroups { (docId, it) =>
         val us = it.toVector
         val spans = us.flatMap(_.spans).sortBy(_.offset) // restore interleaving
-        val hist = new Array[Long](10)
-        for (u <- us; i <- 0 until 10) hist(i) += u.conf_hist(i)
-        val row = OutRow(docId, spans, TaskContext.getPartitionId(),
-          spans.length.toLong, us.map(_.media_cnt).sum, us.map(_.text_cnt).sum,
-          hist.toSeq)
-        lineage.foreach(_.add(PartStats(row.part_id, 1L, row.span_count,
-          row.media_span_count, row.text_span_count, row.conf_hist)))
-        row
+        val st = us.map(_.stats).reduce(_ + _)
+          .copy(part_id = TaskContext.getPartitionId(), doc_count = 1L)
+        lineage.foreach(_.add(st))
+        OutRow(docId, spans, st.part_id, st.span_count, st.media_span_count,
+          st.text_span_count, st.conf_histogram)
       }
   }
 
@@ -324,8 +312,9 @@ object ExtractJob {
 
   /** One row per media span of each doc: (doc_id, page_number,
     * media_ref), page_number being the media-span ordinal in offset order
-    * (cover = 0) — the page index both selective passes join on. */
-  private def mediaPages(spark: SparkSession, input: Dataset[Doc]): DataFrame = {
+    * (cover = 0) — the page index both selective passes join on, and
+    * [[BandReorder.regions]]' `page`. */
+  private[pipeline] def mediaPages(spark: SparkSession, input: Dataset[Doc]): DataFrame = {
     import spark.implicits._
     input.flatMap { doc =>
       doc.spans.filter(_.kind == "media").sortBy(_.offset).zipWithIndex

@@ -33,7 +33,7 @@ object SnapshotTable {
       .write.mode("overwrite").parquet(path)
     val rows = obs.get("rows")
     val digest = Option(obs.get("digest")).getOrElse(0L) // null: no rows
-    commit(path, f"${graft.synth.Rng.fnv64(s"$rows:$digest")}%016x")
+    commit(path, f"${graft.functions.TextHashes.fnv64(s"$rows:$digest")}%016x")
   }
 
   /** Record the data files on disk in manifest `id` and point CURRENT at it. */

@@ -1,6 +1,7 @@
 package graft.synth
 
 import graft.core.{Doc, Span}
+import graft.functions.TextHashes
 import graft.kernel.BoilerplateStrip
 
 /** Deterministic synthetic corpus generator (seed-stable) producing the
@@ -52,7 +53,7 @@ object CorpusGen {
     * skew (the reason ExtractJob splits heavy docs into span units, SURVEY §4). */
   def genDoc(i: Int, heavy: Boolean = false): (Doc, Doc) = {
     val docId = docIdFor(i)
-    val rng = new Rng(Rng.fnv64(docId) ^ 0xC0FFEE42L)
+    val rng = new Rng(TextHashes.fnv64(docId) ^ 0xC0FFEE42L)
     val nContent = if (heavy) rng.between(40, 80) else rng.between(3, 11)
     val in = Vector.newBuilder[Span]
     val gold = Vector.newBuilder[Span]

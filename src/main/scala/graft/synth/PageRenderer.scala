@@ -1,6 +1,7 @@
 package graft.synth
 
 import graft.core.Crop
+import graft.functions.TextHashes
 import graft.img.Gray
 import graft.kernel.{CropConfig, GlyphFont}
 
@@ -39,7 +40,7 @@ object PageRenderer {
 
   /** Seed for a page's content stream. */
   def pageSeed(docId: String, page: Int): Long =
-    Rng.fnv64(docId) * 0x9E3779B97F4A7C15L + page.toLong * 0xD1B54A32D192ED03L
+    TextHashes.fnv64(docId) * 0x9E3779B97F4A7C15L + page.toLong * 0xD1B54A32D192ED03L
 
   /** One word: uppercase dictionary word or a 1-4 digit number. */
   private def word(rng: Rng): String =
@@ -250,7 +251,7 @@ object PageRenderer {
   /** Planted value of table cell (row i, col j) — ground truth for the
     * table OCR path (A7, TATR notebook apply_ocr analog). */
   def cellValue(docId: String, page: Int, i: Int, j: Int): Int = {
-    val h = Rng.fnv64(s"$docId/$page/$i/$j") ^ 0xCE11CE11L
+    val h = TextHashes.fnv64(s"$docId/$page/$i/$j") ^ 0xCE11CE11L
     1 + java.lang.Math.floorMod(h, 999L).toInt
   }
 

@@ -1,5 +1,7 @@
 package graft.synth
 
+import graft.functions.TextHashes
+
 /** SplitMix64 — deterministic, splittable, JVM-stable PRNG used for all
   * synthetic data (corpus, page noise). No java.util.Random so stream
   * semantics are fully owned by this repo.
@@ -9,10 +11,7 @@ final class Rng(seed: Long) {
 
   def nextLong(): Long = {
     s += 0x9E3779B97F4A7C15L
-    var z = s
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
+    TextHashes.mix(s)
   }
 
   /** Uniform in [0, bound). */
@@ -20,18 +19,4 @@ final class Rng(seed: Long) {
 
   /** Uniform in [lo, hi]. */
   def between(lo: Int, hi: Int): Int = lo + nextInt(hi - lo + 1)
-}
-
-object Rng {
-  /** FNV-1a 64-bit — stable string hash for deriving per-entity seeds. */
-  def fnv64(sw: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < sw.length) {
-      h ^= sw.charAt(i).toLong
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
 }

@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   * smoke (rows > 0), one sampled query, and failure-path probes. */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    val cpus = graft.Bench.hostCpus
     val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{Doc, Span}
+import graft.kernel.{ExtractKernel, KernelStats, SyntheticStore}
 import graft.pipeline._
 import graft.synth.CorpusGen
 import org.apache.spark.sql.functions._
@@ -68,16 +69,31 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("fused and exploded paths produce identical results") {
     import spark.implicits._
-    val (inputs, goldens) = CorpusGen.corpus(8)
+    // docs 3 and 7 are heavy (41-81 spans), the others have 4-12: the
+    // middle threshold splits only the heavy ones into span units, 0
+    // splits every doc and Int.MaxValue none
+    val (inputs, goldens) = CorpusGen.corpus(8, heavyEvery = 4)
+    val mid = 32
+    assert(inputs.exists(_.spans.size >= mid) && inputs.exists(_.spans.size < mid))
     val ds = inputs.toDS
-    val fusedOnly = ExtractJob.extract(spark, ds,
-      ExtractJob.Config(buckets = 4, skewSpanThreshold = Int.MaxValue))
-    val explodedOnly = ExtractJob.extract(spark, ds,
-      ExtractJob.Config(buckets = 4, skewSpanThreshold = 0))
-    val f = fusedOnly.collect().map(r => Doc(r.doc_id, r.spans)).toSeq
-    val e = explodedOnly.collect().map(r => Doc(r.doc_id, r.spans)).toSeq
-    assertSpanEquality(f, goldens)
-    assertSpanEquality(e, goldens)
+    val statsByThreshold = Seq(Int.MaxValue, 0, mid).map { t =>
+      val rows = ExtractJob.extract(spark, ds,
+        ExtractJob.Config(buckets = 4, skewSpanThreshold = t)).collect().toSeq
+      assertSpanEquality(rows.map(r => Doc(r.doc_id, r.spans)), goldens)
+      rows.map(r => r.doc_id -> (r.span_count, r.media_span_count,
+        r.text_span_count, r.conf_hist)).toMap
+    }
+    assert(statsByThreshold.forall(_ == statsByThreshold.head),
+      s"per-doc stats depend on the unit split: $statsByThreshold")
+    val stats = statsByThreshold.head
+    for (g <- goldens) assert(stats(g.doc_id)._1 == g.spans.size)
+    // the reassembled stats sum to the kernel's own counters over the docs
+    val st = new KernelStats
+    inputs.foreach(d => ExtractKernel.extractDoc(d, SyntheticStore, st))
+    assert(stats.values.map(_._2).sum == st.mediaSpanCount)
+    assert(stats.values.map(_._3).sum == st.textSpanCount)
+    assert(stats.values.map(_._4).reduce(_.lazyZip(_).map(_ + _)) ==
+      st.confHist.toSeq)
   }
 
   test("resume: a second run reprocesses nothing and duplicates nothing") {
