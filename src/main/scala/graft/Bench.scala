@@ -60,7 +60,9 @@ object Bench {
   def hostCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  private def session(cores: Int): SparkSession = {
+  /** The tool mains' local session: `local[cores]` with as many shuffle
+    * partitions, UTC timestamps, no UI and AQE on. */
+  private[graft] def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")

@@ -34,7 +34,7 @@ object SparkEntry {
   private def extractSpans(spark: SparkSession, nDocs: Int): DataFrame = {
     import spark.implicits._
     val out = ExtractJob.extract(spark, CorpusGen.inputDS(spark, nDocs),
-      ExtractJob.Config(buckets = math.min(32, nDocs), skewSpanThreshold = 9))
+      ExtractJob.Config(buckets = kernelTasks(spark), skewSpanThreshold = 9))
     val extracted = out.select(col("doc_id"), explode(col("spans")).as("span"))
       .select(col("doc_id"), col("span.offset").as("offset"),
               col("span.kind").as("kind"), col("span.media_ref").as("media_ref"),
@@ -539,9 +539,44 @@ object SparkEntry {
     * HtmlReporter (test_tables.py:131-193), which writes one HTML page per
     * mismatching input for eval debugging: one ROW per prediction/missed
     * ground truth with its match status and IoU, queryable/joinable
-    * instead of rendered. Same detector + greedy matcher as x6, so the
-    * status counts reconcile with the aggregate counters exactly. */
-  private def tableEvalReport(spark: SparkSession, nDocs: Int): DataFrame = {
+    * instead of rendered. x6 aggregates these same rows, so the status
+    * counts reconcile with its counters exactly. */
+  private def tableEvalReport(spark: SparkSession, nDocs: Int): DataFrame =
+    tableEvalRows(spark, nDocs)
+      .orderBy("doc_id", "page", "kind", "status", "px1", "py1", "gx1", "gy1")
+
+  /** The reference's evaluation harness (test_tables.py main) as a
+    * distributed job: detector output vs planted ground truth per page
+    * (J4 IoU best-match), precision/recall counters aggregated globally
+    * (A8; integer-e6 rates). One summary row. */
+  private def tableEval(spark: SparkSession, nDocs: Int): DataFrame = {
+    def tally(kind: String, status: String) =
+      sum(when(col("kind") === kind && col("status") === status, 1L)
+        .otherwise(0L))
+    tableEvalRows(spark, nDocs)
+      .agg(countDistinct("doc_id", "page").as("n_pages"),
+           tally("table", "tp").as("table_tp"),
+           tally("table", "fp").as("table_fp"),
+           tally("table", "fn").as("table_fn"),
+           tally("cell", "tp").as("cell_tp"),
+           tally("cell", "fp").as("cell_fp"),
+           tally("cell", "fn").as("cell_fn"))
+      .withColumn("table_prec_e6",
+        expr("table_tp * 1000000 div greatest(1, table_tp + table_fp)"))
+      .withColumn("table_rec_e6",
+        expr("table_tp * 1000000 div greatest(1, table_tp + table_fn)"))
+      .withColumn("cell_prec_e6",
+        expr("cell_tp * 1000000 div greatest(1, cell_tp + cell_fp)"))
+      .withColumn("cell_rec_e6",
+        expr("cell_tp * 1000000 div greatest(1, cell_tp + cell_fn)"))
+  }
+
+  /** Per table page: the detected table matched against the planted one,
+    * then (for the first detected table) its detected cells against the
+    * planted cells — one row per prediction or missed ground truth, with
+    * its status (tp/fp/fn), both boxes (-1 where absent) and IoU·1e6.
+    * Every page yields at least its table row. */
+  private def tableEvalRows(spark: SparkSession, nDocs: Int): DataFrame = {
     import spark.implicits._
     import graft.synth.PageRenderer
     tablePages(spark, nDocs).repartition(kernelTasks(spark)).mapPartitions { it =>
@@ -570,45 +605,6 @@ object SparkEntry {
       }
     }.toDF("doc_id", "page", "kind", "status",
            "px1", "py1", "px2", "py2", "gx1", "gy1", "gx2", "gy2", "iou_e6")
-      .orderBy("doc_id", "page", "kind", "status", "px1", "py1", "gx1", "gy1")
-  }
-
-  /** The reference's evaluation harness (test_tables.py main) as a
-    * distributed job: detector output vs planted ground truth per page
-    * (J4 IoU best-match), precision/recall counters aggregated globally
-    * (A8; integer-e6 rates). One summary row. */
-  private def tableEval(spark: SparkSession, nDocs: Int): DataFrame = {
-    import spark.implicits._
-    import graft.synth.PageRenderer
-    val perPage = tablePages(spark, nDocs).repartition(kernelTasks(spark)).map { case (docId, page) =>
-      val spec = PageRenderer.layoutFor(docId, page).table.get
-      val stored = PageRenderer.render(docId, page)
-      val tables = graft.kernel.TableDetect.detectTables(stored)
-      val cells = tables.headOption
-        .map(b => graft.kernel.TableDetect.detectTableCells(stored, b))
-        .getOrElse(Seq.empty)
-      def counts(preds: Seq[graft.core.BBox], gts: Seq[graft.core.BBox]) = {
-        val n = iouReport(preds, gts).groupMapReduce(_._1)(_ => 1L)(_ + _)
-        (n.getOrElse("tp", 0L), n.getOrElse("fp", 0L), n.getOrElse("fn", 0L))
-      }
-      val (ttp, tfp, tfn) = counts(tables, Seq(spec.bbox2x))
-      val (ctp, cfp, cfn) = counts(cells, spec.cells2x)
-      (1L, ttp, tfp, tfn, ctp, cfp, cfn)
-    }.toDF("pages", "t_tp", "t_fp", "t_fn", "c_tp", "c_fp", "c_fn")
-    perPage
-      .agg(sum("pages").as("n_pages"),
-           sum("t_tp").as("table_tp"), sum("t_fp").as("table_fp"),
-           sum("t_fn").as("table_fn"),
-           sum("c_tp").as("cell_tp"), sum("c_fp").as("cell_fp"),
-           sum("c_fn").as("cell_fn"))
-      .withColumn("table_prec_e6",
-        expr("table_tp * 1000000 div greatest(1, table_tp + table_fp)"))
-      .withColumn("table_rec_e6",
-        expr("table_tp * 1000000 div greatest(1, table_tp + table_fn)"))
-      .withColumn("cell_prec_e6",
-        expr("cell_tp * 1000000 div greatest(1, cell_tp + cell_fp)"))
-      .withColumn("cell_rec_e6",
-        expr("cell_tp * 1000000 div greatest(1, cell_tp + cell_fn)"))
   }
 
   /** DuckDB oracles (same parquet tables registered by table name). Omitted

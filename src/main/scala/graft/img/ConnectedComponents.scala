@@ -12,27 +12,23 @@ case class Comp(bbox: BBox, area: Int)
   * segmentation in the recognition kernel (north_star: "connected-component
   * line/word segmentation").
   *
-  * The label plane is Array[Char] (2 B/px, halves memory traffic vs int —
-  * the kernel is bandwidth-bound at 32 threads) and is written for every
-  * pixel in raster order, so no pre-clear pass is needed. Char labels cap
-  * the plane at 256k pixels (worst case w*h/4 labels); all kernel CC runs
-  * on logical-scale planes well below that.
+  * The int label plane is pooled per thread (PlanePool) and written for
+  * every pixel in raster order, so no pre-clear pass is needed.
   */
 object ConnectedComponents {
 
+  /** Upper bound on the labels a w×h plane can need, plus the unused
+    * label 0. A pixel starts a new label only when none of its W, NW, N
+    * and NE neighbours is ink, and those are all of its 8-neighbours that
+    * precede it in raster order; so no two label-starting pixels are
+    * 8-adjacent, and each 2×2 block holds at most one of them. */
+  private def maxLabels(w: Int, h: Int): Int = ((w + 1) / 2) * ((h + 1) / 2) + 1
+
   def label(src: Bin): IndexedSeq[Comp] = {
     val w = src.w; val h = src.h
-    val maxLabels = w * h / 4 + 2
-    if (maxLabels > 65536) labelInt(src) // rare: full-2x planes (tables)
-    else labelChar(src)
-  }
-
-  private def labelChar(src: Bin): IndexedSeq[Comp] = {
-    val w = src.w; val h = src.h
-    val maxLabels = w * h / 4 + 2
-    val lab = PlanePool.chars("cc.label", w * h)
+    val lab = PlanePool.ints("cc.label", w * h)
     var next = 1
-    val parent = PlanePool.intScratch("cc.parent", maxLabels)
+    val parent = PlanePool.intScratch("cc.parent", maxLabels(w, h))
 
     @inline def find(x0: Int): Int = {
       var x = x0
@@ -65,7 +61,7 @@ object ConnectedComponents {
             m = next
             next += 1
           }
-          lab(idx) = m.toChar
+          lab(idx) = m
         } else lab(idx) = 0 // fused clear: every position written once
         x += 1
       }
@@ -73,90 +69,6 @@ object ConnectedComponents {
     }
 
     // second pass: resolve roots, accumulate bbox + area per root
-    val minX = PlanePool.intScratch("cc.minx", next)
-    val minY = PlanePool.intScratch("cc.miny", next)
-    val maxX = PlanePool.intScratch("cc.maxx", next)
-    val maxY = PlanePool.intScratch("cc.maxy", next)
-    val cnt = PlanePool.intScratch("cc.cnt", next)
-    java.util.Arrays.fill(minX, 0, next, Int.MaxValue)
-    java.util.Arrays.fill(minY, 0, next, Int.MaxValue)
-    java.util.Arrays.fill(maxX, 0, next, -1)
-    java.util.Arrays.fill(maxY, 0, next, -1)
-    java.util.Arrays.fill(cnt, 0, next, 0)
-    y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val l = lab(y * w + x).toInt
-        if (l != 0) {
-          val r = find(l)
-          if (x < minX(r)) minX(r) = x
-          if (x > maxX(r)) maxX(r) = x
-          if (y < minY(r)) minY(r) = y
-          if (y > maxY(r)) maxY(r) = y
-          cnt(r) += 1
-        }
-        x += 1
-      }
-      y += 1
-    }
-    val out = new ArrayBuffer[Comp]
-    var i = 1
-    while (i < next) {
-      if (cnt(i) > 0)
-        out += Comp(BBox(minX(i), minY(i), maxX(i) + 1, maxY(i) + 1), cnt(i))
-      i += 1
-    }
-    // deterministic order: raster by (y1, x1, x2, y2)
-    out.sortBy(c => (c.bbox.y1, c.bbox.x1, c.bbox.x2, c.bbox.y2)).toIndexedSeq
-  }
-
-  /** Int-label variant for planes whose worst-case label count exceeds the
-    * char range (full-2x page planes in the table detector). Identical
-    * semantics to labelChar. */
-  private def labelInt(src: Bin): IndexedSeq[Comp] = {
-    val w = src.w; val h = src.h
-    val lab = PlanePool.ints("cc.labelI", w * h)
-    var next = 1
-    val parent = PlanePool.intScratch("cc.parentI", w * h / 4 + 2)
-
-    @inline def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    @inline def union(a: Int, b: Int): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val idx = y * w + x
-        if (src.b(idx)) {
-          var m = 0
-          @inline def consider(l: Int): Unit =
-            if (l != 0) { if (m == 0) m = l else union(m, l) }
-          if (x > 0) consider(lab(idx - 1))
-          if (y > 0) {
-            if (x > 0) consider(lab(idx - w - 1))
-            consider(lab(idx - w))
-            if (x < w - 1) consider(lab(idx - w + 1))
-          }
-          if (m == 0) {
-            parent(next) = next
-            m = next
-            next += 1
-          }
-          lab(idx) = m
-        } else lab(idx) = 0
-        x += 1
-      }
-      y += 1
-    }
-
     val minX = PlanePool.intScratch("cc.minx", next)
     val minY = PlanePool.intScratch("cc.miny", next)
     val maxX = PlanePool.intScratch("cc.maxx", next)
@@ -191,6 +103,7 @@ object ConnectedComponents {
         out += Comp(BBox(minX(i), minY(i), maxX(i) + 1, maxY(i) + 1), cnt(i))
       i += 1
     }
+    // deterministic order: raster by (y1, x1, x2, y2)
     out.sortBy(c => (c.bbox.y1, c.bbox.x1, c.bbox.x2, c.bbox.y2)).toIndexedSeq
   }
 }

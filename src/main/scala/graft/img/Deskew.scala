@@ -27,9 +27,9 @@ object Deskew {
 
   /** Estimated slope of `b` (the value to pass to [[unshear]]).
     *
-    * Allocation-free (PlanePool scratch — the kernel runs on every page at
-    * 32 threads; per-page Array allocations are the known N→4N scaling
-    * killer, BASELINE.md "Engineering"): ink points are packed (y<<16|x)
+    * Allocation-free (PlanePool scratch — the kernel runs on every page,
+    * so its planes are reused rather than allocated and zeroed per page):
+    * ink points are packed (y<<16|x)
     * in one pooled pass, each candidate scores through a pooled histogram
     * with a per-COLUMN displacement table, and the search is
     * coarse-to-fine (step 3, then ±2 around the coarse peak — the

@@ -3,11 +3,11 @@ package graft.img
 import graft.core.Crop
 
 /** 8-bit grayscale plane; logical values 0..255 stored as signed bytes
-  * (read via & 0xFF). Byte planes, not ints: the page kernel is
-  * memory-bandwidth-bound, and 8-bit planes are what real scan codecs
-  * produce anyway (SURVEY §2.2 T12 "pure Scala on Array[Byte] planes").
-  * Hot-path methods accept an optional pre-allocated output plane
-  * (PlanePool) so the kernel runs allocation-free per page.
+  * (read via & 0xFF). Byte planes, not ints: 8-bit planes are what real
+  * scan codecs produce (SURVEY §2.2 T12 "pure Scala on Array[Byte]
+  * planes"), and GrayPack stores one byte per pixel, so a decode is one
+  * array copy. Hot-path methods accept an optional pre-allocated output
+  * plane (PlanePool) so the kernel runs allocation-free per page.
   */
 final class Gray(val w: Int, val h: Int, val px: Array[Byte]) {
   require(px.length == w * h, s"plane size ${px.length} != ${w}x$h")
@@ -57,65 +57,34 @@ final class Gray(val w: Int, val h: Int, val px: Array[Byte]) {
     new Gray(nw, nh, out)
   }
 
-  /** Integer box-mean downsample by exact factor k — the deterministic
-    * replacement for the reference's LANCZOS resize-to-height
-    * (classes/pdf_parser.py:44-59; SURVEY §7.5 item 1: bit-exact resize).
+  /** 2×2 box-mean downsample — the deterministic replacement for the
+    * reference's LANCZOS resize-to-height (classes/pdf_parser.py:44-59;
+    * SURVEY §7.5 item 1: bit-exact resize). Pages are stored at
+    * `Recognize.PageScale` = 2, the only factor any caller passes, so `k`
+    * must be 2. Two linear row reads per output row, and a shift instead
+    * of a divide: (a+b+c+d) >> 2 == (a+b+c+d) / 4 for non-negative sums.
     */
   def downsample(k: Int, out0: Array[Byte] = null): Gray = {
-    require(w % k == 0 && h % k == 0, s"${w}x$h not divisible by $k")
-    val nw = w / k
-    val nh = h / k
+    require(k == 2, s"downsample factor $k: only Recognize.PageScale = 2 is supported")
+    require(w % 2 == 0 && h % 2 == 0, s"${w}x$h not divisible by 2")
+    val nw = w / 2
+    val nh = h / 2
     val out = if (out0 != null) out0 else new Array[Byte](nw * nh)
-    if (k == 2) {
-      // r6 fast path for the kernel's only hot factor (PageScale = 2):
-      // two linear row reads per output row, shift instead of divide —
-      // (a+b+c+d) >> 2 == (a+b+c+d) / 4 for non-negative sums, so the
-      // output is bit-identical to the generic loop. The generic form's
-      // 4-deep nesting + per-pixel division made this the single most
-      // expensive recognize stage (round-6 profile: ~1.6 ms/page of a
-      // ~3.5 ms recognize).
-      var oy = 0
-      while (oy < nh) {
-        var i0 = (oy * 2) * w // top-left of the 2x2 block
-        var o = oy * nw
-        val oEnd = o + nw
-        while (o < oEnd) {
-          val s = (px(i0) & 0xFF) + (px(i0 + 1) & 0xFF) +
-                  (px(i0 + w) & 0xFF) + (px(i0 + w + 1) & 0xFF)
-          out(o) = (s >> 2).toByte
-          i0 += 2
-          o += 1
-        }
-        oy += 1
-      }
-      return new Gray(nw, nh, out)
-    }
-    val area = k * k
     var oy = 0
     while (oy < nh) {
-      var ox = 0
-      while (ox < nw) {
-        var s = 0
-        var dy = 0
-        while (dy < k) {
-          var dx = 0
-          val base = (oy * k + dy) * w + ox * k
-          while (dx < k) { s += px(base + dx) & 0xFF; dx += 1 }
-          dy += 1
-        }
-        out(oy * nw + ox) = (s / area).toByte
-        ox += 1
+      var i0 = (oy * 2) * w // top-left of the 2x2 block
+      var o = oy * nw
+      val oEnd = o + nw
+      while (o < oEnd) {
+        val s = (px(i0) & 0xFF) + (px(i0 + 1) & 0xFF) +
+                (px(i0 + w) & 0xFF) + (px(i0 + w + 1) & 0xFF)
+        out(o) = (s >> 2).toByte
+        i0 += 2
+        o += 1
       }
       oy += 1
     }
     new Gray(nw, nh, out)
-  }
-
-  /** Resize to target height by integer factor (the reference scales every
-    * page to a fixed height, pdf_parser.py:54). */
-  def resizeToHeight(target: Int): Gray = {
-    require(h % target == 0, s"height $h not an integer multiple of $target")
-    downsample(h / target)
   }
 
   override def equals(o: Any): Boolean = o match {

@@ -1,11 +1,14 @@
 package graft.img
 
-/** Per-thread exact-size plane buffers for the kernel hot path. The page
-  * kernel is memory-bandwidth-bound; fresh allocation doubles the traffic
-  * (JVM zeroing) and feeds the GC at multi-GB/s under 32 threads, which is
-  * what kills N→4N scaling (SURVEY §7.5 item 5). Buffers are keyed by
-  * (site, length) so each call site reuses one buffer per thread; page
-  * geometries are fixed per crop config, so the pool stays bounded.
+import scala.reflect.ClassTag
+
+/** Per-thread exact-size plane buffers for the kernel hot path. A page
+  * needs several planes of a few hundred KB each; taking them from here
+  * instead of allocating them per page spares the JVM's zeroing of every
+  * new array and keeps them out of the young generation. Buffers are
+  * keyed by (site, length) so each call site reuses one buffer per
+  * thread; page geometries are fixed per crop config, so the pool stays
+  * bounded.
   *
   * Contract: a plane obtained here is valid until the same (key, length)
   * is requested again on the same thread — callers must fully overwrite it
@@ -16,41 +19,13 @@ object PlanePool {
     override def initialValue() = new java.util.HashMap[String, AnyRef]
   }
 
-  def bytes(key: String, len: Int): Array[Byte] = {
-    val m = tl.get
-    val k = key + ":" + len
-    m.get(k) match {
-      case a: Array[Byte] => a
-      case _ => val a = new Array[Byte](len); m.put(k, a); a
-    }
-  }
+  private def plane[A: ClassTag](key: String, len: Int): Array[A] =
+    tl.get.computeIfAbsent(key + ":" + len, _ => new Array[A](len))
+      .asInstanceOf[Array[A]]
 
-  def bools(key: String, len: Int): Array[Boolean] = {
-    val m = tl.get
-    val k = key + ":" + len
-    m.get(k) match {
-      case a: Array[Boolean] => a
-      case _ => val a = new Array[Boolean](len); m.put(k, a); a
-    }
-  }
-
-  def chars(key: String, len: Int): Array[Char] = {
-    val m = tl.get
-    val k = key + ":" + len
-    m.get(k) match {
-      case a: Array[Char] => a
-      case _ => val a = new Array[Char](len); m.put(k, a); a
-    }
-  }
-
-  def ints(key: String, len: Int): Array[Int] = {
-    val m = tl.get
-    val k = key + ":" + len
-    m.get(k) match {
-      case a: Array[Int] => a
-      case _ => val a = new Array[Int](len); m.put(k, a); a
-    }
-  }
+  def bytes(key: String, len: Int): Array[Byte] = plane[Byte](key, len)
+  def bools(key: String, len: Int): Array[Boolean] = plane[Boolean](key, len)
+  def ints(key: String, len: Int): Array[Int] = plane[Int](key, len)
 
   /** A growable int scratch array (contents NOT cleared). */
   def intScratch(key: String, minLen: Int): Array[Int] = {

@@ -31,9 +31,8 @@ object Recognize {
 
   /** confHist: fixed 10-bucket glyph-confidence histogram
     * ([0.0,0.1) .. [0.9,1.0]) — accumulated inline, never a boxed
-    * per-glyph collection (the kernel is allocation-sensitive at 32
-    * threads). `text` is the layout-ordered page text (columns in reading
-    * order via LayoutSegment + MatchMaking). */
+    * per-glyph collection. `text` is the layout-ordered page text
+    * (columns in reading order via LayoutSegment + MatchMaking). */
   final case class PageResult(lines: Vector[TextLine], confHist: Array[Long],
                               text: String) {
     def glyphCount: Long = confHist.sum
@@ -70,11 +69,8 @@ object Recognize {
     val n = stored.px.length / (PageScale * PageScale)
     val logical = stored.downsample(PageScale, PlanePool.bytes("k.ug.ds", n))
     val bin = Otsu.binarizeInv(logical, PlanePool.bools("k.ug.bin", n))
-    detectOrientation(bin) match {
+    appliedRotation(detectOrientation(bin)) match {
       case 0 => stored
-      case 180 =>
-        System.err.println(s" Wrong rotation asked for 180")
-        stored
       case a =>
         stored.rotateCCW(a, PlanePool.bytes("k.ug.rot", stored.px.length))
     }
@@ -164,13 +160,19 @@ object Recognize {
   }
 
   /** Rotate by 0/90/270 only; a 180 request warns and returns the input
-    * unrotated — the reference's intentional quirk (pdf_parser.py:413-435,
-    * observed live on F2024007: "Wrong rotation asked for 180"). */
-  def rotate(b: Bin, deg: Int, out: Array[Boolean] = null): Bin = deg match {
-    case 0 | 90 | 270 => b.rotateCCW(deg, out)
+    * unrotated (see [[appliedRotation]]). */
+  def rotate(b: Bin, deg: Int, out: Array[Boolean] = null): Bin =
+    b.rotateCCW(appliedRotation(deg), out)
+
+  /** The rotation actually applied for a requested angle: 0/90/270 as
+    * asked, while a 180 request warns and applies none — the reference's
+    * intentional quirk (pdf_parser.py:413-435, observed live on F2024007:
+    * "Wrong rotation asked for 180"). Any other angle is rejected. */
+  private def appliedRotation(deg: Int): Int = deg match {
+    case 0 | 90 | 270 => deg
     case 180 =>
       System.err.println(s" Wrong rotation asked for 180")
-      b
+      0
     case d => throw new IllegalArgumentException(s"rotation $d")
   }
 

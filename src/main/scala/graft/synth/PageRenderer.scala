@@ -14,7 +14,7 @@ import graft.kernel.{CropConfig, GlyphFont}
   *
   * Pages are laid out in a 360x480 "logical" pixel space and rendered at
   * 2x (720x960) with seeded per-pixel noise; the kernel's
-  * resizeToHeight/downsample(2) brings them back to logical scale
+  * downsample(2) brings them back to logical scale
   * (mirrors the reference's resize-to-1500px step, pdf_parser.py:44-59).
   */
 object PageRenderer {

@@ -1,17 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the driver contract exactly as the harness does: SparkEntry.entry
   * smoke (rows > 0), one sampled query, and failure-path probes. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = graft.Bench.hostCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(graft.Bench.hostCpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // t1 smoke: flagship entry

@@ -60,6 +60,27 @@ class ImgSpec extends AnyFunSuite {
     assert(ConnectedComponents.label(b).size == 1)
   }
 
+  test("connected components: isolated dots at even coordinates, the " +
+       "worst case for the label count") {
+    // every dot starts its own label: ceil(w/2)*ceil(h/2) labels, which an
+    // odd side puts above w*h/4. A fresh thread starts with an empty
+    // PlanePool, so no scratch table grown by an earlier test hides a
+    // parent table sized too small.
+    for ((w, h, dots) <- Seq((301, 301, 22801), (721, 961, 173641))) {
+      val b = new Bin(w, h, Array.tabulate(w * h) { i =>
+        (i % w) % 2 == 0 && (i / w) % 2 == 0 })
+      var comps: IndexedSeq[Comp] = null
+      var failure: Throwable = null
+      val t = new Thread(() =>
+        try comps = ConnectedComponents.label(b)
+        catch { case e: Throwable => failure = e })
+      t.start(); t.join()
+      if (failure != null) throw failure
+      assert(comps.size == dots, s"${w}x$h")
+      assert(comps.forall(_.area == 1), s"${w}x$h")
+    }
+  }
+
   test("morphological open removes small features, keeps long lines") {
     val rows = Seq(
       "..........",
