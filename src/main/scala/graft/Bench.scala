@@ -12,6 +12,8 @@ import org.apache.spark.sql.SparkSession
   *    `repeats` times (default 1), reporting the per-query minimum;
   *  - `plans <outDir> <suffix> [name ...]`: writes each query's formatted
   *    physical plan to `<outDir>/<name>_<suffix>.txt`.
+  *  - `kernel [docs] [reps]`: the page kernel alone ([[kernel]]), no
+  *    Spark.
   * Query names are `SparkEntry.queries` keys; none given means all.
   * Env: `SPARK_GRAFT_SF_DIR` (query tables), `SPARK_GRAFT_CPUS` (query
   * session cores and the scaling levels; default: the host's cores),
@@ -286,12 +288,50 @@ object Bench {
         val spark = session(cpus)
         try plans(spark, sfDir, outDir, suffix, queries)
         finally spark.stop()
+      case "kernel" :: rest if rest.size <= 2 =>
+        val docs = rest.headOption.fold(100)(_.toInt)
+        val reps = rest.lift(1).fold(5)(_.toInt)
+        require(docs >= 1 && reps >= 1, "docs and reps must be at least 1")
+        println(kernel(docs, reps))
       case Nil => scalingAndQueries(sfDir, cpus, elapsed)
       case _ =>
         System.err.println("usage: Bench | Bench queries [repeats] [name ...] | " +
-          "Bench plans <outDir> <suffix> [name ...]")
+          "Bench plans <outDir> <suffix> [name ...] | Bench kernel [docs] [reps]")
         sys.exit(2)
     }
+  }
+
+  /** Per-page cost of the page kernel: `Recognize.recognizeStored` on
+    * this thread over the content pages of docs `0 until docs`
+    * (`CorpusGen.genDoc`, cover page dropped by
+    * `ExtractKernel.contentSpans`), every page decoded once up front. The
+    * pages are recognized `reps` times; the JSON line reports the fastest
+    * pass as ms per page, and a digest of every page's text and
+    * confidence histogram from the last pass, which changes with any
+    * change in the kernel's output. */
+  def kernel(docs: Int, reps: Int): String = {
+    import graft.functions.TextHashes
+    import graft.kernel.{CropConfig, ExtractKernel, Recognize, SyntheticStore}
+    val pages = (0 until docs).flatMap { i =>
+      val doc = CorpusGen.genDoc(i)._1
+      val crop = CropConfig.lookup(doc.doc_id)
+      ExtractKernel.contentSpans(doc).filter(_.kind == "media")
+        .map(s => (SyntheticStore.decode(s.media_ref), crop))
+    }
+    var bestNs = Long.MaxValue
+    var digest = 0L
+    for (_ <- 1 to reps) {
+      digest = 0L
+      val t0 = System.nanoTime()
+      for ((stored, crop) <- pages) {
+        val r = Recognize.recognizeStored(stored, crop)
+        digest = TextHashes.mix(digest ^
+          TextHashes.fnv64(r.text + "\u0000" + r.confHist.mkString(",")))
+      }
+      bestNs = math.min(bestNs, System.nanoTime() - t0)
+    }
+    val msPerPage = bestNs / 1e6 / pages.size
+    f"""{"metric":"kernel ms/page (min of $reps, one thread)","docs":$docs,"pages":${pages.size},"ms_per_page":$msPerPage%.4f,"digest":"${java.lang.Long.toHexString(digest)}"}"""
   }
 
   private def plans(spark: SparkSession, sfDir: String, outDir: String,

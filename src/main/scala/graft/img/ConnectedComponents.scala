@@ -1,109 +1,141 @@
 package graft.img
 
 import graft.core.BBox
-import scala.collection.mutable.ArrayBuffer
 
 /** A labeled connected component: tight bbox + pixel count. */
 case class Comp(bbox: BBox, area: Int)
 
-/** Two-pass 8-connectivity connected-component labeling with union-find.
-  * The classical stand-in for cv2.findContours-based region extraction
-  * (table_detection.py:120-126, :205-214) and the basis of line/word
-  * segmentation in the recognition kernel (north_star: "connected-component
-  * line/word segmentation").
+/** Run-length 8-connectivity connected-component labeling with
+  * union-find. The classical stand-in for cv2.findContours-based region
+  * extraction (table_detection.py:120-126, :205-214) and the basis of
+  * line/word segmentation in the recognition kernel (north_star:
+  * "connected-component line/word segmentation").
   *
-  * The int label plane is pooled per thread (PlanePool) and written for
-  * every pixel in raster order, so no pre-clear pass is needed.
+  * One pass over each row finds its ink runs `[x0, x1)`; a run's index in
+  * raster order is its label. Each run is united with every run of the
+  * previous row it 8-touches, and bbox and area are merged into the root
+  * at each union, so each pixel is read once and no label plane exists.
+  * The per-run scratch is pooled per thread (PlanePool) and grows with
+  * the runs a plane has, not with its pixels.
   */
 object ConnectedComponents {
 
-  /** Upper bound on the labels a w×h plane can need, plus the unused
-    * label 0. A pixel starts a new label only when none of its W, NW, N
-    * and NE neighbours is ink, and those are all of its 8-neighbours that
-    * precede it in raster order; so no two label-starting pixels are
-    * 8-adjacent, and each 2×2 block holds at most one of them. */
-  private def maxLabels(w: Int, h: Int): Int = ((w + 1) / 2) * ((h + 1) / 2) + 1
+  /** Ints per run in the run table: parent, then the bbox and area its
+    * component has as far as the scan has united it. */
+  private final val Stride = 6
+  private final val Parent = 0
+  private final val MinX = 1
+  private final val MaxX = 2
+  private final val MinY = 3
+  private final val MaxY = 4
+  private final val Area = 5
 
+  /** Components in `(y1, x1, x2, y2)` order, ties in raster order of
+    * their first pixel. */
   def label(src: Bin): IndexedSeq[Comp] = {
-    val w = src.w; val h = src.h
-    val lab = PlanePool.ints("cc.label", w * h)
-    var next = 1
-    val parent = PlanePool.intScratch("cc.parent", maxLabels(w, h))
+    val w = src.w; val h = src.h; val px = src.b
+    var runs = PlanePool.intScratch("cc.runs", Stride)
+    // x0, x1 of the previous row's runs and of this row's, at offsets
+    // `prev` and `cur` (a row holds at most ceil(w/2) runs)
+    val rowCap = 2 * ((w + 1) / 2)
+    val rows = PlanePool.intScratch("cc.rows", 2 * rowCap)
+    var prev = 0; var cur = rowCap
+    var prevFirst = 0; var prevN = 0 // the previous row's first run, run count
+    var n = 0
 
     @inline def find(x0: Int): Int = {
       var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      var p = runs(x * Stride)
+      while (p != x) { // path halving
+        val gp = runs(p * Stride)
+        runs(x * Stride) = gp
+        x = gp
+        p = runs(x * Stride)
+      }
       x
     }
+    // union by the smaller root, so a component's root is its first run
+    // and its MinY is the root's own row
     @inline def union(a: Int, b: Int): Unit = {
       val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) {
+        val root = math.min(ra, rb)
+        val r = root * Stride; val c = math.max(ra, rb) * Stride
+        runs(c + Parent) = root
+        if (runs(c + MinX) < runs(r + MinX)) runs(r + MinX) = runs(c + MinX)
+        if (runs(c + MaxX) > runs(r + MaxX)) runs(r + MaxX) = runs(c + MaxX)
+        if (runs(c + MaxY) > runs(r + MaxY)) runs(r + MaxY) = runs(c + MaxY)
+        runs(r + Area) += runs(c + Area)
+      }
     }
 
     var y = 0
     while (y < h) {
+      val base = y * w
+      val first = n
+      var j = 0 // first previous-row run that can still touch this row's next run
       var x = 0
       while (x < w) {
-        val idx = y * w + x
-        if (src.b(idx)) {
-          // neighbors already visited in raster order: W, NW, N, NE
-          var m = 0
-          @inline def consider(l: Int): Unit =
-            if (l != 0) { if (m == 0) m = l else union(m, l) }
-          if (x > 0) consider(lab(idx - 1))
-          if (y > 0) {
-            if (x > 0) consider(lab(idx - w - 1))
-            consider(lab(idx - w))
-            if (x < w - 1) consider(lab(idx - w + 1))
+        if (px(base + x)) {
+          val x0 = x
+          x += 1
+          while (x < w && px(base + x)) x += 1
+          if ((n + 1) * Stride > runs.length) {
+            val grown = PlanePool.intScratch("cc.runs", 2 * runs.length)
+            System.arraycopy(runs, 0, grown, 0, n * Stride)
+            runs = grown
           }
-          if (m == 0) {
-            parent(next) = next
-            m = next
-            next += 1
+          val o = n * Stride
+          runs(o + Parent) = n
+          runs(o + MinX) = x0; runs(o + MaxX) = x - 1
+          runs(o + MinY) = y; runs(o + MaxY) = y
+          runs(o + Area) = x - x0
+          val k = n - first
+          rows(cur + 2 * k) = x0; rows(cur + 2 * k + 1) = x
+          // a previous run [p0, p1) 8-touches [x0, x) iff p0 <= x && p1 >= x0
+          while (j < prevN && rows(prev + 2 * j + 1) < x0) j += 1
+          var i = j
+          while (i < prevN && rows(prev + 2 * i) <= x) {
+            union(n, prevFirst + i)
+            i += 1
           }
-          lab(idx) = m
-        } else lab(idx) = 0 // fused clear: every position written once
-        x += 1
-      }
-      y += 1
-    }
-
-    // second pass: resolve roots, accumulate bbox + area per root
-    val minX = PlanePool.intScratch("cc.minx", next)
-    val minY = PlanePool.intScratch("cc.miny", next)
-    val maxX = PlanePool.intScratch("cc.maxx", next)
-    val maxY = PlanePool.intScratch("cc.maxy", next)
-    val cnt = PlanePool.intScratch("cc.cnt", next)
-    java.util.Arrays.fill(minX, 0, next, Int.MaxValue)
-    java.util.Arrays.fill(minY, 0, next, Int.MaxValue)
-    java.util.Arrays.fill(maxX, 0, next, -1)
-    java.util.Arrays.fill(maxY, 0, next, -1)
-    java.util.Arrays.fill(cnt, 0, next, 0)
-    y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val l = lab(y * w + x)
-        if (l != 0) {
-          val r = find(l)
-          if (x < minX(r)) minX(r) = x
-          if (x > maxX(r)) maxX(r) = x
-          if (y < minY(r)) minY(r) = y
-          if (y > maxY(r)) maxY(r) = y
-          cnt(r) += 1
+          n += 1
         }
         x += 1
       }
+      val t = prev; prev = cur; cur = t
+      prevFirst = first; prevN = n - first
       y += 1
     }
-    val out = new ArrayBuffer[Comp]
-    var i = 1
-    while (i < next) {
-      if (cnt(i) > 0)
-        out += Comp(BBox(minX(i), minY(i), maxX(i) + 1, maxY(i) + 1), cnt(i))
+
+    var roots = 0
+    var i = 0
+    while (i < n) { if (runs(i * Stride) == i) roots += 1; i += 1 }
+    val out = new Array[Comp](roots)
+    roots = 0
+    i = 0
+    while (i < n) {
+      val o = i * Stride
+      if (runs(o + Parent) == i) {
+        out(roots) = Comp(BBox(runs(o + MinX), runs(o + MinY),
+          runs(o + MaxX) + 1, runs(o + MaxY) + 1), runs(o + Area))
+        roots += 1
+      }
       i += 1
     }
-    // deterministic order: raster by (y1, x1, x2, y2)
-    out.sortBy(c => (c.bbox.y1, c.bbox.x1, c.bbox.x2, c.bbox.y2)).toIndexedSeq
+    // roots come in raster order, so y1 never decreases and the stable
+    // TimSort runs near-linear
+    java.util.Arrays.sort(out, ByBox)
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+  }
+
+  private object ByBox extends java.util.Comparator[Comp] {
+    def compare(a: Comp, b: Comp): Int = {
+      val p = a.bbox; val q = b.bbox
+      if (p.y1 != q.y1) Integer.compare(p.y1, q.y1)
+      else if (p.x1 != q.x1) Integer.compare(p.x1, q.x1)
+      else if (p.x2 != q.x2) Integer.compare(p.x2, q.x2)
+      else Integer.compare(p.y2, q.y2)
+    }
   }
 }

@@ -51,7 +51,10 @@ object Deskew {
     if (n == 0) return 0
     val off = 2 * MaxSlope + 2
     val histLen = b.h + 2 * off
-    val hist = PlanePool.ints("deskew.hist", histLen)
+    // four interleaved histograms, hist(4 * row + j % 4): consecutive ink
+    // points mostly share a row, and one counter per row would serialize
+    // their increments
+    val hist = PlanePool.ints("deskew.hist", 4 * histLen)
     val dyCol = PlanePool.ints("deskew.dy", b.w)
     def score(s: Int): Long = {
       var x = 0
@@ -60,12 +63,16 @@ object Deskew {
       var j = 0
       while (j < n) {
         val p = pts(j)
-        hist((p >>> 16) - dyCol(p & 0xFFFF) + off) += 1
+        hist((((p >>> 16) - dyCol(p & 0xFFFF) + off) << 2) | (j & 3)) += 1
         j += 1
       }
       var sc = 0L
       var r = 0
-      while (r < histLen) { val c = hist(r); sc += c.toLong * c; r += 1 }
+      while (r < 4 * histLen) {
+        val c = hist(r) + hist(r + 1) + hist(r + 2) + hist(r + 3)
+        sc += c.toLong * c
+        r += 4
+      }
       sc
     }
     var best = 0

@@ -2,16 +2,21 @@ package graft.img
 
 import scala.reflect.ClassTag
 
-/** Per-thread exact-size plane buffers for the kernel hot path. A page
-  * needs several planes of a few hundred KB each; taking them from here
-  * instead of allocating them per page spares the JVM's zeroing of every
-  * new array and keeps them out of the young generation. Buffers are
-  * keyed by (site, length) so each call site reuses one buffer per
-  * thread; page geometries are fixed per crop config, so the pool stays
-  * bounded.
+/** Per-thread plane buffers for the kernel hot path. A page needs
+  * several planes of a few hundred KB each; taking them from here instead
+  * of allocating them per page spares the JVM's zeroing of every new
+  * array and keeps them out of the young generation.
   *
-  * Contract: a plane obtained here is valid until the same (key, length)
-  * is requested again on the same thread — callers must fully overwrite it
+  * Two kinds of buffer:
+  *  - exact-size planes (`bytes`/`bools`/`ints`), keyed by (site, length)
+  *    so each call site reuses one buffer per thread and page size; page
+  *    geometries are fixed per crop config, so the pool stays bounded;
+  *  - growable int scratch (`intScratch`), keyed by site alone and sized
+  *    by the largest request seen on the thread, so a site whose sizes
+  *    vary (the labeler's runs, deskew's ink points) keeps one buffer.
+  *
+  * Contract: a buffer obtained here is valid until the same key is
+  * requested again on the same thread — callers must fully overwrite it
   * (or clear it) before use.
   */
 object PlanePool {
@@ -27,7 +32,9 @@ object PlanePool {
   def bools(key: String, len: Int): Array[Boolean] = plane[Boolean](key, len)
   def ints(key: String, len: Int): Array[Int] = plane[Int](key, len)
 
-  /** A growable int scratch array (contents NOT cleared). */
+  /** A growable int scratch array of at least `minLen` ints. Contents are
+    * NOT cleared, and a grown array does not copy the old one: a caller
+    * that grows scratch it is still filling copies what it keeps. */
   def intScratch(key: String, minLen: Int): Array[Int] = {
     val m = tl.get
     m.get(key) match {

@@ -83,11 +83,19 @@ object GlyphFont {
     (bits << 8) | (b.w.toLong << 4) | b.h.toLong
   }
 
-  /** Reverse index: packed tight template → char. Templates are pairwise
-    * distinct (pinned by a unit test). */
-  private val byKey: scala.collection.immutable.LongMap[Char] =
-    scala.collection.immutable.LongMap(
-      templates.toSeq.map { case (c, b) => packKey(b) -> c }: _*)
+  /** Reverse index: packed tight template → char, as sorted keys with
+    * their chars in the same order, searched by [[byKey]]. Templates are
+    * pairwise distinct (pinned by a unit test). */
+  private val (keys, keyChars): (Array[Long], Array[Char]) = {
+    val sorted = templates.toArray.map { case (c, b) => packKey(b) -> c }.sortBy(_._1)
+    (sorted.map(_._1), sorted.map(_._2))
+  }
+
+  /** The char whose packed template is `k`, else char 0. */
+  private def byKey(k: Long): Char = {
+    val i = java.util.Arrays.binarySearch(keys, k)
+    if (i >= 0) keyChars(i) else 0.toChar
+  }
 
   /** A scanner speck 8-connected to a glyph merges into its component and
     * inflates the tight bbox by up to this many pixels per axis; the
@@ -151,7 +159,7 @@ object GlyphFont {
     * matching-pixel ratio with deterministic tie-break. */
   def classify(cell: Bin): (Char, Double) = {
     val k = packKey(cell)
-    val hit = if (k == -1L) 0.toChar else byKey.getOrElse(k, 0.toChar)
+    val hit = if (k == -1L) 0.toChar else byKey(k)
     if (hit != 0.toChar) (hit, 1.0)
     else speckTolerant(cell).getOrElse {
       var bestC = '?'
@@ -191,7 +199,7 @@ object GlyphFont {
         y += 1
       }
       val k = (bits << 8) | (bb.w.toLong << 4) | bb.h.toLong
-      val hit = byKey.getOrElse(k, 0.toChar)
+      val hit = byKey(k)
       if (hit != 0.toChar) return (1000000L << 16) | hit.toLong
     }
     val (c, conf) = classify(tightCrop(plane.crop(bb)))

@@ -101,6 +101,10 @@ object Recognize {
   /** Render scale of the synthetic corpus (pages arrive at 2x). */
   val PageScale = 2
 
+  /** A `Caption` is a thin (single-line) block starting within this many
+    * px below a Picture's bottom edge. */
+  val CaptionGapMax = 16
+
   /** Full-page layout inference (T7 with the complete reference taxonomy,
     * ocr_processor.py:78-97): like recognizeStored but WITHOUT the margin
     * crop, so the header/footer bands stay visible and are labeled
@@ -109,10 +113,6 @@ object Recognize {
     * live, joradp_parse.py:13-82). Returns (labeled boxes in upright page
     * coordinates in reading order: PageHeader, body blocks, PageFooter;
     * all recognized lines). */
-  /** A `Caption` is a thin (single-line) block starting within this many
-    * px below a Picture's bottom edge. */
-  val CaptionGapMax = 16
-
   def segmentPageFull(stored: Gray, crop: Crop): (Vector[graft.core.LayoutBox], Vector[TextLine]) = {
     import graft.core.LayoutBox
     val upright = uprightBin(stored)
@@ -176,11 +176,6 @@ object Recognize {
     case d => throw new IllegalArgumentException(s"rotation $d")
   }
 
-  /** Orientation detection — classical stand-in for tesseract OSD
-    * (ocr_processor.py:268-295). Aspect ratio narrows candidates (synthetic
-    * pages are portrait), then the candidate whose first text lines yield
-    * the most exact glyph-template hits wins. May return 180, which
-    * rotate() deliberately ignores. */
   /** Exact-hit RATIO at or above which the first candidate orientation is
     * accepted without scoring the alternative. A ratio, not a count:
     * upside-down dense text still exact-matches its 180-symmetric glyphs
@@ -191,6 +186,11 @@ object Recognize {
   /** Rows of the candidate-oriented page scored for orientation. */
   val OrientStrip = 120
 
+  /** Orientation detection — classical stand-in for tesseract OSD
+    * (ocr_processor.py:268-295). Aspect ratio narrows candidates (synthetic
+    * pages are portrait), then the candidate whose first text lines yield
+    * the most exact glyph-template hits wins. May return 180, which
+    * rotate() deliberately ignores. */
   def detectOrientation(bin: Bin): Int = {
     val candidates = if (bin.w < bin.h) Seq(0, 180) else Seq(90, 270)
     var best = candidates.head
@@ -258,6 +258,9 @@ object Recognize {
     * touching glyphs) stays graphics and is dropped. */
   private def splitBridged(b: Bin, c: Comp): Seq[Comp] = {
     val bb = c.bbox
+    // a side is never taller than its component, so a thin one (a rule or
+    // an underline) has no glyph-sized side: skip the O(w²·h) search
+    if (bb.h < GlyphFont.GlyphH - 2) return Nil
     def ink(x: Int): Int = (bb.y1 until bb.y2).count(y => b(x, y))
     // tight box and ink count of one side, if glyph-sized
     def side(x1: Int, x2: Int): Option[Comp] = {

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.core.{Doc, Span}
 import graft.kernel.{CropConfig, ExtractKernel, KernelStats, MediaStore, SyntheticStore}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ case class UnitOut(doc_id: String, spans: Seq[Span], stats: PartStats)
 /** The production extraction run — the Spark lifecycle equivalent of
   * joradp_parse.py (SURVEY §3.1):
   *
-  *   snapshot scan → anti-join on the snapshot's committed output →
+  *   snapshot scan → drop the docs in the snapshot's committed output →
   *   work units → round-robin exchange → kernel → groupByKey(doc_id)
   *   reassembly → write output, then lineage (the commit point).
   *
@@ -57,8 +57,8 @@ object ExtractJob {
   private[pipeline] val OutSchema = Encoders.product[OutRow].schema
 
   /** Split count of the first file scan in `ds`'s plan — the scan its rows
-    * stream from, since joins keep it on the left — read from the planned
-    * scan's file listing without running a job; 0 when there is none. */
+    * stream from — read from the planned scan's file listing without
+    * running a job; 0 when there is none. */
   private def scanSplits(ds: Dataset[_]): Int =
     ds.queryExecution.sparkPlan.collectFirst {
       case s: FileSourceScanExec => s.inputRDD.getNumPartitions
@@ -108,16 +108,17 @@ object ExtractJob {
   /** Full job: read the pinned snapshot, drop the docs already done for
     * it, extract, write output, then lineage. A doc is done when it sits
     * in a committed output run dir of this snapshot ([[reconcile]] returns
-    * them), so resume is a left-anti join on those dirs' doc_id column —
+    * them), so resume reads those dirs' doc_id column once, before the
+    * output write, and drops the ids it finds from the snapshot scan —
     * superseding the reference's max-filename watermark
     * (joradp_parse.py:101-114 — SURVEY §2.1 S7). With no committed run of
-    * the snapshot there is no join at all. Each run writes to its own
+    * the snapshot there is no such read. Each run writes to its own
     * `run=<id>` subdirectory. Its lineage rows are summed by the output
     * write itself (a [[LineageStats]] filled in the reassembly), and the
-    * docs already done are counted by an `Observation` on the anti-join's
-    * read of the committed doc_ids, so nothing is read back after the
-    * write: the driver writes the lineage file and the run is committed.
-    * Calling run() again after a kill processes only unfinished docs. */
+    * docs already done are the ids that read returned, so nothing is read
+    * back after the write: the lineage file is written from the summed
+    * rows and the run is committed. Calling run() again after a kill
+    * processes only unfinished docs. */
   def run(spark: SparkSession, inputPath: String, outPath: String,
           ckptDir: String, cfg: Config = Config(),
           worklist: Option[DataFrame] = None): RunSummary = {
@@ -130,20 +131,29 @@ object ExtractJob {
     // returns this snapshot's committed dirs — the docs already done
     val doneRuns = reconcile(spark, outPath, ckptDir, snapId)
 
+    // Both id lists below are collected (one job each) and matched as an
+    // InSet in the scan's filter. A broadcast join would hold a list in a
+    // hashed relation of one whole memory page (64 MB at an 8 GB heap)
+    // until Spark's cleaner reaps the broadcast after some later GC, so
+    // the heap a run leaves behind would depend on GC timing.
+    //
     // optional selective work-list (F2/J5: the reference's CSV-driven
-    // reprocessing, joradp_correct_add_missing_bboxes.py:179-192) — a
-    // semi-join so only listed docs are (re)processed
+    // reprocessing, joradp_correct_add_missing_bboxes.py:179-192): only
+    // listed docs are (re)processed
     val scoped = worklist match {
-      case Some(wl) => input.join(wl.select("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
+      case Some(wl) =>
+        input.filter(col("doc_id").isInCollection(wl.select("doc_id").as[String].collect()))
       case None => input
     }
-    val priorObs = new Observation()
+    // the docs already done: the doc_ids of the committed output. As in an
+    // anti-join, a null id matches nothing and a doc with one is kept
+    val done: Array[String] =
+      if (doneRuns.isEmpty) Array.empty
+      else spark.read.schema("doc_id STRING").parquet(doneRuns: _*).as[String].collect()
     val todo =
-      if (doneRuns.isEmpty) scoped
-      else scoped.join(
-        spark.read.schema("doc_id STRING").parquet(doneRuns: _*)
-          .observe(priorObs, count(lit(1)).as("docs")),
-        Seq("doc_id"), "left_anti").as[Doc]
+      if (done.isEmpty) scoped
+      else scoped.filter(col("doc_id").isNull ||
+        !col("doc_id").isInCollection(done.filter(_ != null)))
 
     val runId = s"${snapId}_${System.nanoTime()}"
     val runDir = s"$outPath/run=$runId"
@@ -151,14 +161,7 @@ object ExtractJob {
     spark.sparkContext.register(lineage)
     extract(spark, todo, cfg, Some(lineage))
       .write.mode(SaveMode.ErrorIfExists).parquet(runDir)
-    val alreadyDone =
-      if (doneRuns.isEmpty) 0L
-      else priorObs.get.get("docs") match {
-        case Some(n: Long) => n
-        // AQE drops the observed read from the plan once a join side
-        // proves empty; the lineage (repaired by reconcile) then counts
-        case _ => Checkpoint.doneTotal(spark, ckptDir, snapId)
-      }
+    val alreadyDone = done.length.toLong
     val thisRun = lineage.docs
     if (thisRun == 0L && doneRuns.nonEmpty) {
       // no-op resume: everything was already done, so this run's output

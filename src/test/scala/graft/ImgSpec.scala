@@ -62,23 +62,42 @@ class ImgSpec extends AnyFunSuite {
 
   test("connected components: isolated dots at even coordinates, the " +
        "worst case for the label count") {
-    // every dot starts its own label: ceil(w/2)*ceil(h/2) labels, which an
-    // odd side puts above w*h/4. A fresh thread starts with an empty
-    // PlanePool, so no scratch table grown by an earlier test hides a
-    // parent table sized too small.
+    // every dot is its own run and its own component:
+    // ceil(w/2)*ceil(h/2) of them, which an odd side puts above w*h/4
     for ((w, h, dots) <- Seq((301, 301, 22801), (721, 961, 173641))) {
       val b = new Bin(w, h, Array.tabulate(w * h) { i =>
         (i % w) % 2 == 0 && (i / w) % 2 == 0 })
-      var comps: IndexedSeq[Comp] = null
-      var failure: Throwable = null
-      val t = new Thread(() =>
-        try comps = ConnectedComponents.label(b)
-        catch { case e: Throwable => failure = e })
-      t.start(); t.join()
-      if (failure != null) throw failure
+      val comps = labelOnFreshThread(b)
       assert(comps.size == dots, s"${w}x$h")
       assert(comps.forall(_.area == 1), s"${w}x$h")
     }
+  }
+
+  test("connected components: vertical stripes, the worst case for the " +
+       "run count") {
+    // every even column inked: h*ceil(w/2) runs, each row's runs united
+    // with the row above into ceil(w/2) full-height components
+    for ((w, h) <- Seq((301, 301), (721, 961))) {
+      val b = new Bin(w, h, Array.tabulate(w * h)(i => (i % w) % 2 == 0))
+      val comps = labelOnFreshThread(b)
+      assert(comps.map(_.bbox) == (0 until w by 2).map(x => BBox(x, 0, x + 1, h)),
+        s"${w}x$h")
+      assert(comps.forall(_.area == h), s"${w}x$h")
+    }
+  }
+
+  /** Label `b` on a new thread. A fresh thread starts with an empty
+    * PlanePool, so no scratch grown by an earlier test hides a run table
+    * that grows wrongly from its first size. */
+  private def labelOnFreshThread(b: Bin): IndexedSeq[Comp] = {
+    var comps: IndexedSeq[Comp] = null
+    var failure: Throwable = null
+    val t = new Thread(() =>
+      try comps = ConnectedComponents.label(b)
+      catch { case e: Throwable => failure = e })
+    t.start(); t.join()
+    if (failure != null) throw failure
+    comps
   }
 
   test("morphological open removes small features, keeps long lines") {

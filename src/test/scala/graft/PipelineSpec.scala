@@ -116,8 +116,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // per run — a real job at 100 TB. The record of done docs is the
     // committed output itself, so pin the scans:
     //  - a first run scans no prior output (there is no anti-join);
-    //  - a resume scans the prior run dirs exactly once, in the anti-join
-    //    inside the output write, where the docs already done are counted;
+    //  - a resume scans the prior run dirs exactly once, in the read of
+    //    their doc_ids before the output write (the anti-join's build
+    //    side, matched as an InSet), which also counts the docs already
+    //    done; the output write then scans only the snapshot;
     //  - nothing is scanned after the output write: neither the run's own
     //    dir (its lineage comes from the write) nor the lineage table.
     val in = tmp("in-noscan"); val out = tmp("out-noscan"); val ck = tmp("ck-noscan")
@@ -181,12 +183,15 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
              r2.docsAlreadyDone == 4)
     }
     val priorScans = second.filter(_.exists(_.endsWith(s"/${prior.head}")))
-    assert(priorScans.size == 1 && priorScans.head.exists(isIn),
-      s"expected exactly 1 prior-output scan (the resume anti-join), " +
-      s"got $priorScans")
-    assert(second.filter(_.nonEmpty) == priorScans,
-      s"after the output write nothing may be scanned (not the run's own " +
-      s"dir, not the lineage table), got $second")
+    assert(priorScans.size == 1 && !priorScans.head.exists(isIn),
+      s"expected exactly 1 prior-output scan (the resume anti-join's " +
+      s"doc_id read), got $priorScans")
+    val write2 = second.filter(_.exists(isIn))
+    assert(write2.size == 1 && !write2.head.exists(isOut),
+      s"the output write must scan no prior output, got $write2")
+    assert(second.filter(_.nonEmpty) == priorScans ++ write2,
+      s"the doc_id read, then the output write; after it nothing may be " +
+      s"scanned (not the run's own dir, not the lineage table), got $second")
   }
 
   test("resume: killed-halfway run completes only the remainder") {
@@ -801,8 +806,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
     // first run: the output write's round-robin stage, reassembly stage
     // and write stage — its lineage comes from the write and the driver
-    // writes the file; a resume adds the broadcast of the committed
-    // output's doc_ids, which also counts the docs already done
+    // writes the file; a resume adds the read of the committed output's
+    // doc_ids, which also counts the docs already done
     assert((first, resume) == ((3, 4)), s"first run $first jobs, resume $resume")
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{BBox, Span}
-import graft.img.{Bin, ConnectedComponents, Gray, Otsu}
+import graft.img.{Bin, Comp, ConnectedComponents, Gray, Otsu}
 import graft.kernel.Clustering
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
@@ -81,6 +81,43 @@ object PropertySpec extends Properties("graft") {
       comps.map(_.area).sum == b.inkCount &&
       comps.forall(c => c.bbox.area >= c.area)
     }
+
+  /** Flood-fill oracle: one 8-connected fill per unvisited ink pixel in
+    * raster order, so the comps come in order of their first pixel, then
+    * stable-sorted by (y1, x1, x2, y2) as `label` documents. */
+  private def floodFill(b: Bin): Seq[Comp] = {
+    val seen = new Array[Boolean](b.w * b.h)
+    val out = Seq.newBuilder[Comp]
+    for (start <- 0 until b.w * b.h if b.b(start) && !seen(start)) {
+      var minX = b.w; var minY = b.h; var maxX = -1; var maxY = -1; var n = 0
+      val stack = scala.collection.mutable.Stack(start)
+      seen(start) = true
+      while (stack.nonEmpty) {
+        val i = stack.pop()
+        val x = i % b.w; val y = i / b.w
+        minX = minX.min(x); maxX = maxX.max(x)
+        minY = minY.min(y); maxY = maxY.max(y); n += 1
+        for (dy <- -1 to 1; dx <- -1 to 1) {
+          val nx = x + dx; val ny = y + dy
+          if (nx >= 0 && nx < b.w && ny >= 0 && ny < b.h) {
+            val j = ny * b.w + nx
+            if (b.b(j) && !seen(j)) { seen(j) = true; stack.push(j) }
+          }
+        }
+      }
+      out += Comp(BBox(minX, minY, maxX + 1, maxY + 1), n)
+    }
+    out.result().sortBy(c => (c.bbox.y1, c.bbox.x1, c.bbox.x2, c.bbox.y2))
+  }
+
+  private val ccPlaneGen = for {
+    w <- Gen.choose(1, 40); h <- Gen.choose(1, 40)
+    inkPct <- Gen.oneOf(15, 45, 70) // sparse, dense and merging ink
+    bits <- Gen.listOfN(w * h, Gen.choose(0, 99).map(_ < inkPct))
+  } yield new Bin(w, h, bits.toArray)
+
+  property("CC equals a flood-fill oracle: comps, bboxes, areas, order") =
+    forAll(ccPlaneGen) { b: Bin => ConnectedComponents.label(b) == floodFill(b) }
 
   property("Otsu binarizeInv marks exactly the below-threshold pixels") =
     forAll(Gen.nonEmptyListOf(Gen.choose(0, 255))) { (pxs: List[Int]) =>
